@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{PortableHashFunctions, TextHashFunctions}
+import graft.functions.GraftFunctions
 
 /** Near-duplicate detection pipelines over a `documents(doc_id, text)`
   * table — the brief's training-data dedup suite, built LSH-first so no
@@ -97,7 +97,7 @@ object Dedup {
     * exchange per projection width (the members consumer needs no sig,
     * so Catalyst planned a narrower copy whose map side re-ran the
     * text pass — the o22 sf0.1 plan carried 10+ planned instances of
-    * `minhashexpr(text)`, ≥2 of them executed). The checkpoint is a
+    * `minhash(text)`, ≥2 of them executed). The checkpoint is a
     * hard materialization barrier no optimizer rule can split, so the
     * signature pass runs EXACTLY once by construction. Signatures of
     * duplicate members are computed (not just reps') — that trade buys
@@ -168,7 +168,7 @@ object Dedup {
                      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     require(t <= 3, s"4-band/16-bit bucketing guarantees recall only for t <= 3, got $t")
     val proj = projected(docs0,
-      PortableHashFunctions.simhashPortable64(col("text")), "s")
+      GraftFunctions.simhashPortable64(col("text")), "s")
     val members = proj.select(col("gkey"), col("doc_id"))
     // rep frame materialized once (round 21): its consumers — the band
     // explode (census + salted join) and the multi filter — cloned the
@@ -225,7 +225,7 @@ object Dedup {
   : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     require(k % bandRows == 0, "k must be divisible by bandRows")
     val nBands = k / bandRows
-    val proj = projected(docs0, TextHashFunctions.minhash(col("text"), k, w), "sig")
+    val proj = projected(docs0, GraftFunctions.minhash(col("text"), k, w), "sig")
     val members = proj.select(col("gkey"), col("doc_id"))
     // materialized once — same clone hazard as simhashNearDup's reps
     // (round 21); ~300 B/rep residue (the k-long signature)
@@ -628,8 +628,8 @@ object Dedup {
         ceil(lit(threshold / (1.0 + threshold)) *
           (col("pna") + col("pnb")) - lit(eps)))
       .select(col("a"), col("b"))
-    val inter = graft.functions.SetKernelFunctions
-      .sortedIntersectSizeLong(col("sa"), col("sb")).cast("double")
+    val inter = GraftFunctions.sortedIntersectSizeLong(col("sa"), col("sb"))
+      .cast("double")
     val repPairs = cand
       .join(isets.select(col("doc_id").as("a"), col("iset").as("sa"), col("n").as("na")), "a")
       .join(isets.select(col("doc_id").as("b"), col("iset").as("sb"), col("n").as("nb")), "b")
@@ -735,7 +735,7 @@ object Dedup {
     // trim(regexp_replace(regexp_replace(lower(text), "[^a-z0-9 ]", " "),
     // " +", " ")) chain in TextHashSpec — one scan + one allocation
     // instead of a lower pass and two global-regex passes
-    val norm = graft.functions.TextHashFunctions.normalizeAlnum(col("text"))
+    val norm = GraftFunctions.normalizeAlnum(col("text"))
     val keyed = Spread(docs).select(col("doc_id"), md5(norm).as("norm_md5"))
     val w = Window.partitionBy(col("norm_md5"))
     keyed

@@ -298,7 +298,7 @@ object PipelineQueries {
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(graft.functions.BottomKSample.percentiles(
-            graft.functions.PortableHashFunctions.md5Hash64(
+            graft.functions.GraftFunctions.md5Hash64(
               concat(col("l_orderkey").cast("string"), lit("|"),
                 col("l_linenumber").cast("string"))),
             col("l_extendedprice"), k = 1024, ps = Seq(0.5, 0.9)).as("qs"))
@@ -320,7 +320,7 @@ object PipelineQueries {
         .agg(
           countDistinct(col("o_custkey")).as("exact_customers"),
           graft.functions.KmvSketch.approxDistinct(
-            graft.functions.PortableHashFunctions.md5Hash64(
+            graft.functions.GraftFunctions.md5Hash64(
               col("o_custkey").cast("string")), k = 256).as("approx_customers"))
         .orderBy("o_orderpriority")),
 

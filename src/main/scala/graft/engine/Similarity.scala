@@ -130,8 +130,8 @@ object Similarity {
     val qv = transform(VectorOps.asDouble(col("embedding")),
       x => round(x * quantScale))
     val sigBits = (0 until planes).map { p =>
-      when(graft.functions.VectorKernelFunctions
-        .dot(col("qv"), typedlit(srpPlane(p, dims))) > 0, lit(1L << p))
+      when(VectorOps.dot(col("qv"), typedlit(srpPlane(p, dims))) > 0,
+        lit(1L << p))
         .otherwise(lit(0L))
     }.reduce(_.bitwiseOR(_))
     Spread(emb).withColumn("qv", qv)

@@ -132,7 +132,7 @@ object SimilarityQueries {
       Multimodal.asMediaTable(documents(s, d))
         .filter(col("n_bytes") > 0)
         .select(col("media_id"),
-          posexplode(graft.functions.MediaKernelFunctions.frameLedger(
+          posexplode(graft.functions.GraftFunctions.frameLedger(
             col("media"), frameSize, step)))
         .select(col("media_id"), col("pos").as("frame_idx"),
           col("col.frame_len").as("frame_len"),
@@ -159,7 +159,7 @@ object SimilarityQueries {
         .filter(n > 0)
         .select(col("media_id"), col("n_bytes"),
           least(n, lit(target.toLong)).as("resized_len"),
-          graft.functions.MediaKernelFunctions.resizeMd5(col("media"), target)
+          graft.functions.GraftFunctions.resizeMd5(col("media"), target)
             .as("resized_md5"))
         .orderBy("media_id")
     }),

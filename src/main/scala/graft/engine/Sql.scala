@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (money as DECIMAL(18,4) — prefer for any SUM/AVG over price or
   * freight_value; exact by schema), `dim_customers`, `dim_products`,
   * `dim_time`. Functions: full Spark SQL builtins PLUS the registered
-  * graft kernels ([[graft.functions.GraftFunctions.injections]]):
+  * graft kernels ([[graft.functions.GraftFunctions.sqlFunctions]]):
   * `simhash64(text)`, `simhash_portable64(text)`,
   * `minhash(text[, k, shingleWidth])`, `doc_fingerprint(text[, k, w])`,
   * `dot_product(a, b)`, `sorted_intersect_size(a, b)`,

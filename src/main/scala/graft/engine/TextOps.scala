@@ -16,47 +16,21 @@ object TextOps {
   def tokens(text: Column): Column =
     filter(split(trim(text), "\\s+"), t => t =!= "")
 
-  /** w-token shingles as strings; a doc with ≤ w tokens is one shingle
-    * (mirrors [[graft.functions.TextHash.shingles]]).
-    * Oracle: `CASE WHEN len(t) <= w THEN [array_to_string(t,' ')]
-    * ELSE [array_to_string(list_slice(t,i,i+w-1),' ') FOR i IN range(1, len(t)-w+2)] END`.
-    *
-    * The `transform(array(toks), ts => …)` wrapper is a Column-level
-    * LET BINDING, not decoration: higher-order functions run interpreted
-    * (CodegenFallback), and an unbound `toks` expression referenced from
-    * inside the per-index lambda — `slice(toks, i, w)` — is RE-EVALUATED
-    * on every index, turning an O(T) shingling into O(T²) split+filter
-    * work per document (measured 7× on the o53 text pass: 3.4 s → 0.5 s
-    * at sf0.1). Binding `toks` to a lambda variable evaluates it once
-    * per row; the inner lambdas then read the bound array by reference.
-    */
-  def shingles(toks: Column, w: Int = 3): Column =
-    flatten(transform(array(toks), ts =>
-      when(size(ts) <= w, array(concat_ws(" ", ts)))
-        .otherwise(transform(
-          sequence(lit(1), size(ts) - (w - 1)),
-          i => concat_ws(" ", slice(ts, i, lit(w)))))))
-
-  /** Distinct shingle set (string identity — exact, no hash collisions).
-    * Round 21: one-pass codegen'd kernel — the split + interpreted-HOF +
-    * array_distinct chain below ([[shingleSetBuiltin]], kept for the
-    * byte-identity spec) ran CodegenFallback lambdas and allocated a
-    * String per step per shingle; [[graft.functions.TextKernels]] does
-    * one byte scan per row (TextKernelSpec locks equality).
+  /** Distinct shingle set (string identity — exact, no hash collisions),
+    * one codegen'd byte scan per row ([[graft.functions.TextKernels]];
+    * TextKernelSpec locks equality with the split + HOF + array_distinct
+    * chain it replaced).
     */
   def shingleSet(text: Column, w: Int = 3): Column =
-    graft.functions.TextHashFunctions.shingleSetKernel(text, w)
+    graft.functions.GraftFunctions.shingleSet(text, w)
 
-  /** The pre-round-21 Column chain for [[shingleSet]] — spec reference. */
-  def shingleSetBuiltin(text: Column, w: Int = 3): Column =
-    array_distinct(shingles(tokens(text), w))
-
-  /** All w-token shingles straight from raw text — the kernel form of
-    * `shingles(tokens(text), w)` for call sites that start from the text
-    * column (o60/o61/o62).
+  /** All w-token shingles straight from raw text — a doc with ≤ w tokens
+    * is one shingle (o60/o61/o62).
+    * Oracle: `CASE WHEN len(t) <= w THEN [array_to_string(t,' ')]
+    * ELSE [array_to_string(list_slice(t,i,i+w-1),' ') FOR i IN range(1, len(t)-w+2)] END`.
     */
   def shinglesText(text: Column, w: Int): Column =
-    graft.functions.TextHashFunctions.shinglesKernel(text, w)
+    graft.functions.GraftFunctions.shingles(text, w)
 
   /** Portable 32-bit hash of a string column: last 8 hex chars of md5 as
     * an unsigned int in a long.
@@ -72,16 +46,7 @@ object TextOps {
     * [CAST('0x'||substr(md5(x),25,8) AS BIGINT) FOR x IN s])), 1, 4), '-')`.
     */
   def fingerprint(text: Column): Column =
-    // round 21: codegen'd one-pass kernel (TextKernels.fingerprint); the
-    // per-shingle builtin md5 + conv + interpreted transform chain is
-    // kept below as the spec reference
-    graft.functions.TextHashFunctions.portableFingerprint(text)
-
-  /** The pre-round-21 Column chain for [[fingerprint]] — spec reference. */
-  def fingerprintBuiltin(text: Column): Column =
-    array_join(
-      slice(array_sort(array_distinct(
-        transform(shingles(tokens(text)), hash32(_)))), 1, 4), "-")
+    graft.functions.GraftFunctions.portableFingerprint(text)
 
   /** Exact Jaccard similarity of two pre-distinct string arrays, as the
     * double `|A∩B| / (|A|+|B|-|A∩B|)` — the operand order the oracle

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
 object TextQueries {
   import Tables._
 
-  private val stopwords = Seq("the", "a", "of", "and", "to", "in")
-  private val stopSqlList = stopwords.map(w => s"'$w'").mkString("(", ",", ")")
+  private val stopSqlList =
+    graft.functions.TextKernels.Stopwords.map(w => s"'$w'").mkString("(", ",", ")")
 
   private def toks = TextOps.tokens(col("text"))
 
@@ -42,7 +42,7 @@ object TextQueries {
       // struct is built once per row (CSE inside the projection); ratio
       // and label reproduce the old double arithmetic exactly — the
       // label reads the UNROUNDED ratio, as before.
-      val q = graft.functions.TextHashFunctions.qualityStats(col("text"), stopwords)
+      val q = graft.functions.GraftFunctions.qualityStats(col("text"))
       val nTok = q.getField("n_tokens")
       val stopRatio = q.getField("n_stop").cast("double") / nTok.cast("double")
       // gated spread (shared [[Spread]] probe): the regex-heavy scoring
@@ -422,7 +422,7 @@ object TextQueries {
       // round 21 continuation: same stopword-ratio arithmetic, fed by the
       // one-pass o25 byte kernel instead of tokenize + interpreted HOF
       // filter (two passes; TextKernelSpec locks the counter equality)
-      val q = graft.functions.TextHashFunctions.qualityStats(col("text"), stopwords)
+      val q = graft.functions.GraftFunctions.qualityStats(col("text"))
       val enRatio = q.getField("n_stop").cast("double") /
         q.getField("n_tokens").cast("double")
       documents(s, d)
@@ -573,7 +573,7 @@ object TextQueries {
       // drops the row.
       documents(s, d)
         .select(col("doc_id"),
-          posexplode(graft.functions.TextHashFunctions.chunkLedger(
+          posexplode(graft.functions.GraftFunctions.chunkLedger(
             col("text"), size32, stride)))
         .select(col("doc_id"),
           col("pos").cast("long").as("chunk_id"),

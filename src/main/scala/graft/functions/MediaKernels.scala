@@ -1,12 +1,9 @@
 package graft.functions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass byte kernels for the multimodal ledger queries (round 21
@@ -111,42 +108,4 @@ object MediaKernels {
       md5Hex(md, hx, 2 * target)
     }
   }
-}
-
-/** x08: `array<struct<frame_len: long, frame_md5: string>>`, one struct
-  * per strided frame, computed in one codegen'd pass over the payload.
-  */
-case class FrameLedgerExpr(child: Expression, frameSize: Int, step: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("frame_len", LongType, nullable = false),
-      StructField("frame_md5", StringType, nullable = false))),
-    containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    MediaKernels.frameLedger(input.asInstanceOf[Array[Byte]], frameSize, step)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MediaKernels.frameLedger($c, $frameSize, $step)")
-  override protected def withNewChildInternal(newChild: Expression): FrameLedgerExpr =
-    copy(child = newChild)
-}
-
-/** x09: the resized payload's md5, one codegen'd pass over the payload. */
-case class ResizeMd5Expr(child: Expression, target: Int) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    MediaKernels.resizeMd5(input.asInstanceOf[Array[Byte]], target)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MediaKernels.resizeMd5($c, $target)")
-  override protected def withNewChildInternal(newChild: Expression): ResizeMd5Expr =
-    copy(child = newChild)
-}
-
-object MediaKernelFunctions {
-  import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
-
-  def frameLedger(c: Column, frameSize: Int, step: Int): Column =
-    column(FrameLedgerExpr(expression(c), frameSize, step))
-  def resizeMd5(c: Column, target: Int): Column =
-    column(ResizeMd5Expr(expression(c), target))
 }

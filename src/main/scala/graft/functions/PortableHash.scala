@@ -32,6 +32,9 @@ object PortableHash {
     out
   }
 
+  /** [[md5Hash64]] of a SQL string, decoded to a Java String first. */
+  def md5Hash64(s: UTF8String): Long = md5Hash64(s.toString)
+
   /** 64-bit SimHash over whitespace tokens with the portable token hash:
     * per bit, majority vote of token-hash bits (Charikar's scheme, same
     * shape as [[TextHash.simhash64]]). Tokenization parity with the SQL

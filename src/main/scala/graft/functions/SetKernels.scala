@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Exact set-intersection size of two ASCENDING-sorted string arrays via
   * a linear merge — the verify kernel for the exact-Jaccard dedup joins
@@ -56,40 +52,4 @@ object SetKernels {
     }
     n
   }
-}
-
-/** Codegen'd `sorted_intersect_size(array<string>, array<string>)`. */
-case class SortedIntersectSizeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SetKernels.sortedIntersectSize(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SetKernels.sortedIntersectSize($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectSizeExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Codegen'd `sorted_intersect_size(array<long>, array<long>)`. */
-case class SortedLongIntersectSizeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SetKernels.sortedIntersectSizeLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SetKernels.sortedIntersectSizeLong($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedLongIntersectSizeExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-object SetKernelFunctions {
-  import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
-
-  def sortedIntersectSize(a: Column, b: Column): Column =
-    column(SortedIntersectSizeExpr(expression(a), expression(b)))
-
-  def sortedIntersectSizeLong(a: Column, b: Column): Column =
-    column(SortedLongIntersectSizeExpr(expression(a), expression(b)))
 }

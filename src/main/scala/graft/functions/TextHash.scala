@@ -4,8 +4,8 @@ import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Deterministic 64-bit text hashing kernels used by the dedup suite's
-  * custom Catalyst expressions ([[SimHash64Expr]], [[MinHashExpr]]).
+/** Deterministic 64-bit text hashing kernels used by the dedup suite
+  * (as Columns via [[GraftFunctions.simhash64]], [[GraftFunctions.minhash]]).
   *
   * Top-level object ⇒ Scala emits static forwarders, so generated Java
   * (whole-stage codegen) can call `graft.functions.TextHash.simhash64(s)`

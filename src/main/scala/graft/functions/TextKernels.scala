@@ -26,7 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
 object TextKernels {
 
   /** All w-token shingles of `text`, in position order — byte-equal to
-    * `TextOps.shingles(TextOps.tokens(text), w)`.
+    * the split + higher-order-function shingle chain (the reference in
+    * TextKernelSpec).
     */
   def shingles(text: UTF8String, w: Int): ArrayData = {
     val b = text.getBytes
@@ -42,8 +43,7 @@ object TextKernels {
   }
 
   /** Distinct w-token shingles in first-occurrence order — byte-equal to
-    * `array_distinct(TextOps.shingles(TextOps.tokens(text), w))`
-    * (= `TextOps.shingleSet`).
+    * `array_distinct` of that chain (= `TextOps.shingleSet`).
     */
   def shingleSet(text: UTF8String, w: Int): ArrayData = {
     val b = text.getBytes
@@ -149,6 +149,16 @@ object TextKernels {
   @inline private def isAsciiDigit(b: Byte): Boolean = b >= '0' && b <= '9'
   @inline private def isRegexWs(b: Byte): Boolean =
     b == 0x20 || (b >= 0x09 && b <= 0x0d)
+
+  /** The one stopword set of the o25/o28 counters; the oracle SQL's
+    * `IN (...)` list is rendered from it too.
+    */
+  val Stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in")
+  private val stopBytes: Array[Array[Byte]] =
+    Stopwords.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
+
+  /** [[qualityStats]] over [[Stopwords]] — the kernel the queries call. */
+  def qualityStats(text: UTF8String): InternalRow = qualityStats(text, stopBytes)
 
   /** The o25 per-doc quality counters in ONE byte pass:
     * `[n_tokens, n_bpeish, n_punct, n_stop]` — value-equal to

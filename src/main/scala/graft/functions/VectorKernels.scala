@@ -1,18 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native dot-product kernel: one tight JVM loop instead of a
   * `zip_with` + `aggregate` higher-order tree (HOF lambdas are evaluated
   * by the expression interpreter PER ELEMENT — the dominant cost in the
   * similarity pipelines). The loop accumulates left-to-right exactly like
   * the sequential HOF fold, so results are bit-identical to
-  * [[VectorOps.dotHof]] (asserted in VectorOpsSpec) and to the DuckDB
-  * oracle.
+  * `aggregate(zip_with(a, b, _ * _), 0.0, _ + _)` (asserted in
+  * VectorOpsSpec) and to the DuckDB oracle.
   */
 object VectorKernels {
   def dot(a: ArrayData, b: ArrayData): Double = {
@@ -25,32 +21,4 @@ object VectorKernels {
     }
     acc
   }
-}
-
-/** Codegen'd `dot(array<double>, array<double>)` expression. Declares
-  * its input types so the analyzer inserts implicit casts — a raw
-  * `array<float>`/`array<int>` argument (e.g. the embeddings column via
-  * the SQL-registered `dot_product`) is widened to `array<double>`
-  * instead of mis-reading element storage at the wrong width.
-  */
-case class DotProductExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  // no type annotation: AbstractDataType is private[sql]; inference
-  // still satisfies the ExpectsInputTypes override
-  override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorKernels.dot($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProductExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-object VectorKernelFunctions {
-  import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
-
-  def dot(a: Column, b: Column): Column =
-    column(DotProductExpr(expression(a), expression(b)))
 }

@@ -20,16 +20,9 @@ object VectorOps {
   def asDouble(v: Column): Column = v.cast("array<double>")
 
   /** Sequential left-fold dot product — the native codegen'd kernel
-    * ([[DotProductExpr]]); callers must pass array<double> sides.
+    * ([[GraftFunctions.dot]]).
     */
-  def dot(a: Column, b: Column): Column = VectorKernelFunctions.dot(a, b)
-
-  /** Higher-order-function twin of [[dot]] — kept as the executable
-    * parity spec for the kernel (same fold order ⇒ same bits; asserted
-    * in VectorOpsSpec).
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
+  def dot(a: Column, b: Column): Column = GraftFunctions.dot(a, b)
 
   def normSq(a: Column): Column = dot(a, a)
 

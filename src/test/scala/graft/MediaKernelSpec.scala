@@ -41,7 +41,7 @@ class MediaKernelSpec extends AnyFunSuite {
           md5(encode(hex(col("media").substr((i * step + 1).cast("int"), lit(frameSize))),
             "UTF-8")).as("frame_md5")))
       val both = df.select(
-        graft.functions.MediaKernelFunctions.frameLedger(col("media"), frameSize, step)
+        graft.functions.GraftFunctions.frameLedger(col("media"), frameSize, step)
           .cast(ledgerType).as("k"),
         chain.cast(ledgerType).as("c"))
       val bad = both.filter(not(col("k") <=> col("c"))).collect()
@@ -65,7 +65,7 @@ class MediaKernelSpec extends AnyFunSuite {
     val chain = md5(encode(
       when(n <= target, hex(col("media"))).otherwise(sampledHex), "UTF-8"))
     val both = df.select(
-      graft.functions.MediaKernelFunctions.resizeMd5(col("media"), target).as("k"),
+      graft.functions.GraftFunctions.resizeMd5(col("media"), target).as("k"),
       chain.as("c"))
     val bad = both.filter(not(col("k") <=> col("c"))).collect()
     assert(bad.isEmpty, s"resizeMd5 drift: ${bad.take(3).mkString("; ")}")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.SetKernelFunctions
+import graft.functions.GraftFunctions
 
 /** The sorted-merge intersection kernels must agree exactly with
   * `array_intersect` on pre-sorted distinct arrays — they are the verify
@@ -22,7 +22,7 @@ class SetKernelsSpec extends AnyFunSuite {
         sequence(lit(1), (pmod(col("id") * 11 + 5, lit(40)) + lit(1)).cast("int")),
         i => concat(lit("s"), pmod(i * (col("id") + 5), lit(50)))))).as("b"))
     val bad = df.filter(
-      SetKernelFunctions.sortedIntersectSize(col("a"), col("b")) =!=
+      GraftFunctions.sortedIntersectSize(col("a"), col("b")) =!=
         size(array_intersect(col("a"), col("b"))).cast("long")).count()
     assert(bad === 0L)
   }
@@ -37,7 +37,7 @@ class SetKernelsSpec extends AnyFunSuite {
         sequence(lit(1), (pmod(col("id") * 11 + 5, lit(40)) + lit(1)).cast("int")),
         i => pmod(i * (col("id") + 5), lit(60))))).as("b"))
     val bad = df.filter(
-      SetKernelFunctions.sortedIntersectSizeLong(col("a"), col("b")) =!=
+      GraftFunctions.sortedIntersectSizeLong(col("a"), col("b")) =!=
         size(array_intersect(col("a"), col("b"))).cast("long")).count()
     assert(bad === 0L)
   }
@@ -52,7 +52,7 @@ class SetKernelsSpec extends AnyFunSuite {
       (Seq(1L, 5L, 9L, 12L), Seq(5L, 12L, 40L), 2L)
     ).toDF("a", "b", "want")
     val bad = rows.filter(
-      SetKernelFunctions.sortedIntersectSizeLong(col("a"), col("b")) =!= col("want")).count()
+      GraftFunctions.sortedIntersectSizeLong(col("a"), col("b")) =!= col("want")).count()
     assert(bad === 0L)
   }
 }

@@ -28,7 +28,7 @@ class SketchSpec extends AnyFunSuite {
   private def sampledQs(df: org.apache.spark.sql.DataFrame, k: Int,
                         ps: Seq[Double]): Seq[Double] =
     df.agg(graft.functions.BottomKSample.percentiles(
-        graft.functions.PortableHashFunctions.md5Hash64(col("id").cast("string")),
+        graft.functions.GraftFunctions.md5Hash64(col("id").cast("string")),
         col("v"), k, ps).as("qs"))
       .select(col("qs")).as[Seq[Double]].collect()(0)
 

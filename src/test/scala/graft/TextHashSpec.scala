@@ -86,7 +86,7 @@ class TextHashSpec extends AnyFunSuite {
       .select(col("text"))
     val both = corpus.unionByName(tricky)
       .select(
-        graft.functions.TextHashFunctions.normalizeAlnum(col("text")).as("kernel"),
+        graft.functions.GraftFunctions.normalizeAlnum(col("text")).as("kernel"),
         trim(regexp_replace(regexp_replace(lower(col("text")),
           "[^a-z0-9 ]", " "), " +", " ")).as("chain"))
     val bad = both.filter(not(col("kernel") <=> col("chain"))).collect()

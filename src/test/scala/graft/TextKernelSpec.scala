@@ -1,8 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.functions.{PortableHash, TextHash}
+import graft.engine.TextOps
+import graft.functions.{GraftFunctions, PortableHash, TextHash}
 
 /** Round-21 kernel equivalence lock: the byte-level tokenizer/shingler
   * rewrites (TextHash.{minhash,simhash64,bottomK}, PortableHash.simhash64,
@@ -15,6 +18,35 @@ import graft.functions.{PortableHash, TextHash}
 class TextKernelSpec extends AnyFunSuite {
 
   private def u(s: String) = UTF8String.fromString(s)
+
+  /** The pre-round-21 HOF shingle chain: w-token shingles as strings; a
+    * doc with ≤ w tokens is one shingle.
+    *
+    * The `transform(array(toks), ts => …)` wrapper is a Column-level
+    * LET BINDING, not decoration: higher-order functions run interpreted
+    * (CodegenFallback), and an unbound `toks` expression referenced from
+    * inside the per-index lambda — `slice(toks, i, w)` — is RE-EVALUATED
+    * on every index, turning an O(T) shingling into O(T²) split+filter
+    * work per document. Binding `toks` to a lambda variable evaluates it
+    * once per row; the inner lambdas then read the bound array by
+    * reference.
+    */
+  private def shingles(toks: Column, w: Int = 3): Column =
+    flatten(transform(array(toks), ts =>
+      when(size(ts) <= w, array(concat_ws(" ", ts)))
+        .otherwise(transform(
+          sequence(lit(1), size(ts) - (w - 1)),
+          i => concat_ws(" ", slice(ts, i, lit(w)))))))
+
+  /** The pre-round-21 Column chain for `TextOps.shingleSet`. */
+  private def shingleSetBuiltin(text: Column, w: Int = 3): Column =
+    array_distinct(shingles(TextOps.tokens(text), w))
+
+  /** The pre-round-21 Column chain for `TextOps.fingerprint`. */
+  private def fingerprintBuiltin(text: Column): Column =
+    array_join(
+      slice(array_sort(array_distinct(
+        transform(shingles(TextOps.tokens(text)), TextOps.hash32(_)))), 1, 4), "-")
 
   /** Whitespace-and-token-boundary adversaries: control bytes at the ends
     * (where Java trim and SQL trim DISAGREE), interior control bytes,
@@ -124,16 +156,16 @@ class TextKernelSpec extends AnyFunSuite {
     val df = (adversarial.toDF("text")
       .unionByName(spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select(col("text"))))
-    def chainShingles(w: Int) = TextOps.shingles(TextOps.tokens(col("text")), w)
+    def chainShingles(w: Int) = shingles(TextOps.tokens(col("text")), w)
     val both = df.select(
       TextOps.shinglesText(col("text"), 2).as("k2"), chainShingles(2).as("c2"),
       TextOps.shinglesText(col("text"), 4).as("k4"), chainShingles(4).as("c4"),
       TextOps.shingleSet(col("text"), 3).as("ks3"),
-      TextOps.shingleSetBuiltin(col("text"), 3).as("cs3"),
+      shingleSetBuiltin(col("text"), 3).as("cs3"),
       TextOps.shingleSet(col("text"), 5).as("ks5"),
-      TextOps.shingleSetBuiltin(col("text"), 5).as("cs5"),
+      shingleSetBuiltin(col("text"), 5).as("cs5"),
       TextOps.fingerprint(col("text")).as("kf"),
-      TextOps.fingerprintBuiltin(col("text")).as("cf"))
+      fingerprintBuiltin(col("text")).as("cf"))
     val bad = both.filter(
       not(col("k2") <=> col("c2")) || not(col("k4") <=> col("c4")) ||
         not(col("ks3") <=> col("cs3")) || not(col("ks5") <=> col("cs5")) ||
@@ -163,7 +195,7 @@ class TextKernelSpec extends AnyFunSuite {
     }
     for ((w, stride) <- Seq((32, 24), (5, 3), (3, 7))) {
       val both = df.select(
-        graft.functions.TextHashFunctions.chunkLedger(col("text"), w, stride)
+        GraftFunctions.chunkLedger(col("text"), w, stride)
           .cast(ledgerType).as("k"),
         chain(w, stride).cast(ledgerType).as("c"),
         col("text"))
@@ -197,7 +229,7 @@ class TextKernelSpec extends AnyFunSuite {
         .as("n_punct"),
       size(filter(toks, t => t.isin(stop: _*))).cast("long").as("n_stop"))
     val both = df.select(
-      graft.functions.TextHashFunctions.qualityStats(col("text"), stop).as("k"),
+      GraftFunctions.qualityStats(col("text")).as("k"),
       chain.as("c"), col("text"))
     val bad = both.filter(not(col("k") <=> col("c"))).collect()
     assert(bad.isEmpty, s"qualityStats drift on: ${bad.take(3).mkString("; ")}")

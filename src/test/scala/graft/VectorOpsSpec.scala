@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{aggregate, col, lit, zip_with}
 import graft.functions.VectorOps
 
 class VectorOpsSpec extends AnyFunSuite {
@@ -11,6 +12,12 @@ class VectorOpsSpec extends AnyFunSuite {
   private def one(c: org.apache.spark.sql.Column): Double =
     Seq((Seq(1.0f, 2.0f, 2.0f), Seq(2.0f, 1.0f, 2.0f)))
       .toDF("a", "b").select(c.as("v")).as[Double].collect()(0)
+
+  /** Higher-order-function twin of `VectorOps.dot`: the executable parity
+    * spec for the kernel — same fold order, same bits.
+    */
+  private def dotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
   test("cosine: identical vectors -> 1.0") {
     val v = Seq((Seq(3.0f, 4.0f), Seq(3.0f, 4.0f))).toDF("a", "b")
@@ -38,7 +45,7 @@ class VectorOpsSpec extends AnyFunSuite {
     val df = vecs.toDF("a", "b")
     val both = df.select(
       VectorOps.dot(VectorOps.asDouble(col("a")), VectorOps.asDouble(col("b"))).as("k"),
-      VectorOps.dotHof(VectorOps.asDouble(col("a")), VectorOps.asDouble(col("b"))).as("h"))
+      dotHof(VectorOps.asDouble(col("a")), VectorOps.asDouble(col("b"))).as("h"))
       .collect()
     assert(both.forall(r => r.getDouble(0) == r.getDouble(1)),
       "kernel and HOF fold must agree to the last bit")
