@@ -259,50 +259,13 @@ object Bench {
   def outPath(env: Map[String, String]): String =
     env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
 
-  /** o31's glob scan makes FileStreamSink.hasMetadata probe the glob as
-    * a LITERAL path; when the data dir is cwd-relative the caught
-    * FileNotFoundException is WARN-logged with a full stack trace —
-    * several times per bench (min-of-two reruns) — and reads as an o31
-    * failure to anyone triaging the log, though the read itself
-    * proceeds. Pin that one logger to ERROR after setLogLevel (which
-    * (re)sets the root level) so run logs carry zero fake traces.
-    */
-  def silenceGlobProbeWarn(): Unit = {
-    import org.apache.logging.log4j.Level
-    import org.apache.logging.log4j.core.config.Configurator
-    Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink", Level.ERROR)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val cpusN = cpus.toInt
+    val cpusN = Session.cpus
     // effective norm for this host: the committed norm was measured at
     // 32-way parallelism over fixed total work, so time ∝ 32/cpus
     val probeNorm = CalibrationNormSec * 32.0 / cpusN
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ephemeral checkpoints (deleted in finally): checksum sidecar files
-      // add nothing and their absence floods WARN "No checksum file found"
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // long query stream in one JVM: ContextCleaner only frees
-      // broadcast/shuffle/checkpoint blocks after a driver GC notices
-      // they're unreachable, and its safety-net GC fires every 30 MIN by
-      // default — a 130-query bench accumulates every prior query's
-      // blocks and the big late joins pay for the squeezed execution
-      // memory in spills (measured: o57 45 s solo vs 106 s in-stream).
-      // 2 min mirrors what any production long-session deployment sets.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "2min"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    silenceGlobProbeWarn()
+    val spark = Session.local(cpusN)
 
     def materialize(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -490,16 +453,10 @@ object Bench {
   */
 object BenchCalibrate {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.calibrateOnce(spark, cpus.toInt) // untimed codegen warm-up
-    val samples = (1 to 5).map(_ => Bench.calibrateOnce(spark, cpus.toInt))
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
+    Bench.calibrateOnce(spark, cpus) // untimed codegen warm-up
+    val samples = (1 to 5).map(_ => Bench.calibrateOnce(spark, cpus))
     spark.stop()
     println(s"""{"cpus":$cpus,"probe_rows":${Bench.ProbeRows},"samples":${samples.map(s => f"$s%.3f").mkString("[", ",", "]")}}""")
   }

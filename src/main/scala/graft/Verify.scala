@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Extra args
@@ -10,27 +9,7 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ephemeral checkpoints (deleted in finally): checksum sidecar files
-      // add nothing and their absence floods WARN "No checksum file found"
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // same rationale as Bench: a 143-query stream in one JVM only
-      // frees broadcast/shuffle blocks after a driver GC notices them,
-      // and the default 30-MIN safety net lets them squeeze execution
-      // memory until a big late query dies of UNABLE_TO_ACQUIRE_MEMORY
-      // (o70 at sf10, round 19 — the first sweep-killing incidence).
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "2min"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // zero fake o31 FileNotFoundException traces in sweep logs (see scaladoc)
-    Bench.silenceGlobProbeWarn()
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

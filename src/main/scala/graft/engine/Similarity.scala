@@ -314,10 +314,11 @@ object Similarity {
     * are CodegenFallback). Every term is an exact integer-valued double
     * (quantized shifted inputs, |d| < 2^53), so the expanded sum is
     * BIT-IDENTICAL to the naive form — same argmin, same oracle hash.
-    * Measured on the blocked near-dup probe (graft.BlockScale, 200k
-    * vectors): at k=80 the naive assignment dominated at 39.0 s total;
-    * expanded, the same probe runs 13.3 s — and scaled k=80 now beats
-    * rehearsal k=8 (17.6 s), which is the capacity-dial contract.
+    * Measured on the blocked near-dup probe (200k vectors; SCALE.md,
+    * "The capacity dial, measured"): at k=80 the naive assignment
+    * dominated at 39.0 s total; expanded, the same probe runs 13.3 s —
+    * and scaled k=80 now beats rehearsal k=8 (17.6 s), which is the
+    * capacity-dial contract.
     */
   private def dist2(vn2: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column,
                     cn2: org.apache.spark.sql.Column, c: org.apache.spark.sql.Column) =
@@ -651,7 +652,7 @@ object Similarity {
              m: Int = 8, ksub: Int = 16, iterations: Int = 2,
              sampleMod: Int = 10, quantScale: Int = 1000): DataFrame = {
     // The rerank budget c is THE recall dial, and it must scale with the
-    // corpus: RecallCurve (r17, committed in SCALE.md) measured recall@5
+    // corpus: SCALE.md ("PQ recall dial, measured", r17) records recall@5
     // at FIXED c falling as the corpus grows (c=100: 0.64 → 0.44 for
     // 2k → 20k vectors) with the curve climbing in c without plateau —
     // i.e. the dial is c ∝ N, not a constant. Default c < 0 therefore

@@ -96,7 +96,7 @@ object SimilarityQueries {
     // top-100 ADC candidates (c=100 measured recall@5 0.86 on the
     // pseudo-random corpus — PQ's adversarial case; c is the standard
     // recall dial and the rerank stays ≤ c rows per query). The measured
-    // c→recall curve (graft.RecallCurve; SCALE.md round 17) climbs
+    // c→recall curve (SCALE.md, "PQ recall dial, measured") climbs
     // steadily without plateauing — 0.50/0.64/0.74/0.88 at c=50/100/200/
     // 400 on the 2k-vector sf0.1 corpus, 0.32/0.44/0.54/0.64 on 20k at
     // sf1 — so recall here is candidate-budget-bound (isotropic vectors:

@@ -3,16 +3,18 @@ package graft.engine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation for hot keys: salt the skewed (large) side into
-  * `salts` sub-keys and explode the small side across all salt values,
-  * so one hot key's rows spread over `salts` reducers instead of one.
+/** Skew mitigation for a hot GROUP BY key: salt the rows into `salts`
+  * sub-keys so one hot key's rows spread over `salts` reducers instead
+  * of one.
   *
-  * AQE's skew-join split (`spark.sql.adaptive.skewJoin`) handles most
-  * cases at runtime; explicit salting remains the tool for aggregations
-  * over a hot GROUP BY key and for engines/joins AQE can't split. The
-  * two-level salted aggregation below is the canonical shape:
-  * partial-agg on (key, salt) → final agg on key — same result, bounded
-  * reducer size.
+  * Hot-key JOINS are left to AQE's runtime skew split
+  * (`spark.sql.adaptive.skewJoin`, locked in SkewSpec and by o52's plan
+  * audit); a plan-time salted join replicates the other side `salts`×
+  * and measured 3.5× slower than the split at sf1 (SCALE.md, "Skew
+  * rehearsal"). Aggregation is where AQE has no split — a reducer must
+  * see all rows of a group — so the two-level salted aggregation below
+  * is the canonical shape: partial-agg on (key, salt) → final agg on
+  * key — same result, bounded reducer size.
   */
 object Skew {
 
@@ -33,17 +35,4 @@ object Skew {
       .agg(sum(col(valueCol)).as("__partial"))
       .groupBy(col(key))
       .agg(sum(col("__partial")).as(s"sum_$valueCol"))
-
-  /** Salted equi-join: big side gets a random-ish salt in [0, salts),
-    * small side is replicated across every salt value; joining on
-    * (key, salt) splits each hot key across `salts` tasks.
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 salts: Int = 16): DataFrame = {
-    val saltedBig = big.withColumn("__salt", // content-derived: retry-safe
-      pmod(hash(big.columns.map(col).toIndexedSeq: _*), lit(salts)))
-    val replicatedSmall = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    saltedBig.join(replicatedSmall, Seq(key, "__salt")).drop("__salt")
-  }
 }

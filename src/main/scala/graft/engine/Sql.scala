@@ -1,15 +1,20 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.logical.ScriptTransformation
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The reference's text-to-SQL execution surface (reference
   * `dashboard/ai_utils.py:49-66`, `dashboard/app_fase1.py:275`): arbitrary
   * SELECT/WITH SQL over the gold star schema, read-only.
   *
   * Spark SQL provides the parser/planner wholesale; gold tables are
-  * registered as temp views (inherently read-only — there is no DML path
-  * to a temp view), so the "read-only connection" property of the
-  * reference (`dashboard/queries.py:5`) holds by construction.
+  * registered as temp views, and [[runSelect]] parses the text before
+  * anything runs and refuses every statement that is not a query
+  * (INSERT, `WITH … INSERT OVERWRITE DIRECTORY`, DDL, SET, …), so the
+  * "read-only connection" property of the reference
+  * (`dashboard/queries.py:5`) holds by construction.
   *
   * ==Prompt contract (what generated SQL may use)==
   * Views: `fact_sales` (money as DOUBLE, legacy), `fact_sales_dec`
@@ -64,6 +69,8 @@ object Sql {
       }
     }
 
+  private val QueryKeyword = "(?i)\\b(?:WITH|SELECT)\\b".r
+
   /** Sanitize LLM-generated SQL (reference `dashboard/ai_utils.py:49-66`,
     * hardened): prefer the first complete ```-fenced block containing a
     * query, else strip orphan fence markers; trim to the first
@@ -73,10 +80,9 @@ object Sql {
     * ...```") and orphan trailing fences are handled.
     */
   def sanitize(raw: String): Option[String] = {
-    def queryStart(s: String): Option[Int] = {
-      val up = s.toUpperCase
-      Seq(up.indexOf("WITH"), up.indexOf("SELECT")).filter(_ >= 0).sorted.headOption
-    }
+    // whole words only: the "with" in "without" or "Withdrawn" is prose
+    def queryStart(s: String): Option[Int] =
+      QueryKeyword.findFirstMatchIn(s).map(_.start)
     val trimmed = raw.trim
     val fenced = "(?s)```(?:sql|SQL)?\\s*(.*?)```".r
       .findFirstMatchIn(trimmed).map(_.group(1).trim)
@@ -88,7 +94,32 @@ object Sql {
     }
   }
 
-  /** Execute a (sanitized) SELECT over the registered gold views. */
+  /** Execute a (sanitized) SELECT over the registered gold views. The
+    * text is parsed twice before anything runs: as one whole statement
+    * (a syntax error or a second statement throws Spark's
+    * `ParseException`), then by the grammar's `query` rule, which has no
+    * INSERT, DDL or command production. Only that query plan is run,
+    * and only if no part of it (CTEs and subqueries included) is a
+    * `TRANSFORM … USING` script, which would run a shell command. Any
+    * other statement throws [[NotAQueryException]].
+    */
   def runSelect(spark: SparkSession, raw: String): Option[DataFrame] =
-    sanitize(raw).map(spark.sql)
+    sanitize(raw).map { sql =>
+      val parser = spark.sessionState.sqlParser
+      parser.parsePlan(sql): Unit
+      val query =
+        try parser.parseQuery(sql)
+        catch { case e: ParseException => throw new NotAQueryException(sql, e) }
+      val df = Bridge.dataFrame(spark, query) // analyzed, not executed
+      val scripts = df.queryExecution.analyzed
+        .collectWithSubqueries { case t: ScriptTransformation => t }
+      if (scripts.nonEmpty) throw new NotAQueryException(sql, null)
+      df
+    }
+
+  /** [[runSelect]] refused a statement that is not a read-only query. */
+  final class NotAQueryException(sql: String, cause: Throwable)
+    extends IllegalArgumentException(
+      s"runSelect runs read-only queries only; refused before execution: $sql",
+      cause)
 }

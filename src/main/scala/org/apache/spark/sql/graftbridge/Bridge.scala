@@ -1,7 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Spark 4 unified the Column API and made the classic
@@ -18,9 +20,16 @@ object Bridge {
     * `SparkSessionExtensions.injectFunction`; the registry is
     * `private[sql]`, hence bridged here).
     */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
+  def registerFunction(spark: SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    spark.asInstanceOf[classic.SparkSession]
       .sessionState.functionRegistry.createOrReplaceTempFunction(
         name, builder, "scala_udf")
+
+  /** A DataFrame over an already-parsed plan (`Dataset.ofRows` is
+    * `private[sql]`): what `spark.sql` does after parsing, minus the
+    * re-parse.
+    */
+  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

@@ -39,10 +39,10 @@ class SkewSpec extends AnyFunSuite {
     }
   }
 
-  // The recipe SkewProbe rehearses, locked as a unit test: a hot key that
-  // owns a third of the big side must make AQE (a) flag the SMJ
+  // The recipe of SCALE.md's skew rehearsal, locked as a unit test: a hot
+  // key that owns a third of the big side must make AQE (a) flag the SMJ
   // `isSkewJoin` and (b) split the hot partition into
-  // PartialReducerPartitionSpec slices. The two preconditions the probe
+  // PartialReducerPartitionSpec slices. The two preconditions the rehearsal
   // discovered the hard way are both reproduced here: the big side is a
   // MULTI-FILE parquet (AQE splits along map-output boundaries — a
   // single-mapper shuffle is unsplittable no matter how skewed), and the
@@ -95,16 +95,5 @@ class SkewSpec extends AnyFunSuite {
     }.sum
     assert(skewJoins == 1, s"expected one skew-flagged SMJ, plan:\n${joined.queryExecution.executedPlan}")
     assert(partialSpecs > 1, s"hot partition not split into slices (specs=$partialSpecs)")
-  }
-
-  test("saltedJoin equals plain join") {
-    val dim = Seq(("hot", "H"), ("k9001", "A"), ("k9500", "B")).toDF("key", "name")
-    val plain = skewed.join(dim, "key").groupBy("key").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Skew.saltedJoin(skewed, dim, "key", salts = 8)
-      .groupBy("key").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-    assert(salted("hot") == 9000L)
   }
 }
