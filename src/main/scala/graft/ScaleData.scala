@@ -102,7 +102,7 @@ object ScaleData {
     // replica ranges are disjoint and FK targets line up across tables
     val strides: Map[(String, String), Long] =
       keyPlan.values.flatten.map(_._2).toSeq.distinct.map { case ref @ (t, c) =>
-        ref -> (src(t).agg(max(col(c)).cast("long")).head.getLong(0) + 1L)
+        ref -> (src(t).agg(max(col(c)).cast("long")).head().getLong(0) + 1L)
       }.toMap
 
     // ONE time stride for every timestamp column: union span of all of
@@ -117,7 +117,7 @@ object ScaleData {
       val spans = timePlan.toSeq.flatMap { case (t, cols) =>
         cols.map { c =>
           val r = src(t).agg(
-            min(col(c).cast("date")), max(col(c).cast("date"))).head
+            min(col(c).cast("date")), max(col(c).cast("date"))).head()
           (r.getDate(0).toLocalDate.toEpochDay, r.getDate(1).toLocalDate.toEpochDay)
         }
       }

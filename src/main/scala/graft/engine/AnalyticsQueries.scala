@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * See [[MedallionQueries]] for the hash-stability conventions.
   */
 object AnalyticsQueries {
-  import Tables._
 
   // All dashboard queries read the MATERIALIZED gold layer (written once
   // per run by Gold.ensure) — the reference queries its persisted star

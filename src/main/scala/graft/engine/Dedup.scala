@@ -84,10 +84,6 @@ object Dedup {
     */
   val EmitSalts = 16
 
-  // single-split corpora are spread via the shared gated probe
-  // ([[Spread]]) before the compute-bound hash pass
-  private def spread(docs: DataFrame): DataFrame = Spread(docs)
-
   /** The single corpus-text pass: (doc_id, gkey = md5(text), sig),
     * MATERIALIZED once (eager localCheckpoint) so every downstream
     * consumer — the rep aggregation, the hot-bucket census, both
@@ -106,46 +102,46 @@ object Dedup {
     * Block residue: the checkpoint frame is the returned pipeline's
     * lineage root, so the callee cannot release it; the ≈300 B/doc
     * blocks are freed by the caller's terminal action + periodic GC —
-    * the same bounded trade as lloydCentroids' final codebook, and
+    * the same bounded trade as the k-means final codebook, and
     * strictly smaller than the shuffle files the cloned exchanges
     * wrote.
     */
   private def projected(docs0: DataFrame, sig: Column, sigName: String): DataFrame =
-    spread(docs0)
+    Spread(docs0)
       .select(col("doc_id"), md5(col("text")).as("gkey"), sig.as(sigName))
       .localCheckpoint(true)
 
-  /** All intra-group pairs (a < b) of multi-member identical-text
-    * groups, via the EmitSalts-way salted self-join: the a-side keeps
-    * one salt per member, the b-side is replicated to every salt, so
-    * each unordered pair joins exactly once (at the a-member's salt)
-    * and a giant group's quadratic emission is spread across tasks.
+  /** The member-level pair contract from rep-level pairs (a, b, ga, gb,
+    * valueCol): each rep pair expanded to every member of ga × every
+    * member of gb at the reps' value (identical texts have identical
+    * signatures and shingle sets, so it is exact), plus every pair
+    * a < b inside a `multi` group at the `identical` value (hamming 0,
+    * Jaccard 1.0) when that value `passes` the threshold. Most groups
+    * are singletons, so AQE broadcasts the pair side and the expansion
+    * is ~a rename. The intra-group pairs come from an EmitSalts-way
+    * salted self-join: the a-side keeps one salt per member, the b-side
+    * is replicated to every salt, so each pair joins once and a giant
+    * group's quadratic emission is spread across tasks.
     */
-  private def withinGroupPairs(members: DataFrame, multi: DataFrame): DataFrame = {
+  private def memberPairs(repPairs: DataFrame, members: DataFrame, multi: DataFrame,
+                          valueCol: String, identical: Column,
+                          passes: Column => Column): DataFrame = {
+    val expanded = repPairs
+      .join(members.select(col("gkey").as("ga"), col("doc_id").as("xa")), "ga")
+      .join(members.select(col("gkey").as("gb"), col("doc_id").as("xb")), "gb")
+      .select(least(col("xa"), col("xb")).as("a"),
+        greatest(col("xa"), col("xb")).as("b"), col(valueCol))
     val mm = members.join(multi, Seq("gkey"), "left_semi")
     val a = mm.select(col("gkey"), col("doc_id").as("a"))
       .withColumn("es", pmod(hash(col("a")), lit(EmitSalts)))
     val b = mm.select(col("gkey"), col("doc_id").as("b"),
       explode(sequence(lit(0), lit(EmitSalts - 1))).as("es"))
-    a.join(b, Seq("gkey", "es"))
+    expanded.unionByName(a.join(b, Seq("gkey", "es"))
       .filter(col("a") < col("b"))
       .select("a", "b")
+      .withColumn(valueCol, identical)
+      .filter(passes(identical)))
   }
-
-  /** Representative-level pairs expanded to member-level pairs: every
-    * member of group ga pairs with every member of gb, carrying the
-    * representatives' similarity value (identical texts ⇒ identical
-    * signatures and shingle sets, so the value is exact for every
-    * expanded pair). Most groups are singletons, so AQE broadcasts the
-    * (small) pair side and the expansion is ~a rename; only genuinely
-    * quadratic outputs expand quadratically.
-    */
-  private def expandGroups(repPairs: DataFrame, members: DataFrame, valueCol: String): DataFrame =
-    repPairs
-      .join(members.select(col("gkey").as("ga"), col("doc_id").as("xa")), "ga")
-      .join(members.select(col("gkey").as("gb"), col("doc_id").as("xb")), "gb")
-      .select(least(col("xa"), col("xb")).as("a"),
-        greatest(col("xa"), col("xb")).as("b"), col(valueCol))
 
   /** Band-bucket occupancy marker: the (tiny, broadcast) set of band
     * buckets holding more than maxBucket representatives. Map-side
@@ -155,6 +151,54 @@ object Dedup {
     broadcast(banded.groupBy("j", "band").count()
       .filter(col("count") > maxBucket)
       .select(col("j"), col("band"), lit(true).as("hot")))
+
+  /** The identical-text collapse and salted band self-join shared by
+    * [[simhashNearDup]] and [[minhashRepCandidates]]. Over the
+    * [[projected]] frame (doc_id, gkey, `sig`): one rep per distinct
+    * text; each rep exploded to its `nBands` (j, `band`) bucket keys;
+    * buckets holding more than `maxBucket` reps split by the sub-band
+    * indices m of `subBands`, each keyed by `salt` (m = −1, salt = 0
+    * elsewhere); reps sharing (j, band, m, salt) paired as (a < b, ga,
+    * gb, `value`…), where `value` reads the join sides A and B, which
+    * carry the `sides` columns. A pair repeats per shared bucket.
+    * Returns (pairs, members, reps, multi).
+    */
+  private def bandedRepPairs(proj: DataFrame, sig: String, nBands: Int,
+                             band: Column, subBands: Column, salt: Column,
+                             maxBucket: Int, sides: Seq[String], value: Column*)
+  : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val members = proj.select(col("gkey"), col("doc_id"))
+    // rep frame materialized once (round 21): its consumers — the band
+    // explode (census + salted join) and the multi filter — cloned the
+    // gkey exchange per projection width, re-running the aggregation's
+    // map side 3-4× (visible as repeated 5000-row shuffle-map stages in
+    // the stage probe). Residue: one signature per rep.
+    val reps = proj.groupBy(col("gkey"))
+      .agg(min(col("doc_id")).as("doc_id"), first(col(sig)).as(sig),
+        count(lit(1)).as("gn"))
+      .localCheckpoint(true)
+    val multi = reps.filter(col("gn") > 1).select("gkey")
+    val banded = reps
+      .withColumn("j", explode(sequence(lit(0), lit(nBands - 1))))
+      .withColumn("band", band)
+    val salted = banded
+      .join(hotBuckets(banded, maxBucket), Seq("j", "band"), "left")
+      .withColumn("m", explode(
+        when(col("hot"), subBands).otherwise(array(lit(-1)))))
+      .withColumn("salt", when(col("m") >= 0, salt).otherwise(lit(0L)))
+      .select(sides.map(col): _*)
+    // alias self-join (NOT two renamed projections): both sides are the
+    // identical plan, so their shuffles dedup via exchange reuse
+    val A = salted.alias("A")
+    val B = salted.alias("B")
+    val pairs = A.join(B,
+        col("A.j") === col("B.j") && col("A.band") === col("B.band") &&
+          col("A.m") === col("B.m") && col("A.salt") === col("B.salt") &&
+          col("A.doc_id") < col("B.doc_id"))
+      .select(Seq(col("A.doc_id").as("a"), col("B.doc_id").as("b"),
+        col("A.gkey").as("ga"), col("B.gkey").as("gb")) ++ value: _*)
+    (pairs, members, reps, multi)
+  }
 
   /** Pairs of docs with SimHash hamming distance ≤ t, found via
     * 4×16-bit band bucketing (complete for t ≤ 3 by pigeonhole), with
@@ -169,48 +213,20 @@ object Dedup {
     require(t <= 3, s"4-band/16-bit bucketing guarantees recall only for t <= 3, got $t")
     val proj = projected(docs0,
       GraftFunctions.simhashPortable64(col("text")), "s")
-    val members = proj.select(col("gkey"), col("doc_id"))
-    // rep frame materialized once (round 21): its consumers — the band
-    // explode (census + salted join) and the multi filter — cloned the
-    // gkey exchange per projection width, re-running the aggregation's
-    // map side 3-4× (visible as repeated 5000-row shuffle-map stages in
-    // the stage probe). ~50 B/rep residue.
-    val reps = proj.groupBy(col("gkey"))
-      .agg(min(col("doc_id")).as("doc_id"), first(col("s")).as("s"),
-        count(lit(1)).as("gn"))
-      .localCheckpoint(true)
-    val multi = reps.filter(col("gn") > 1).select("gkey")
-    val banded = reps
-      .withColumn("j", explode(sequence(lit(0), lit(3))))
-      .withColumn("band", expr("(s >> (j * 16)) & 65535"))
     // hot buckets split by 4×12-bit sub-bands of the 48 complement
     // bits (the signature minus the colliding band): ≤ 3 diffs dirty
     // ≤ 3 of 4 sub-bands, so a qualifying pair shares a clean one
-    val salted = banded
-      .join(hotBuckets(banded, maxBucket), Seq("j", "band"), "left")
-      .withColumn("m", explode(
-        when(col("hot"), sequence(lit(0), lit(3))).otherwise(array(lit(-1)))))
-      .withColumn("salt", when(col("m") >= 0, expr(
-        "shiftrightunsigned(" +
-          "(s & (shiftleft(cast(1 as bigint), j*16) - 1)) | " +
-          "shiftleft(if(j = 3, cast(0 as bigint), shiftrightunsigned(s, (j+1)*16)), j*16)" +
-          ", m*12) & 4095")).otherwise(lit(0L)))
-    // alias self-join (NOT two renamed projections): both sides are the
-    // identical plan, so their shuffles dedup via exchange reuse
-    val A = salted.alias("A")
-    val B = salted.alias("B")
-    val repPairs = A.join(B,
-        col("A.j") === col("B.j") && col("A.band") === col("B.band") &&
-          col("A.m") === col("B.m") && col("A.salt") === col("B.salt") &&
-          col("A.doc_id") < col("B.doc_id"))
-      .select(col("A.doc_id").as("a"), col("B.doc_id").as("b"),
-        col("A.gkey").as("ga"), col("B.gkey").as("gb"),
-        bit_count(col("A.s").bitwiseXOR(col("B.s"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= t)
+    val (pairs, members, _, multi) = bandedRepPairs(proj, "s", 4,
+      expr("(s >> (j * 16)) & 65535"), sequence(lit(0), lit(3)),
+      expr("shiftrightunsigned(" +
+        "(s & (shiftleft(cast(1 as bigint), j*16) - 1)) | " +
+        "shiftleft(if(j = 3, cast(0 as bigint), shiftrightunsigned(s, (j+1)*16)), j*16)" +
+        ", m*12) & 4095"),
+      maxBucket, Seq("j", "band", "gkey", "doc_id", "s", "m", "salt"),
+      bit_count(col("A.s").bitwiseXOR(col("B.s"))).cast("long").as("hamming"))
+    val repPairs = pairs.filter(col("hamming") <= t)
       .distinct() // a pair can match in multiple (sub-)bands
-    expandGroups(repPairs, members, "hamming")
-      .unionByName(withinGroupPairs(members, multi)
-        .withColumn("hamming", lit(0L)))
+    memberPairs(repPairs, members, multi, "hamming", lit(0L), _ <= t)
   }
 
   /** Rep-level LSH candidate pairs (a, b, ga, gb) plus the collapse
@@ -226,42 +242,18 @@ object Dedup {
     require(k % bandRows == 0, "k must be divisible by bandRows")
     val nBands = k / bandRows
     val proj = projected(docs0, GraftFunctions.minhash(col("text"), k, w), "sig")
-    val members = proj.select(col("gkey"), col("doc_id"))
-    // materialized once — same clone hazard as simhashNearDup's reps
-    // (round 21); ~300 B/rep residue (the k-long signature)
-    val reps = proj.groupBy(col("gkey"))
-      .agg(min(col("doc_id")).as("doc_id"), first(col("sig")).as("sig"),
-        count(lit(1)).as("gn"))
-      .localCheckpoint(true)
-    val multi = reps.filter(col("gn") > 1).select("gkey")
-    val banded = reps
-      .withColumn("j", explode(sequence(lit(0), lit(nBands - 1))))
-      .withColumn("band", expr(
-        (0 until bandRows).map(r => s"sig[j * $bandRows + $r]").mkString("struct(", ", ", ")")))
     // hot buckets split by the hash of one of the OTHER bands: a true
     // pair colliding in a hot bucket is re-found iff it also agrees on
     // some other band — ≤ (1-j²)^(nBands-1) added miss probability,
     // zero effect on buckets under the bound
-    val salted = banded
-      .join(hotBuckets(banded, maxBucket), Seq("j", "band"), "left")
-      .withColumn("m", explode(
-        when(col("hot"), filter(sequence(lit(0), lit(nBands - 1)), x => x =!= col("j")))
-          .otherwise(array(lit(-1)))))
-      .withColumn("salt", when(col("m") >= 0, expr(
-        (0 until bandRows).map(r => s"sig[m * $bandRows + $r]")
-          .mkString("xxhash64(", ", ", ")"))).otherwise(lit(0L)))
-      .select(col("doc_id"), col("gkey"), col("j"), col("band"), col("m"), col("salt"))
-    // alias self-join: identical child plans, one deduped exchange
-    val A = salted.alias("A")
-    val B = salted.alias("B")
-    val cand = A.join(B,
-        col("A.j") === col("B.j") && col("A.band") === col("B.band") &&
-          col("A.m") === col("B.m") && col("A.salt") === col("B.salt") &&
-          col("A.doc_id") < col("B.doc_id"))
-      .select(col("A.doc_id").as("a"), col("B.doc_id").as("b"),
-        col("A.gkey").as("ga"), col("B.gkey").as("gb"))
-      .distinct()
-    (cand, members, reps, multi)
+    val (pairs, members, reps, multi) = bandedRepPairs(proj, "sig", nBands,
+      expr((0 until bandRows).map(r => s"sig[j * $bandRows + $r]")
+        .mkString("struct(", ", ", ")")),
+      filter(sequence(lit(0), lit(nBands - 1)), x => x =!= col("j")),
+      expr((0 until bandRows).map(r => s"sig[m * $bandRows + $r]")
+        .mkString("xxhash64(", ", ", ")")),
+      maxBucket, Seq("doc_id", "gkey", "j", "band", "m", "salt"))
+    (pairs.distinct(), members, reps, multi)
   }
 
   /** Pairs of docs with exact w-shingle Jaccard ≥ threshold, candidate-
@@ -277,15 +269,12 @@ object Dedup {
                         maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val (repPairs, members, multi) =
       minhashVerifiedRepPairs(docs0, threshold, k, bandRows, w, maxBucket)
-    expandGroups(repPairs, members, "jaccard")
-      .unionByName(withinGroupPairs(members, multi)
-        .withColumn("jaccard", lit(1.0))
-        .filter(lit(1.0) >= threshold))
+    memberPairs(repPairs, members, multi, "jaccard", lit(1.0), _ >= threshold)
   }
 
   /** Verified rep-level LSH pairs plus the collapse frames — the shared
     * core of [[minhashLshJaccard]] (which expands them to the full
-    * member-level pair contract) and [[minhashLshClusterEdges]] (which
+    * member-level pair contract) and [[minhashLshComponents]] (which
     * only needs their CONNECTIVITY).
     */
   private def minhashVerifiedRepPairs(docs0: DataFrame, threshold: Double,
@@ -316,7 +305,7 @@ object Dedup {
     // critical path, and A/B timing showed the per-doc array_sort +
     // kernel bundle costing ~2× here (sf0.1 warm 7.0 s vs 3.7 s).
     val eps = 1e-9
-    val ssets = spread(docs0).join(broadcast(candIds), Seq("doc_id"), "left_semi")
+    val ssets = Spread(docs0).join(broadcast(candIds), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), TextOps.shingleSet(col("text"), w).as("sset"))
       .withColumn("n", size(col("sset")))
     val repPairs = cand
@@ -330,52 +319,20 @@ object Dedup {
     (repPairs, members, multi)
   }
 
-  /** A LINEAR-size edge set with the same CONNECTIVITY as
-    * [[minhashLshJaccard]]'s member-level pair output — the right input
-    * for connected components (o54), where the full pair contract's
-    * quadratic identical-group cliques and cross-group expansions buy
-    * nothing: a clique and a star connect the same vertex set.
-    *
-    * Edges: (1) verified rep-level pairs (a, b) — both endpoints are
-    * group minima, exactly the pairs [[expandGroups]] would fan out to
-    * every member combination; (2) intra-group STARS (rep → member) for
-    * multi-member groups — the [[withinGroupPairs]] clique collapsed to
-    * gn − 1 edges per group. Equivalence, both directions: every star /
-    * rep edge appears in the full pair set (rep = min member, so
-    * (rep, member) ∈ withinGroupPairs and (repA, repB) ∈ the expansion);
-    * every full-set pair (xa ∈ ga, xb ∈ gb) is a path
-    * xa — rep(ga) — rep(gb) — xb over these edges. Components, and so
-    * o54's (doc_id, comp, is_kept) output, are hash-identical — while
-    * the edge build drops the two expansion joins, the salted
-    * within-group self-join, AND the downstream distinct over a
-    * worst-case quadratic pair list (a million-doc boilerplate group is
-    * 10¹² pairs but 10⁶ − 1 star edges).
-    */
-  def minhashLshClusterEdges(docs0: DataFrame, threshold: Double = 0.8,
-                             k: Int = 32, bandRows: Int = 2, w: Int = 3,
-                             maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val (repPairs, members, multi) =
-      minhashVerifiedRepPairs(docs0, threshold, k, bandRows, w, maxBucket)
-    val reps = members.groupBy(col("gkey")).agg(min(col("doc_id")).as("rep"))
-    val stars = members.join(multi, Seq("gkey"), "left_semi")
-      .join(reps, "gkey")
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("a"), col("doc_id").as("b"))
-      .filter(lit(1.0) >= threshold) // withinGroupPairs' threshold gate
-    repPairs.select(col("a"), col("b")).unionByName(stars)
-  }
-
   /** o54's composed form — [[connectedComponents]] over
     * [[minhashLshJaccard]]'s pair graph, computed WITHOUT ever feeding
     * members through the label loop: the iteration runs on the verified
     * REP-level pairs only, and group members attach with one post-loop
-    * join. Equivalence with CC over the member-level graph (skeleton or
-    * full clique expansion — all three have the same connectivity, see
-    * [[minhashLshClusterEdges]]):
+    * join. Equivalence with CC over the member-level pair graph:
     *
-    *  - a member m of group g reaches other nodes only through rep(g)
-    *    (identical-text membership plus rep-level pairs are the only
-    *    connectivity sources), so comp(m) = comp(rep(g));
+    *  - that graph's edges are the rep-pair expansions (every xa ∈ ga
+    *    with every xb ∈ gb, for each verified rep pair (ga, gb)) and the
+    *    identical-text cliques; rep = min member, so every member-level
+    *    pair is a path xa — rep(ga) — rep(gb) — xb, and every rep pair
+    *    is itself a member-level pair. Both graphs connect the same
+    *    vertex sets;
+    *  - a member m of group g therefore reaches other nodes only through
+    *    rep(g), so comp(m) = comp(rep(g));
     *  - rep labels over the rep-pair graph are exactly [[ccLabels]]'s
     *    output, with unpaired reps labelling themselves — and since
     *    rep(g) = min(g) ≤ m, the component minimum over member-level
@@ -387,12 +344,12 @@ object Dedup {
     * O(|dup members| + |pairs|) to O(|pairs|) rows — a boilerplate-heavy
     * corpus (millions of identical-text members, the documented worst
     * case) pays for its duplicates exactly once, in the final attach
-    * join, instead of once per CC round — and the skeleton's star-edge
-    * build (semi-join + reps join + union into the loop's distinct)
-    * drops out of the plan entirely. The degenerate threshold > 1 gate
-    * ([[withinGroupPairs]]' emission filter) is preserved: there the
-    * pair set is empty AND stars never existed, so every doc is its own
-    * component.
+    * join, instead of once per CC round — and neither the quadratic
+    * identical-group cliques nor their expansion joins are ever built (a
+    * million-doc boilerplate group is 10¹² pairs). The degenerate
+    * threshold > 1 gate ([[memberPairs]]' identical-pair filter) is
+    * preserved: there the pair set is empty and no identical pair is
+    * emitted, so every doc is its own component.
     */
   def minhashLshComponents(docs0: DataFrame, threshold: Double = 0.8,
                            k: Int = 32, bandRows: Int = 2, w: Int = 3,
@@ -404,7 +361,7 @@ object Dedup {
       .withColumnRenamed("id", "rep")
     val reps = members.groupBy(col("gkey")).agg(min(col("doc_id")).as("rep"))
     // threshold > 1 severs the member→rep attachment exactly as it
-    // suppressed the skeleton's star edges (and empties repPairs, since
+    // suppresses the identical-text pairs (and empties repPairs, since
     // jaccard ≤ 1): every doc then labels itself.
     val anchor = if (threshold <= 1.0) col("rep") else col("doc_id")
     members.join(reps, "gkey")
@@ -608,7 +565,7 @@ object Dedup {
     // whose bound can't reach α die here, before any set is joined.
     // max/first aggregate with partial (map-side) combine, so this is
     // the same shuffle DISTINCT would have paid. (a, b) is orientation-
-    // normalized downstream by expandGroups' least/greatest.
+    // normalized downstream by memberPairs' least/greatest.
     val cand = A.join(Bs,
         col("A.sid") === col("B.sid") &&
           (col("A.n") < col("B.n") ||
@@ -638,10 +595,7 @@ object Dedup {
       .select(col("a"), col("b"), col("ga"), col("gb"),
         (inter / (col("na") + col("nb") - inter).cast("double")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    expandGroups(repPairs, members, "jaccard")
-      .unionByName(withinGroupPairs(members, multi)
-        .withColumn("jaccard", lit(1.0))
-        .filter(lit(1.0) >= threshold))
+    memberPairs(repPairs, members, multi, "jaccard", lit(1.0), _ >= threshold)
   }
 
   /** Incremental dedup of a NEW ingest batch against an already-ingested
@@ -684,7 +638,7 @@ object Dedup {
                                   expectedHistoryItems: Long = 1L << 20,
                                   fpp: Double = 0.01): DataFrame = {
     def fp(df: DataFrame): DataFrame =
-      spread(df).select(col("doc_id"),
+      Spread(df).select(col("doc_id"),
         TextOps.fingerprint(col("text")).as("fingerprint"))
     val hist = fp(history0)
     // the batch fingerprints have THREE consumers (Bloom-negative

@@ -41,23 +41,12 @@ object DedupQueries {
       Dedup.ngramJaccardNearDup(documents(s, d), threshold = 0.6, w = 3)
         .orderBy("a", "b")),
 
-    // bottom-4 portable shingle-hash fingerprint per doc (winnowing-style
-    // content fingerprint — reference `scripts/esplosione_dati.py:50-103`
-    // made content-local and distributable). Spread, not repartition: the
-    // hash pass must fan out when the corpus arrives as one split, but an
-    // already-parallel scan (any real deployment) must not pay a full
-    // shuffle for a map-only stage.
     // near-dup CLUSTERS with a keep-one policy: connected components
     // (min-label propagation + path halving, O(log n) rounds) over the
     // o22 pair graph. Every doc appears; comp = min reachable doc_id;
-    // is_kept marks the canonical survivor a pipeline retains.
-    // Round 20, twice: first the CC input shrank to the pair graph's
-    // LINEAR-size connectivity skeleton (verified rep pairs + intra-
-    // group stars) instead of its quadratic clique expansion; then the
-    // loop stopped seeing members at all — minhashLshComponents runs
-    // the label iteration on the verified REP pairs only and attaches
-    // members with one post-loop join (components provably identical —
-    // see its equivalence note; the oracle is unchanged).
+    // is_kept marks the canonical survivor a pipeline retains. The label
+    // loop runs on the verified REP pairs only and members attach with
+    // one post-loop join (same components — see minhashLshComponents).
     "o54_dedup_components" -> ((s, d) =>
       Dedup.minhashLshComponents(documents(s, d), threshold = 0.8)
         .orderBy("doc_id")),
@@ -81,6 +70,12 @@ object DedupQueries {
       Dedup.normalizedDedup(docs.unionByName(disguised)).orderBy("doc_id")
     }),
 
+    // bottom-4 portable shingle-hash fingerprint per doc (winnowing-style
+    // content fingerprint — reference `scripts/esplosione_dati.py:50-103`
+    // made content-local and distributable). Spread, not repartition: the
+    // hash pass must fan out when the corpus arrives as one split, but an
+    // already-parallel scan (any real deployment) must not pay a full
+    // shuffle for a map-only stage.
     "o27_doc_fingerprint" -> ((s, d) =>
       Spread(documents(s, d)).select(
         col("doc_id"),
@@ -114,6 +109,27 @@ object DedupQueries {
        |         END AS s
        |  FROM toks)""".stripMargin
 
+  // distinct shingle sets, and the exact Jaccard of an `ss a` × `ss b`
+  // pair; `indent` aligns the continuation line of the ratio
+  private val setsCte =
+    s"""$shinglesCte,
+       |ss AS (SELECT doc_id, list_distinct(s) AS s FROM sh)""".stripMargin
+
+  private def jaccardSql(indent: String): String =
+    "CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /\n" + indent +
+      "CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS DOUBLE)"
+
+  /** Every pair with exact shingle-set Jaccard ≥ `t`: o22 and o53 state
+    * the same contract at different thresholds.
+    */
+  private def jaccardPairs(t: String): String =
+    s"""WITH $setsCte
+       |SELECT a.doc_id AS a, b.doc_id AS b,
+       |       ${jaccardSql("       ")} AS jaccard
+       |FROM ss a JOIN ss b ON a.doc_id < b.doc_id
+       |WHERE ${jaccardSql("      ")} >= $t
+       |ORDER BY a, b""".stripMargin
+
   def oracles: Map[String, String] = Map(
     // same normalization chain with DuckDB's explicit 'g' flag (Spark
     // regexp_replace is global by default; DuckDB's is first-match)
@@ -138,13 +154,11 @@ object DedupQueries {
     // (WITH RECURSIVE reach enumerates (node, reachable-id) pairs; UNION
     // dedup terminates it); singleton docs label themselves.
     "o54_dedup_components" ->
-      s"""WITH RECURSIVE $shinglesCte,
-         |ss AS (SELECT doc_id, list_distinct(s) AS s FROM sh),
+      s"""WITH RECURSIVE $setsCte,
          |pairs AS (
          |  SELECT a.doc_id AS a, b.doc_id AS b
          |  FROM ss a JOIN ss b ON a.doc_id < b.doc_id
-         |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-         |        CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS DOUBLE) >= 0.8),
+         |  WHERE ${jaccardSql("        ")} >= 0.8),
          |edges AS (SELECT a AS src, b AS dst FROM pairs UNION SELECT b, a FROM pairs),
          |reach(id, comp) AS (
          |  SELECT src, src FROM edges
@@ -155,16 +169,7 @@ object DedupQueries {
          |       d.doc_id = COALESCE(l.comp, d.doc_id) AS is_kept
          |FROM documents d LEFT JOIN lab l ON l.id = d.doc_id
          |ORDER BY doc_id""".stripMargin,
-    "o53_ngram_prefix_jaccard" ->
-      s"""WITH $shinglesCte,
-         |ss AS (SELECT doc_id, list_distinct(s) AS s FROM sh)
-         |SELECT a.doc_id AS a, b.doc_id AS b,
-         |       CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-         |       CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS DOUBLE) AS jaccard
-         |FROM ss a JOIN ss b ON a.doc_id < b.doc_id
-         |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-         |      CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS DOUBLE) >= 0.6
-         |ORDER BY a, b""".stripMargin,
+    "o53_ngram_prefix_jaccard" -> jaccardPairs("0.6"),
     "o21_simhash_neardup" ->
       s"""WITH $toksCte,
          |tok AS (SELECT doc_id, unnest(t) AS tok FROM toks),
@@ -182,16 +187,7 @@ object DedupQueries {
          |WHERE bit_count(xor(a.s, b.s)) <= 3
          |ORDER BY a, b""".stripMargin,
 
-    "o22_minhash_lsh_jaccard" ->
-      s"""WITH $shinglesCte,
-         |ss AS (SELECT doc_id, list_distinct(s) AS s FROM sh)
-         |SELECT a.doc_id AS a, b.doc_id AS b,
-         |       CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-         |       CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS DOUBLE) AS jaccard
-         |FROM ss a JOIN ss b ON a.doc_id < b.doc_id
-         |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-         |      CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS DOUBLE) >= 0.8
-         |ORDER BY a, b""".stripMargin,
+    "o22_minhash_lsh_jaccard" -> jaccardPairs("0.8"),
 
     "o27_doc_fingerprint" ->
       s"""WITH $shinglesCte

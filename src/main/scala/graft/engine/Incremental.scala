@@ -2,7 +2,6 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.util.Try
 
 /** The Phase-2 incremental bronze pipeline (SURVEY §2.10; reference
   * `scripts/bronze_incremental.py`):

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
@@ -40,22 +40,39 @@ object Similarity {
     Spread(emb).withColumn("v", VectorOps.asDouble(col("embedding")))
       .withColumn("n2", VectorOps.normSq(col("v")))
 
+  /** `dot(a, b) / sqrt(na2 · nb2)` over folded squared norms: the one
+    * cosine form of this module, in the operand order [[withNorms]]
+    * explains.
+    */
+  private def cosine(a: String, na2: String, b: String, nb2: String): Column =
+    VectorOps.dot(col(a), col(b)) / sqrt(col(na2) * col(nb2))
+
+  /** The query side of a [[withNorms]] frame: rows `vec_id < nQueries`
+    * as (query_id, qv, qn2).
+    */
+  private def queriesOf(e: DataFrame, nQueries: Int): DataFrame =
+    e.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n2").as("qn2"))
+
+  /** The first `k` rows per query_id under `order` (row_number, so the
+    * trailing order key breaks ties).
+    */
+  private def topK(df: DataFrame, k: Int, order: Column*): DataFrame =
+    df.withColumn("rn", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(order: _*)))
+      .filter(col("rn") <= k).drop("rn")
+
   /** Exact top-k cosine neighbors for query vectors `vec_id < nQueries`
     * (self excluded) — bit-identical to the oracle's explicit
     * dot/sqrt(n2a·n2b) over DOUBLE (see [[withNorms]]).
     */
   def knnCosine(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
     val e = withNorms(emb)
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n2").as("qn2"))
-    val scored = e.crossJoin(broadcast(q))
+    topK(e.crossJoin(broadcast(queriesOf(e, nQueries)))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (VectorOps.dot(col("qv"), col("v")) / sqrt(col("qn2") * col("n2"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k).drop("rn")
+        cosine("qv", "qn2", "v", "n2").as("cos")),
+      k, col("cos").desc, col("neighbor_id"))
   }
 
   /** Embedding-cosine near-duplicate pairs over a deterministic corpus
@@ -70,8 +87,7 @@ object Similarity {
     val a = e.select(col("vec_id").as("a"), col("v").as("va"), col("n2").as("na2"))
     val b = e.select(col("vec_id").as("b"), col("v").as("vb"), col("n2").as("nb2"))
     a.join(broadcast(b), col("a") < col("b"))
-      .select(col("a"), col("b"),
-        (VectorOps.dot(col("va"), col("vb")) / sqrt(col("na2") * col("nb2"))).as("cos"))
+      .select(col("a"), col("b"), cosine("va", "na2", "vb", "nb2").as("cos"))
       .filter(col("cos") >= threshold)
   }
 
@@ -91,8 +107,7 @@ object Similarity {
       col("v").as("vb"), col("n2").as("nb2"))
     a.join(b, Seq("label"))
       .filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        (VectorOps.dot(col("va"), col("vb")) / sqrt(col("na2") * col("nb2"))).as("cos"))
+      .select(col("a"), col("b"), cosine("va", "na2", "vb", "nb2").as("cos"))
       .filter(col("cos") >= threshold)
   }
 
@@ -155,35 +170,14 @@ object Similarity {
     * REGISTRY runs [[srpClusteredNearDup]] (same signatures, candidates
     * scoped to k-means blocks) — this flat variant remains correct and
     * is the right call only at a tight radius (t ≤ 7/64 with 8×8-bit
-    * bands, ~3% pass rate) or a bounded corpus.
+    * bands, ~3% pass rate) or a bounded corpus. It is
+    * [[srpBlockedNearDup]] with every vector in one block.
     */
   def srpNearDup(emb: DataFrame, planes: Int = 64, bands: Int = 16,
-                 t: Int = 15, quantScale: Int = 1000): DataFrame = {
-    require(planes % bands == 0, "planes must divide into bands")
-    require(t < bands, s"pigeonhole completeness needs t < bands, got t=$t bands=$bands")
-    val bandBits = planes / bands
-    val banded = srpSignatures(emb, planes, quantScale)
-      .withColumn("b", explode(sequence(lit(0), lit(bands - 1))))
-      .withColumn("bv",
-        expr(s"shiftright(sig, b * $bandBits) & ${(1L << bandBits) - 1}"))
-    val A = banded.select(col("vec_id").as("a"), col("sig").as("sa"),
-      col("b"), col("bv"))
-    val B = banded.select(col("vec_id").as("b2"), col("sig").as("sb"),
-      col("b"), col("bv"))
-    // hamming is computed and filtered STREAMING OUT OF THE BAND JOIN,
-    // before the pair-dedup shuffle: at a wide radius a narrow band
-    // passes ~1/2^bandBits of ALL pairs, so the join emits O(n²/2^b)
-    // rows — but P[hamming ≤ 15 of 64] for a random pair is ~3e-5, so
-    // the map-side filter cuts the distinct()'s input from quadratic to
-    // ~the true pair set. (Measured at sf1/20k vectors: 86 s → the
-    // band-join row count stays, the shuffle disappears.)
-    A.join(B, Seq("b", "bv"))
-      .filter(col("a") < col("b2"))
-      .select(col("a"), col("b2").as("b"),
-        bit_count(col("sa").bitwiseXOR(col("sb"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= t)
-      .distinct()
-  }
+                 t: Int = 15, quantScale: Int = 1000): DataFrame =
+    srpBlockedNearDup(emb, emb.select(col("vec_id"), lit(0).as("cluster")),
+      planes, bands, t, quantScale)
+      .select(col("a"), col("b"), col("hamming"))
 
   /** Cluster-scoped SRP near-dup: [[srpSignatures]] banding composed
     * with the [[kmeansAssign]] coarse blocks — the production shape for
@@ -251,9 +245,12 @@ object Similarity {
       col("vec_id").as("a"), col("sig").as("sa"))
     val B = banded.select(col("cluster"), col("b"), col("bv"),
       col("vec_id").as("b2"), col("sig").as("sb"))
-    // as in srpNearDup: hamming filters STREAMING out of the band join,
-    // so the pair-distinct shuffle sees ~the true pair set, not the
-    // candidate set
+    // hamming is filtered STREAMING OUT OF THE BAND JOIN, before the
+    // pair-dedup shuffle: a narrow band passes ~1/2^bandBits of all
+    // pairs, but P[hamming ≤ 15 of 64] for a random pair is ~3e-5, so
+    // the distinct() sees ~the true pair set, not the candidates
+    // (measured on the flat join at sf1/20k vectors: the shuffle
+    // disappears, 86 s before).
     A.join(B, Seq("cluster", "b", "bv"))
       .filter(col("a") < col("b2"))
       .select(col("a"), col("b2").as("b"), col("cluster"),
@@ -287,21 +284,14 @@ object Similarity {
     * iteration the corpus is scanned once and shuffles only (cluster,
     * pos, partial-sum) triples, map-side combined. The driver holds no
     * vectors (centroid rebuild is the [[centroids]] explode/agg shape).
-    * Superseded rounds' checkpoint blocks are released eagerly; the
-    * FINAL round's ≤k-row centroid frame stays in the block manager
-    * until GC — intentional: the returned assignment is lazy and reads
-    * it, so the callee cannot release it, and k rows is noise next to
-    * any consumer's own working set.
+    * The returned assignment is lazy and reads the final ≤k-row
+    * codebook's checkpoint, which stays until GC ([[lloydRounds]]).
     */
   def kmeansAssign(emb: DataFrame, k: Int = 8, iterations: Int = 3,
                    quantScale: Int = 1000): DataFrame = {
     val q = quantizedShifted(emb, quantScale)
     val cent = lloydCentroids(q, k, iterations)
-    q.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("cluster"),
-        dist2(col("qn2"), col("qv"), col("cn2"), col("cv")).as("d"))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("d"), col("cluster"))).as("m"))
+    nearest(q.crossJoin(broadcast(cent)), Nil, "cluster")
       .select(col("vec_id"), col("m.cluster").as("cluster"),
         col("m.d").cast("long").as("dist2"))
   }
@@ -320,9 +310,20 @@ object Similarity {
     * and scaled k=80 now beats rehearsal k=8 (17.6 s), which is the
     * capacity-dial contract.
     */
-  private def dist2(vn2: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column,
-                    cn2: org.apache.spark.sql.Column, c: org.apache.spark.sql.Column) =
+  private def dist2(vn2: Column, v: Column, cn2: Column, c: Column) =
     vn2 - lit(2.0) * VectorOps.dot(v, c) + cn2
+
+  /** Each row's nearest centroid over a (vec_id, [keys], qv, qn2) ×
+    * (`id`, cv, cn2) pairing: per (vec_id, keys), `m` is the min
+    * (d = [[dist2]], id) struct — ties go to the smaller id — and the
+    * `carry` columns, which depend on the row alone, ride along.
+    */
+  private def nearest(paired: DataFrame, keys: Seq[Column], id: String,
+                      carry: String*): DataFrame =
+    paired.select((col("vec_id") +: keys) ++ carry.map(col) ++ Seq(col(id),
+        dist2(col("qn2"), col("qv"), col("cn2"), col("cv")).as("d")): _*)
+      .groupBy(col("vec_id") +: keys: _*)
+      .agg(min(struct(col("d"), col(id))).as("m"), carry.map(c => first(col(c)).as(c)): _*)
 
   /** Quantized SHIFTED corpus — the kmeansAssign exactness contract:
     * `round(x·scale) + scale` ∈ [0, 2·scale], so every downstream sum is
@@ -338,9 +339,9 @@ object Similarity {
 
   /** Lloyd update rounds over a [[quantizedShifted]] corpus: returns the
     * FINAL (cluster, cv, cn2) centroid frame, eagerly checkpointed
-    * (≤ k rows; superseded rounds' blocks released as they go — see the
-    * in-loop comment). Shared by [[kmeansAssign]] (flat codebook) and
-    * [[kmeansAssign2]] (coarse stage of the two-level codebook).
+    * (≤ k rows; see [[lloydRounds]]). Shared by [[kmeansAssign]] (flat
+    * codebook) and [[kmeansAssign2]] (coarse stage of the two-level
+    * codebook).
     */
   private def lloydCentroids(q: DataFrame, k: Int, iterations: Int): DataFrame = {
     // ≥1 round required: with 0 rounds the returned init codebook would
@@ -355,49 +356,48 @@ object Similarity {
     // 100 TB the quantizer trains on a bounded sample and this cached
     // frame IS the sample (the kmeansAssign2/pqTopK contract).
     val qT = q.localCheckpoint(true)
-    var cent = qT.filter(col("vec_id") < k)
+    val init = qT.filter(col("vec_id") < k)
       .select(col("vec_id").cast("int").as("cluster"),
         col("qv").as("cv"), col("qn2").as("cn2"))
+    val cent = lloydRounds(qT, init, None, "cluster", iterations)
+    // the final codebook is checkpointed: nothing downstream reads qT
+    qT.unpersist()
+    cent
+  }
+
+  /** `iterations` integer-exact Lloyd rounds from the `init` codebook:
+    * each assigns every `train` row (vec_id, [part], qv, qn2) to its
+    * [[nearest]] centroid, then rebuilds each centroid as its members'
+    * per-position `sum div count`. `part` scopes the codebook (none:
+    * [[lloydCentroids]]; `cluster`: [[kmeansAssign2]]'s fine cells;
+    * `sub`: [[pqTopK]]'s sub-spaces) and `id` names the centroid.
+    *
+    * Only the final ([part], id, cv, cn2) codebook is eagerly
+    * checkpointed (round 20): each lazy round is a broadcast child of
+    * the next, so that one action builds every round once over the
+    * caller's cached `train`. The checkpoint lets the caller release
+    * `train`; as the result's only lineage it stays until GC.
+    */
+  private def lloydRounds(train: DataFrame, init: DataFrame, part: Option[String],
+                          id: String, iterations: Int): DataFrame = {
+    val keys = part.toSeq.map(col)
+    var cent = init
     for (i <- 1 to iterations) {
-      val assigned = qT.crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("qv"), col("cluster"),
-          dist2(col("qn2"), col("qv"), col("cn2"), col("cv")).as("d"))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("d"), col("cluster"))).as("m"),
-          first(col("qv")).as("qv")) // qv is functionally dependent on vec_id
-        .select(col("vec_id"), col("m.cluster").as("cluster"), col("qv"))
-      val next = assigned
-        .select(col("cluster"), posexplode(col("qv")))
-        .groupBy(col("cluster"), col("pos"))
+      val paired = part.fold(train.crossJoin(broadcast(cent)))(
+        p => train.join(broadcast(cent), Seq(p)))
+      val next = nearest(paired, keys, id, "qv")
+        .select(keys ++ Seq(col(s"m.$id").as(id), posexplode(col("qv"))): _*)
+        .groupBy(keys ++ Seq(col(id), col("pos")): _*)
         .agg(sum(col("col").cast("long")).as("s"), count(lit(1)).as("n"))
-        .select(col("cluster"), col("pos"),
-          expr("s div n").cast("double").as("v"))
-        .groupBy(col("cluster"))
+        .select(keys ++ Seq(col(id), col("pos"),
+          expr("s div n").cast("double").as("v")): _*)
+        .groupBy(keys :+ col(id): _*)
         .agg(collect_list(struct(col("pos"), col("v"))).as("pv"))
-        .select(col("cluster"),
-          transform(array_sort(col("pv")), x => x.getField("v")).as("cv"))
+        .select(keys ++ Seq(col(id),
+          transform(array_sort(col("pv")), x => x.getField("v")).as("cv")): _*)
         .withColumn("cn2", VectorOps.normSq(col("cv")))
-      // ONLY the final round is eagerly checkpointed (round 20).
-      // Intermediate rounds stay lazy: each round's centroid frame is a
-      // broadcast-exchange child of the next round's plan, so the final
-      // checkpoint's one action fires the nested builds round-by-round —
-      // every round still computed exactly once over the cached qT
-      // blocks (no O(iter²) replay: the corpus never re-derives, and a
-      // ≤k-row broadcast subtree is built once per use) — minus
-      // (iterations − 1) checkpoint jobs' dispatch + block write/read.
-      // The final checkpoint stays: it truncates the returned frame's
-      // lineage so qT can be released below without forcing a retrain
-      // on the caller's first action.
       cent = if (i == iterations) next.localCheckpoint(true) else next
     }
-    // training corpus cache released here (the final centroid frame is
-    // eagerly checkpointed, so nothing downstream reads qT).
-    qT.unpersist()
-    // the FINAL round's checkpoint is intentionally NOT unpersisted: it
-    // is the returned frame's only lineage, so releasing it here would
-    // force a full retrain on the caller's first action. The residue is
-    // ≤k centroid rows, freed by the caller's terminal action + GC — the
-    // same bounded trade as pagerankFixedPoint's final rank frame.
     cent
   }
 
@@ -440,50 +440,20 @@ object Similarity {
                     iterations: Int = 3, quantScale: Int = 1000): DataFrame = {
     val q = quantizedShifted(emb, quantScale)
     val coarse = lloydCentroids(q, kCoarse, iterations)
-    // training corpus with its coarse cell, cached once for the fine
-    // rounds; the coarse argmin here is the SAME arithmetic the final
-    // stateless pass re-runs, so membership is identical by construction
-    val qa = q.crossJoin(broadcast(coarse))
-      .select(col("vec_id"), col("qv"), col("qn2"), col("cluster"),
-        dist2(col("qn2"), col("qv"), col("cn2"), col("cv")).as("d"))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("d"), col("cluster"))).as("m"),
-        first(col("qv")).as("qv"), first(col("qn2")).as("qn2"))
-      .select(col("vec_id"), col("m.cluster").as("cluster"),
-        col("qv"), col("qn2"))
-      .localCheckpoint(true)
+    // each row's coarse cell (vec_id, cluster, qv, qn2): cached once for
+    // the fine rounds, and re-run by the final stateless pass, so the
+    // training membership is identical by construction
+    def inCell(cells: DataFrame): DataFrame =
+      nearest(q.crossJoin(broadcast(cells)), Nil, "cluster", "qv", "qn2")
+        .select(col("vec_id"), col("m.cluster").as("cluster"), col("qv"), col("qn2"))
+    val qa = inCell(coarse).localCheckpoint(true)
     val seedIds = qa.groupBy(col("cluster"),
         pmod(col("vec_id"), lit(kFine)).cast("int").as("fine"))
       .agg(min(col("vec_id")).as("vec_id"))
-    var fineCent = qa.join(broadcast(seedIds), Seq("vec_id", "cluster"))
+    val fineInit = qa.join(broadcast(seedIds), Seq("vec_id", "cluster"))
       .select(col("cluster"), col("fine"),
         col("qv").as("cv"), col("qn2").as("cn2"))
-    for (i <- 1 to iterations) {
-      val assigned = qa.join(broadcast(fineCent), Seq("cluster"))
-        .select(col("vec_id"), col("cluster"), col("qv"), col("fine"),
-          dist2(col("qn2"), col("qv"), col("cn2"), col("cv")).as("d"))
-        .groupBy(col("vec_id"), col("cluster"))
-        .agg(min(struct(col("d"), col("fine"))).as("m"),
-          first(col("qv")).as("qv"))
-        .select(col("cluster"), col("m.fine").as("fine"), col("qv"))
-      val next = assigned
-        .select(col("cluster"), col("fine"), posexplode(col("qv")))
-        .groupBy(col("cluster"), col("fine"), col("pos"))
-        .agg(sum(col("col").cast("long")).as("s"), count(lit(1)).as("n"))
-        .select(col("cluster"), col("fine"), col("pos"),
-          expr("s div n").cast("double").as("v"))
-        .groupBy(col("cluster"), col("fine"))
-        .agg(collect_list(struct(col("pos"), col("v"))).as("pv"))
-        .select(col("cluster"), col("fine"),
-          transform(array_sort(col("pv")), x => x.getField("v")).as("cv"))
-        .withColumn("cn2", VectorOps.normSq(col("cv")))
-      // final-round-only eager checkpoint — the lloydCentroids round-20
-      // rework verbatim (see its in-loop comment): intermediates are
-      // built exactly once as nested ≤k-row broadcast subtrees of the
-      // final checkpoint's one action; the last round's checkpoint lets
-      // qa be released below without a retrain.
-      fineCent = if (i == iterations) next.localCheckpoint(true) else next
-    }
+    val fineCent = lloydRounds(qa, fineInit, Some("cluster"), "fine", iterations)
     // the final fine codebook is materialized; the training corpus cache
     // is dead weight from here — release it NOW (the returned frame
     // below reads only the source and the two ≤k-row codebooks)
@@ -500,19 +470,8 @@ object Similarity {
     // instead of vanishing. ≤kCoarse-row semi-join, still broadcast.
     val coveredCoarse =
       coarse.join(fineCent.select(col("cluster")).distinct(), Seq("cluster"))
-    q.crossJoin(broadcast(coveredCoarse))
-      .select(col("vec_id"), col("qv"), col("qn2"), col("cluster"),
-        dist2(col("qn2"), col("qv"), col("cn2"), col("cv")).as("d"))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("d"), col("cluster"))).as("m"),
-        first(col("qv")).as("qv"), first(col("qn2")).as("qn2"))
-      .select(col("vec_id"), col("m.cluster").as("cluster"),
-        col("qv"), col("qn2"))
-      .join(broadcast(fineCent), Seq("cluster"))
-      .select(col("vec_id"), col("cluster"), col("qv"), col("fine"),
-        dist2(col("qn2"), col("qv"), col("cn2"), col("cv")).as("d"))
-      .groupBy(col("vec_id"), col("cluster"))
-      .agg(min(struct(col("d"), col("fine"))).as("m"))
+    nearest(inCell(coveredCoarse).join(broadcast(fineCent), Seq("cluster")),
+        Seq(col("cluster")), "fine")
       .select(col("vec_id"), col("cluster"), col("m.fine").as("fine"),
         (col("cluster") * lit(kFine) + col("m.fine")).cast("int").as("block"),
         col("m.d").cast("long").as("dist2"))
@@ -577,28 +536,28 @@ object Similarity {
       .localCheckpoint(true)
     val q = coded.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("code").as("qcode"), col("n2").as("qn2"))
-    val cw = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("neighbor_id"))
-    val cand = coded.crossJoin(broadcast(q))
+    val cand = topK(coded.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (VectorOps.dot(col("code"), col("qcode")) /
-          sqrt(col("n2") * col("qn2"))).as("qcos"))
-      .withColumn("rn", row_number().over(cw))
-      .filter(col("rn") <= c)
+        cosine("code", "n2", "qcode", "qn2").as("qcos")),
+      c, col("qcos").desc, col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"))
+    exactRerank(emb, cand, nQueries, k)
+  }
+
+  /** The exact tail of the compressed ANN scans ([[sq8TopK]],
+    * [[pqTopK]]): each (query_id, neighbor_id) candidate is rescored
+    * with [[knnCosine]]'s bit-identical cosine on the original vectors,
+    * and the top `k` per query are kept.
+    */
+  private def exactRerank(emb: DataFrame, cand: DataFrame, nQueries: Int,
+                          k: Int): DataFrame = {
     val e = withNorms(emb)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cand
+    topK(cand
       .join(e.select(col("vec_id").as("neighbor_id"), col("v"), col("n2")), "neighbor_id")
-      .join(broadcast(e.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n2").as("qn2"))),
-        "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        (VectorOps.dot(col("qv"), col("v")) / sqrt(col("qn2") * col("n2"))).as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k).drop("rn")
+      .join(broadcast(queriesOf(e, nQueries)), "query_id")
+      .select(col("query_id"), col("neighbor_id"), cosine("qv", "qn2", "v", "n2").as("cos")),
+      k, col("cos").desc, col("neighbor_id"))
   }
 
   /** PQ (product-quantization) ANN — the compression dial AFTER [[sq8TopK]]
@@ -616,8 +575,8 @@ object Similarity {
     * Scale shape (what each piece costs at 100 TB):
     *  - TRAINING runs on the deterministic `vec_id % sampleMod` sample
     *    only (the documented quantizer-trains-on-a-bounded-sample
-    *    contract; the sample is eagerly checkpointed once and released
-    *    after the rounds), seeds from the sample's first `ksub` members,
+    *    contract; the sample is a filter over the once-checkpointed
+    *    sub-vector blocks), seeds from the sample's first `ksub` members,
     *    and each round is one broadcast join + map-side-combined
     *    floor-div update per sub-space — no corpus replay, no RNG;
     *  - ENCODING is one corpus pass against the broadcast codebooks
@@ -682,7 +641,7 @@ object Similarity {
         s"${dims % m} dimensions; choose m | dims (or pad the vectors)")
     val q = quantizedShifted(emb, quantScale)
     val dsub = size(col("qv")) / lit(m)
-    // (vec_id, sub, sv, sn2): the m contiguous sub-vectors of each row,
+    // (vec_id, sub, qv, qn2): the m contiguous sub-vectors of each row,
     // MATERIALIZED once (eager localCheckpoint, round 20): the frame has
     // THREE full-scan consumers — the training sample, the corpus
     // encode, and the query LUT — and each was planned as its own
@@ -699,78 +658,34 @@ object Similarity {
     val qs = q.select(col("vec_id"), posexplode(
         transform(sequence(lit(0), lit(m - 1)),
           s => slice(col("qv"), s * dsub + 1, dsub))))
-      .select(col("vec_id"), col("pos").as("sub"), col("col").as("sv"))
-      .withColumn("sn2", VectorOps.normSq(col("sv")))
+      .select(col("vec_id"), col("pos").as("sub"), col("col").as("qv"))
+      .withColumn("qn2", VectorOps.normSq(col("qv")))
       .localCheckpoint(true)
     // bounded training sample: a narrow filter over the cached blocks
     // (no second materialization — the rounds re-read the same blocks)
     val qt = qs.filter(pmod(col("vec_id"), lit(sampleMod)) === 0)
     // deterministic seeds: the sample's first ksub members per sub-space
-    var cb = qt.filter(col("vec_id") < ksub.toLong * sampleMod)
+    val init = qt.filter(col("vec_id") < ksub.toLong * sampleMod)
       .select(col("sub"), expr(s"vec_id div $sampleMod").cast("int").as("code"),
-        col("sv").as("cv"), col("sn2").as("cn2"))
-    for (i <- 1 to iterations) {
-      val assigned = qt.join(broadcast(cb), Seq("sub"))
-        .select(col("vec_id"), col("sub"), col("sv"), col("code"),
-          dist2(col("sn2"), col("sv"), col("cn2"), col("cv")).as("d"))
-        .groupBy(col("vec_id"), col("sub"))
-        .agg(min(struct(col("d"), col("code"))).as("mn"),
-          first(col("sv")).as("sv")) // sv functionally depends on (vec_id, sub)
-      val next = assigned
-        .select(col("sub"), col("mn.code").as("code"), posexplode(col("sv")))
-        .groupBy(col("sub"), col("code"), col("pos"))
-        .agg(sum(col("col").cast("long")).as("s"), count(lit(1)).as("n"))
-        .select(col("sub"), col("code"), col("pos"),
-          expr("s div n").cast("double").as("v"))
-        .groupBy(col("sub"), col("code"))
-        .agg(collect_list(struct(col("pos"), col("v"))).as("pv"))
-        .select(col("sub"), col("code"),
-          transform(array_sort(col("pv")), x => x.getField("v")).as("cv"))
-        .withColumn("cn2", VectorOps.normSq(col("cv")))
-      // final-round-only eager checkpoint — the lloydCentroids round-20
-      // rework verbatim: intermediate codebooks are nested ≤m·ksub-row
-      // broadcast subtrees built once inside the final checkpoint's
-      // action. (The sample is a filter over the shared qs blocks now —
-      // nothing sample-specific to release; qs itself stays cached for
-      // the encode and LUT passes below.)
-      cb = if (i == iterations) next.localCheckpoint(true) else next
-    }
+        col("qv").as("cv"), col("qn2").as("cn2"))
+    val cb = lloydRounds(qt, init, Some("sub"), "code", iterations)
     // encode the FULL corpus: per (row, sub) argmin over the broadcast
     // codebook — m bytes per vector from here on
-    val enc = qs.join(broadcast(cb), Seq("sub"))
-      .select(col("vec_id"), col("sub"), col("code"),
-        dist2(col("sn2"), col("sv"), col("cn2"), col("cv")).as("d"))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(min(struct(col("d"), col("code"))).as("mn"))
-      .select(col("vec_id"), col("sub"), col("mn.code").as("code"))
+    val enc = nearest(qs.join(broadcast(cb), Seq("sub")), Seq(col("sub")), "code")
+      .select(col("vec_id"), col("sub"), col("m.code").as("code"))
     // per-query ADC lookup table: exact integer sub-distance to every
     // (sub, code) cell — ≤ nQueries·m·ksub rows, broadcast
     val lut = qs.filter(col("vec_id") < nQueries)
       .join(broadcast(cb), Seq("sub"))
       .select(col("vec_id").as("query_id"), col("sub"), col("code"),
-        dist2(col("sn2"), col("sv"), col("cn2"), col("cv")).as("d"))
-    val cw = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc"), col("neighbor_id"))
-    val cand = enc.join(broadcast(lut), Seq("sub", "code"))
+        dist2(col("qn2"), col("qv"), col("cn2"), col("cv")).as("d"))
+    val cand = topK(enc.join(broadcast(lut), Seq("sub", "code"))
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum(col("d")).cast("long").as("adc"))
-      .withColumn("rn", row_number().over(cw))
-      .filter(col("rn") <= cEff)
+      .agg(sum(col("d")).cast("long").as("adc")),
+      cEff, col("adc"), col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"))
-    // exact rerank over the c survivors (the sq8TopK tail)
-    val e = withNorms(emb)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cand
-      .join(e.select(col("vec_id").as("neighbor_id"), col("v"), col("n2")), "neighbor_id")
-      .join(broadcast(e.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n2").as("qn2"))),
-        "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        (VectorOps.dot(col("qv"), col("v")) / sqrt(col("qn2") * col("n2"))).as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k).drop("rn")
+    exactRerank(emb, cand, nQueries, k)
   }
 
   /** IVF ANN: probe the `nprobe` clusters whose centroids are most
@@ -779,23 +694,15 @@ object Similarity {
     */
   def ivfTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 5, nprobe: Int = 2): DataFrame = {
     val e = withNorms(emb)
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n2").as("qn2"))
-    val cw = Window.partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("label"))
-    val probed = q.crossJoin(broadcast(centroids(emb)))
+    val probed = topK(queriesOf(e, nQueries).crossJoin(broadcast(centroids(emb)))
       .select(col("query_id"), col("qv"), col("qn2"), col("label"),
-        VectorOps.cosine(col("qv"), col("centroid")).as("ccos"))
-      .withColumn("rn", row_number().over(cw))
-      .filter(col("rn") <= nprobe)
+        VectorOps.cosine(col("qv"), col("centroid")).as("ccos")),
+      nprobe, col("ccos").desc, col("label"))
       .select(col("query_id"), col("qv"), col("qn2"), col("label"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    e.join(broadcast(probed), Seq("label")) // cluster-pruned scan
+    topK(e.join(broadcast(probed), Seq("label")) // cluster-pruned scan
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (VectorOps.dot(col("qv"), col("v")) / sqrt(col("qn2") * col("n2"))).as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k).drop("rn")
+        cosine("qv", "qn2", "v", "n2").as("cos")),
+      k, col("cos").desc, col("neighbor_id"))
   }
 }

@@ -235,6 +235,34 @@ object SimilarityQueries {
        |         CAST(CAST(SUM(qe.val) AS BIGINT) // COUNT(*) AS DOUBLE) AS cv
        |  FROM a$n a JOIN qe USING (vec_id) GROUP BY 1, 2)""".stripMargin
 
+  /** The shifted quantization `q(vec_id, qv)` of o57, o72 and x10. */
+  private val quantCte =
+    """q AS (
+      |  SELECT vec_id,
+      |         [round(CAST(x AS DOUBLE) * 1000) + 1000 FOR x IN embedding] AS qv
+      |  FROM embeddings)""".stripMargin
+
+  /** o72's k-means replay up to its final distances, shared with o57:
+    * quantization (q, qe), seeds c0, three [[kmRound]]s, and df = every
+    * (vec_id, cluster) distance to the round-3 centroids.
+    */
+  private val kmeansCtes =
+    s"""$quantCte,
+       |qe AS (
+       |  SELECT vec_id, unnest(generate_series(1, len(qv))) AS i,
+       |         unnest(qv) AS val
+       |  FROM q),
+       |c0 AS (
+       |  SELECT CAST(vec_id AS INTEGER) AS cluster, i, val AS cv
+       |  FROM qe WHERE vec_id < 8),
+       |${kmRound("c0", 1)},
+       |${kmRound("c1", 2)},
+       |${kmRound("c2", 3)},
+       |df AS (
+       |  SELECT qe.vec_id, c.cluster,
+       |         SUM((qe.val - c.cv) * (qe.val - c.cv)) AS d
+       |  FROM qe JOIN c3 c USING (i) GROUP BY 1, 2)""".stripMargin
+
   def oracles: Map[String, String] = Map(
     // replays pqTopK stage-for-stage: same shifted quantization, same
     // m=8 contiguous sub-spaces, codebooks trained on the vec_id % 10
@@ -244,10 +272,7 @@ object SimilarityQueries {
     // (adc, neighbor_id), exact-cosine rerank in o23's explicit
     // dot/sqrt(n2·n2) form, top-5, cos rounded to 6 decimals
     "x10_pq_ann" ->
-      s"""WITH q AS (
-         |  SELECT vec_id,
-         |         [round(CAST(x AS DOUBLE) * 1000) + 1000 FOR x IN embedding] AS qv
-         |  FROM embeddings),
+      s"""WITH $quantCte,
          |qs AS (
          |  SELECT vec_id, i, val,
          |         CAST((i - 1) // (dims // 8) AS INTEGER) AS sub
@@ -310,24 +335,7 @@ object SimilarityQueries {
     // same floor-div centroid update, final assignment vs the round-3
     // centroids with the exact integer distance emitted
     "o72_kmeans" ->
-      s"""WITH q AS (
-         |  SELECT vec_id,
-         |         [round(CAST(x AS DOUBLE) * 1000) + 1000 FOR x IN embedding] AS qv
-         |  FROM embeddings),
-         |qe AS (
-         |  SELECT vec_id, unnest(generate_series(1, len(qv))) AS i,
-         |         unnest(qv) AS val
-         |  FROM q),
-         |c0 AS (
-         |  SELECT CAST(vec_id AS INTEGER) AS cluster, i, val AS cv
-         |  FROM qe WHERE vec_id < 8),
-         |${kmRound("c0", 1)},
-         |${kmRound("c1", 2)},
-         |${kmRound("c2", 3)},
-         |df AS (
-         |  SELECT qe.vec_id, c.cluster,
-         |         SUM((qe.val - c.cv) * (qe.val - c.cv)) AS d
-         |  FROM qe JOIN c3 c USING (i) GROUP BY 1, 2)
+      s"""WITH $kmeansCtes
          |SELECT vec_id, cluster, CAST(d AS BIGINT) AS dist2 FROM (
          |  SELECT vec_id, cluster, d,
          |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cluster) AS rn
@@ -356,24 +364,7 @@ object SimilarityQueries {
     // NOT fixed-hyperplane SRP signatures, and the k-means seeds are
     // all rep-0, so clusters (and hence the pair scope) are global.
     "o57_srp_blocked_neardup" ->
-      s"""WITH q AS (
-         |  SELECT vec_id,
-         |         [round(CAST(x AS DOUBLE) * 1000) + 1000 FOR x IN embedding] AS qv
-         |  FROM embeddings),
-         |qe AS (
-         |  SELECT vec_id, unnest(generate_series(1, len(qv))) AS i,
-         |         unnest(qv) AS val
-         |  FROM q),
-         |c0 AS (
-         |  SELECT CAST(vec_id AS INTEGER) AS cluster, i, val AS cv
-         |  FROM qe WHERE vec_id < 8),
-         |${kmRound("c0", 1)},
-         |${kmRound("c1", 2)},
-         |${kmRound("c2", 3)},
-         |df AS (
-         |  SELECT qe.vec_id, c.cluster,
-         |         SUM((qe.val - c.cv) * (qe.val - c.cv)) AS d
-         |  FROM qe JOIN c3 c USING (i) GROUP BY 1, 2),
+      s"""WITH $kmeansCtes,
          |asg AS (
          |  SELECT vec_id, cluster FROM (
          |    SELECT vec_id, cluster,

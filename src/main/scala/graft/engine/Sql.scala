@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.CallMethodViaReflection
 import org.apache.spark.sql.catalyst.parser.ParseException
 import org.apache.spark.sql.catalyst.plans.logical.ScriptTransformation
 import org.apache.spark.sql.graftbridge.Bridge
@@ -100,8 +101,10 @@ object Sql {
     * `ParseException`), then by the grammar's `query` rule, which has no
     * INSERT, DDL or command production. Only that query plan is run,
     * and only if no part of it (CTEs and subqueries included) is a
-    * `TRANSFORM … USING` script, which would run a shell command. Any
-    * other statement throws [[NotAQueryException]].
+    * `TRANSFORM … USING` script, which would run a shell command, or
+    * calls `reflect`/`java_method`/`try_reflect`, which would run any
+    * static Java method (`System.setProperty`, `System.exit`). Any other
+    * statement throws [[NotAQueryException]].
     */
   def runSelect(spark: SparkSession, raw: String): Option[DataFrame] =
     sanitize(raw).map { sql =>
@@ -111,9 +114,13 @@ object Sql {
         try parser.parseQuery(sql)
         catch { case e: ParseException => throw new NotAQueryException(sql, e) }
       val df = Bridge.dataFrame(spark, query) // analyzed, not executed
-      val scripts = df.queryExecution.analyzed
-        .collectWithSubqueries { case t: ScriptTransformation => t }
-      if (scripts.nonEmpty) throw new NotAQueryException(sql, null)
+      // matched on the resolved expression: try_reflect resolves to a
+      // CallMethodViaReflection child, and no alias or spelling escapes it
+      val unsafe = df.queryExecution.analyzed.collectWithSubqueries {
+        case t: ScriptTransformation => t
+        case p if p.expressions.exists(_.exists(_.isInstanceOf[CallMethodViaReflection])) => p
+      }
+      if (unsafe.nonEmpty) throw new NotAQueryException(sql, null)
       df
     }
 

@@ -16,11 +16,6 @@ object TextHash {
 
   private val Seed = 42L
 
-  private def hashToken(s: String, seed: Long): Long = {
-    val utf8 = UTF8String.fromString(s)
-    XXH64.hashUnsafeBytes(utf8.getBaseObject, utf8.getBaseOffset, utf8.numBytes, seed)
-  }
-
   def tokens(text: UTF8String): Array[String] =
     text.toString.trim.split("\\s+").filter(_.nonEmpty)
 

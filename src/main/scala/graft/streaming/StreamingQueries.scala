@@ -118,7 +118,7 @@ object StreamingQueries {
           // still be on disk (the s03 pattern: the block owns cleanup)
           graft.engine.Workdirs.delete(s, root)
           val ev = graft.engine.Tables.events(s, d).select(col("user_id"), col("ts"))
-          val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0).toInstant
+          val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0).toInstant
           val sentinels = ev.select(col("user_id")).distinct()
             .withColumn("ts", lit(maxTs.plusSeconds(2 * 3600L)))
           ev.unionByName(sentinels).write.parquet(s"$root/sessions_src")
@@ -171,7 +171,7 @@ object StreamingQueries {
           graft.engine.Workdirs.delete(s, root)
           val ev = graft.engine.Tables.events(s, d)
             .select(col("event_id"), col("ts").cast("timestamp").as("ts"))
-          val minTs = ev.agg(min(col("ts"))).head.getTimestamp(0).toInstant
+          val minTs = ev.agg(min(col("ts"))).head().getTimestamp(0).toInstant
           val cut = java.sql.Timestamp.from(minTs.plusSeconds(3600L))
           ev.filter(col("ts") >= cut).coalesce(1).write.parquet(s"$root/ontime")
           ev.filter(col("ts") < cut).coalesce(1).write.parquet(s"$root/late")

@@ -255,6 +255,24 @@ class DedupSpec extends AnyFunSuite {
     assert(none.forall(_.getBoolean(2)), "no pairs -> every doc kept")
   }
 
+  test("minhashLshComponents = connected components of minhashLshJaccard's pairs") {
+    // o54's rep-level label loop must equal the plain composition over
+    // the member-level pair graph: on a corpus with an exact-duplicate
+    // group, on the shipped corpus, and at threshold > 1 (no pairs)
+    val shipped = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+      .select("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    Seq((corpus, 0.8), (shipped, 0.8), (corpus, 1.01)).foreach { case (docs, t) =>
+      val got = rows(Dedup.minhashLshComponents(docs, t))
+      val want = rows(Dedup.connectedComponents(
+        Dedup.minhashLshJaccard(docs, t).select("a", "b"), docs))
+      assert(got == want, s"threshold $t: missing ${want -- got}, spurious ${got -- want}")
+      assert(got.exists(r => r._1 != r._2) == (t <= 1.0),
+        s"threshold $t: a component must merge docs exactly when t <= 1")
+    }
+  }
+
   test("exactDedup groups by content hash and keeps the min id") {
     val groups = Dedup.exactDedup(corpus).collect()
       .map(r => r.getLong(1) -> r.getLong(2)).toMap // keep_id -> size

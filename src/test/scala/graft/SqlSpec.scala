@@ -51,5 +51,17 @@ class SqlSpec extends AnyFunSuite {
       intercept[Sql.NotAQueryException](Sql.runSelect(spark, q).map(_.collect()))
     }
     assert(!dir.exists(), s"a TRANSFORM script ran and created $dir")
+    // reflect, java_method and try_reflect call any static Java method:
+    // refused in the same three places, before the property is ever set
+    Seq("reflect", "java_method", "try_reflect").foreach { fn =>
+      val call = s"SELECT $fn('java.lang.System', 'setProperty', 'graft.sql.probe', '$fn') AS p"
+      Seq(call,
+          s"WITH a AS ($call) SELECT * FROM a",
+          s"SELECT 1 AS one WHERE EXISTS ($call)").foreach { q =>
+        intercept[Sql.NotAQueryException](Sql.runSelect(spark, q).map(_.collect()))
+      }
+    }
+    assert(System.getProperty("graft.sql.probe") == null,
+      s"a reflect call ran: graft.sql.probe=${System.getProperty("graft.sql.probe")}")
   }
 }
