@@ -115,61 +115,64 @@ object Gold {
       // (at sf10 the silvers are tens of millions of rows; every saved
       // pass is real setup wall-clock).
       val so = Medallion.silverOrders(Tables.orders(spark, sfDir)).persist()
-      val (_, soStats) = Quality.gateWith(so, Quality.orderChecks,
-        Seq(countDistinct(date_format(col("o_orderdate"), "yyyy-MM"))
-          .cast("long").as("__months")))
       val sl = Medallion.silverLineitem(Tables.lineitem(spark, sfDir)).persist()
-      val (_, slStats) = Quality.gateWith(sl, Quality.lineitemChecks, Nil)
-      // the gold fact's money columns are DECIMAL(18,4) ON DISK (round
-      // 16): exactness becomes a property of the schema instead of a
-      // per-query cast convention — every downstream money aggregate is
-      // association-order-free by construction, and a new consumer
-      // cannot reintroduce the SUM(double) drift class by forgetting a
-      // cast. Values are unchanged: price carries ≤2 decimals (exact in
-      // DECIMAL(18,4) both ways), and freight's double product is
-      // canonicalized to its exact ≤4-decimal value (the t01 disc_price
-      // argument; the oracle factSql applies the same canonicalization).
-      // size the fact's layout from the gate rows (zero extra passes):
-      // distinct order months pick the calendar grain, lineitem count
-      // (the gate's own __rows counter) over the grain's partition count
-      // sizes the fan-out — hot periods fan out, tiny ones don't shatter
-      // into salt-files
-      val months = math.max(1L, soStats.getAs[Long]("__months"))
-      val grain = periodGrain(months)
-      val periods =
-        if (grain == "yyyy-MM") months else math.max(1L, months / 12)
-      val factFanout = adaptiveFanout(slStats.getLong(0), periods)
-      val fact = Medallion.factSales(so, sl)
-        .withColumn("price",
-          col("price").cast(org.apache.spark.sql.types.DecimalType(18, 4)))
-        .withColumn("freight_value",
-          col("freight_value").cast(org.apache.spark.sql.types.DecimalType(18, 4)))
-        .withColumn("order_period",
-          date_format(col("order_purchase_timestamp"), grain))
-      // the six layer writes are independent of each other — submit them
-      // as concurrent Spark jobs (FIFO-scheduled over the same executor
-      // pool) instead of serially leaving the cluster idle between
-      // write barriers; driver threads are a standard way to overlap
-      // independent jobs in one session
-      val writes = Seq(
-        Future(so.write.mode("overwrite").parquet(s"$dir/silver_orders")),
-        Future(sl.write.mode("overwrite").parquet(s"$dir/silver_lineitem")),
-        Future(saltedPartitionedWrite(fact, "order_period", col("order_id"),
-          s"$dir/fact_sales", factFanout)),
-        Future(Medallion.dimCustomer(
-            Tables.customer(spark, sfDir), Tables.nation(spark, sfDir),
-            Tables.region(spark, sfDir))
-          .write.mode("overwrite").parquet(s"$dir/dim_customers")),
-        Future(Medallion.dimPart(Tables.part(spark, sfDir))
-          .write.mode("overwrite").parquet(s"$dir/dim_products")),
-        Future(Medallion.dimDate(Tables.orders(spark, sfDir))
-          .write.mode("overwrite").parquet(s"$dir/dim_time")))
-      // settle ALL futures before propagating a failure: rethrowing on
-      // the first error while sibling writes are still running would let
-      // a retry start a second overwrite of the same paths concurrently
-      // with the stragglers of the failed attempt
-      try Workdirs.settleAll(writes)
-      finally { so.unpersist(); sl.unpersist() }
+      // released on every exit, a failed gate included: a cached silver
+      // outliving its materialization would pin memory for the session
+      try {
+        val (_, soStats) = Quality.gateWith(so, Quality.orderChecks,
+          Seq(countDistinct(date_format(col("o_orderdate"), "yyyy-MM"))
+            .cast("long").as("__months")))
+        val (_, slStats) = Quality.gateWith(sl, Quality.lineitemChecks, Nil)
+        // the gold fact's money columns are DECIMAL(18,4) ON DISK (round
+        // 16): exactness becomes a property of the schema instead of a
+        // per-query cast convention — every downstream money aggregate is
+        // association-order-free by construction, and a new consumer
+        // cannot reintroduce the SUM(double) drift class by forgetting a
+        // cast. Values are unchanged: price carries ≤2 decimals (exact in
+        // DECIMAL(18,4) both ways), and freight's double product is
+        // canonicalized to its exact ≤4-decimal value (the t01 disc_price
+        // argument; the oracle factSql applies the same canonicalization).
+        // size the fact's layout from the gate rows (zero extra passes):
+        // distinct order months pick the calendar grain, lineitem count
+        // (the gate's own __rows counter) over the grain's partition count
+        // sizes the fan-out — hot periods fan out, tiny ones don't shatter
+        // into salt-files
+        val months = math.max(1L, soStats.getAs[Long]("__months"))
+        val grain = periodGrain(months)
+        val periods =
+          if (grain == "yyyy-MM") months else math.max(1L, months / 12)
+        val factFanout = adaptiveFanout(slStats.getLong(0), periods)
+        val fact = Medallion.factSales(so, sl)
+          .withColumn("price",
+            col("price").cast(org.apache.spark.sql.types.DecimalType(18, 4)))
+          .withColumn("freight_value",
+            col("freight_value").cast(org.apache.spark.sql.types.DecimalType(18, 4)))
+          .withColumn("order_period",
+            date_format(col("order_purchase_timestamp"), grain))
+        // the six layer writes are independent of each other — submit them
+        // as concurrent Spark jobs (FIFO-scheduled over the same executor
+        // pool) instead of serially leaving the cluster idle between
+        // write barriers; driver threads are a standard way to overlap
+        // independent jobs in one session
+        val writes = Seq(
+          Future(so.write.mode("overwrite").parquet(s"$dir/silver_orders")),
+          Future(sl.write.mode("overwrite").parquet(s"$dir/silver_lineitem")),
+          Future(saltedPartitionedWrite(fact, "order_period", col("order_id"),
+            s"$dir/fact_sales", factFanout)),
+          Future(Medallion.dimCustomer(
+              Tables.customer(spark, sfDir), Tables.nation(spark, sfDir),
+              Tables.region(spark, sfDir))
+            .write.mode("overwrite").parquet(s"$dir/dim_customers")),
+          Future(Medallion.dimPart(Tables.part(spark, sfDir))
+            .write.mode("overwrite").parquet(s"$dir/dim_products")),
+          Future(Medallion.dimDate(Tables.orders(spark, sfDir))
+            .write.mode("overwrite").parquet(s"$dir/dim_time")))
+        // settle ALL futures before propagating a failure: rethrowing on
+        // the first error while sibling writes are still running would let
+        // a retry start a second overwrite of the same paths concurrently
+        // with the stragglers of the failed attempt
+        Workdirs.settleAll(writes)
+      } finally { so.unpersist(); sl.unpersist() }
     }
 
   def silverOrders(spark: SparkSession, sfDir: String): DataFrame =

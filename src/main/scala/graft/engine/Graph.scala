@@ -25,16 +25,15 @@ import org.apache.spark.sql.functions._
   *
   * == Plan shape at scale ==
   *
-  * Each of the k iterations is one co-partitioned join (edges ⋈ ranks on
-  * src) + one map-side-combined aggregation on dst, run as its own
-  * eagerly-checkpointed job: the rank frame (one row per node) is
-  * materialized per round so round i's plan never replays rounds
-  * 1..i-1's joins — O(k) join work instead of the O(k²) a lazily
-  * unrolled plan re-derives, and the optimizer plans one shallow join
-  * per round instead of a k-deep tree. The degree-annotated edge frame
-  * is materialized ONCE (`repartition(src)` + eager localCheckpoint),
-  * so the edge list is shuffled once, not k times, and every round's
-  * job reads the same src-partitioned blocks. No driver-side state, no
+  * Each of the k iterations is one broadcast join (edges ⋈ ranks on
+  * src; the rank frame is one row per node) + one map-side-combined
+  * aggregation on dst. Round i's rank frame is the broadcast child of
+  * round i+1's join, built exactly once, so no round replays rounds
+  * 1..i-1 — O(k) join work instead of the O(k²) a re-derived plan
+  * costs — and only the final round is checkpointed. The
+  * degree-annotated edge frame is materialized ONCE (`repartition(src)`
+  * + localCheckpoint), so the edge list is shuffled once, not k times,
+  * and every round reads the same src-partitioned blocks. No driver-side state, no
   * collect: k is the only sequential dimension, exactly like the
   * reference iteration structure of Pregel-style engines.
   */
@@ -51,18 +50,9 @@ object Graph {
     * r_{k+1}(v) = teleport + (dampingPct · Σ_{(u,v)∈E} (r_k(u) div deg(u))) div 100
     * with teleport = ((100 − dampingPct) · unit) div 100.
     */
-  /** @param broadcastRanks ship the rank frame (one row per node) to
-    *        the edge blocks each round instead of shuffling both sides
-    *        into a sort-merge join. Correct default for graphs whose
-    *        node set fits executor memory (|V| ≪ |E|; here every node
-    *        carries 16 bytes, so even 10⁸ nodes is ~1.6 GB — at that
-    *        point, and beyond, flip to false for the co-partitioned
-    *        shuffle join; results are bit-identical either way).
-    */
   def pagerankFixedPoint(edges: DataFrame, iterations: Int,
                          srcCol: String = "src", dstCol: String = "dst",
-                         dampingPct: Int = 85, unit: Long = 1000000L,
-                         broadcastRanks: Boolean = true): DataFrame = {
+                         dampingPct: Int = 85, unit: Long = 1000000L): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val src: Column = col(srcCol)
     // materialized ONCE (lazy localCheckpoint, partitioned on src, so
@@ -83,29 +73,20 @@ object Graph {
         org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
       .localCheckpoint(false)
     val teleport = (100L - dampingPct) * unit / 100L
-    // eager localCheckpoint per round (the kmeansAssign discipline):
-    // without it round i's plan replays rounds 1..i-1 — O(k²) joins
-    // instead of O(k), and the optimizer re-plans a k-deep join tree
-    // every round (measured at sf1/o70: 14.0 s → the checkpoint cuts
-    // the re-derivation; the rank frame is one row per node, far
-    // smaller than the edge list, so materializing it is cheap).
-    // Superseded rounds' blocks are released eagerly; the final round's
-    // ≤|V|-row residue is freed by the caller's terminal action + GC —
-    // intentional, same trade as kmeansAssign's final centroid frame.
-    // checkpoint STRIDE 2: each materialization job replays at most two
-    // rounds' joins (edges read from cached blocks both times), halving
-    // the per-round job/materialization overhead that dominates at
-    // small scale while keeping lineage depth — and so replay work —
-    // bounded by a constant at any scale. The final round is always
-    // checkpointed: it is the returned frame's only lineage, which is
-    // what lets the edge blocks be released below.
-    // rank side broadcast by default: a checkpoint scan advertises no
+    // rank side broadcast: a checkpoint scan advertises no
     // outputPartitioning, so a shuffle join here re-exchanges the EDGE
     // list every round (measured: most of the per-round cost) — while
     // the rank frame is one row per node and ships for free. The
     // per-round job is then map-side join over the cached edge blocks +
     // a partially-aggregated (node, contribution) exchange that is ≤|V|
     // rows per reducer — nothing edge-sized moves after round 0.
+    // NO intermediate checkpoints (round 20): each round's rank frame is
+    // a broadcast-exchange child built exactly once when the round above
+    // it executes — the nested builds fire round-by-round inside the
+    // FINAL round's one materialization, so the per-round work is still
+    // O(k) joins over the cached edge blocks, without k − 1 checkpoint
+    // jobs' dispatch + block write/read (sf0.1: o70 4.43 s → 3.5 s
+    // class).
     // rank seed from the cached edge frame, not a fresh deg plan: the
     // old `deg.select(...)` seed replayed the whole upstream edge
     // derivation (scan → distinct → union → groupBy) inside round 1's
@@ -114,42 +95,21 @@ object Graph {
     // o70 4.43 s → below rework).
     var rk = edgesDeg.select(col("src").as("node")).distinct()
       .select(col("node"), lit(unit).as("rank"))
-    var prev: DataFrame = null
-    for (i <- 1 to iterations) {
-      val rkSide = if (broadcastRanks) broadcast(rk) else rk
-      val next = edgesDeg.join(rkSide, edgesDeg("src") === rkSide("node"))
+    for (_ <- 1 to iterations) {
+      val rkSide = broadcast(rk)
+      rk = edgesDeg.join(rkSide, edgesDeg("src") === rkSide("node"))
         .select(col("dst").as("node"), expr("rank div deg").as("c"))
         .groupBy(col("node"))
         .agg((lit(teleport) +
           expr(s"($dampingPct * sum(c)) div 100")).as("rank"))
-      // broadcast path (round 20): NO intermediate checkpoints. Each
-      // round's rank frame is a broadcast-exchange child built exactly
-      // once when the round above it executes — the nested builds fire
-      // round-by-round inside the FINAL round's one materialization, so
-      // the per-round work is still O(k) joins over the cached edge
-      // blocks, minus (k/2 − 1) checkpoint jobs' dispatch + block
-      // write/read (sf0.1: o70 4.43 s → 3.5 s class). The final round
-      // IS checkpointed: it is the returned frame's only lineage, which
-      // is what lets the edge blocks be released below.
-      // shuffle-join path (broadcastRanks=false, the |V| ≫ memory
-      // regime): keep the round-15 stride-2 eager checkpoints — a lazily
-      // unrolled shuffle-join tree re-plans a k-deep join pyramid and
-      // re-derives rounds on replay (measured at sf1/o70: 14.0 s).
-      val checkpointNow =
-        if (broadcastRanks) i == iterations
-        else i % 2 == 0 || i == iterations
-      if (checkpointNow) {
-        rk = next.localCheckpoint(true)
-        if (prev != null) prev.unpersist()
-        prev = rk
-      } else rk = next
     }
+    val ranks = rk.localCheckpoint(true)
     // the last round IS materialized (its checkpoint is the returned
     // frame's only lineage), so the edge blocks — the big residue, one
     // row per edge — can be released here instead of waiting for GC;
     // what remains for the caller is the ≤|V|-row rank frame, the same
     // bounded trade as kmeansAssign's final centroids.
     edgesDeg.unpersist()
-    rk
+    ranks
   }
 }

@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The Phase-2 incremental bronze pipeline (SURVEY §2.10; reference
@@ -21,12 +22,19 @@ import org.apache.spark.sql.functions._
   *  - queryable tech log with upsert semantics (S9, `:144-155`) and the
   *    SQL-UPDATE note repair (S11, `scripts/normalize_tech_log.py:4-11`)
   *
+  * One pass per run, not per file: the reference loops over its month
+  * files; here every new landing file of a run (one landing `period`
+  * each) is gated, staged and appended as ONE set, and the end state is
+  * the sorted per-file loop's (see [[run]]). So a run starts the same
+  * jobs for 3 files as for 300, and the tech log is rewritten once per
+  * run instead of once per file (O(files²) writes).
+  *
   * Scale posture: every data move is a distributed anti/semi-join shuffle
   * on the natural key + a parquet append; the only driver-side state is
   * the manifest and tech log — metadata bounded by FILE count, not row
-  * count. The log rewrite is batched once per run (the reference rewrites
-  * per file — per-file is O(files²) writes; crash recovery at scale comes
-  * from re-running, which the fingerprint skip makes idempotent).
+  * count. Crash recovery is re-running: a run that dies part-way
+  * reprocesses its whole batch, and the anti-joins keep that
+  * exactly-once.
   */
 object Incremental {
 
@@ -84,30 +92,23 @@ object Incremental {
     writeTechLog(spark, bronzeRoot, repaired)
   }
 
-  private def readIfExists(spark: SparkSession, path: String): Option[DataFrame] =
-    if (Workdirs.exists(spark, path)) Some(spark.read.parquet(path)) else None
-
   /** One incremental run over a landing zone. Returns this run's log
     * entries (the full upserted log is persisted at `bronzeRoot/tech`).
+    *
+    * Same end state as ingesting the new files one by one in name order:
+    *  - a file fails when its orders fail the order gate or its new items
+    *    fail the item gate (order violations win within one file). The
+    *    files before the first failure are ingested and logged with the
+    *    SKIPs before it, the dims are left alone, then its
+    *    `QualityGateException` is thrown;
+    *  - a key new to bronze that lands in several new files is kept only
+    *    in the first (and counts there); duplicates within one file stay.
     */
   def run(spark: SparkSession, landingRoot: String, bronzeRoot: String): Seq[LogEntry] = {
     val manifest = Landing.readManifest(spark, landingRoot)
     val priorLog = readTechLog(spark, bronzeRoot)
     val prior = priorLog.map(e => e.file_name -> e).toMap
     val runTs = nextRunTs(priorLog)
-    val ordersDir = s"$bronzeRoot/orders"
-    val itemsDir = s"$bronzeRoot/lineitem"
-
-    // The log is JOURNALED after every file (like the reference's
-    // per-file upsert), not once per run: if the run aborts mid-way, the
-    // completed files' audit counts survive and only the aborted file is
-    // reprocessed. O(files²) log rewrites, but the log is tiny.
-    var logState = prior
-    def journal(e: LogEntry): LogEntry = {
-      logState = logState + (e.file_name -> e)
-      writeTechLog(spark, bronzeRoot, logState.values.toSeq)
-      e
-    }
 
     // A file is already in bronze when its log entry (OK = ingested, or
     // SKIP = verified-unchanged on a later run; a SKIP record must not
@@ -115,83 +116,113 @@ object Incremental {
     def processed(f: Landing.LandingFile): Boolean =
       prior.get(f.file).exists(e =>
         (e.status == "OK" || e.status == "SKIP") && e.fingerprint == f.fingerprint)
+    def skip(f: Landing.LandingFile) =
+      LogEntry(f.file, f.fingerprint, runTs, "SKIP", 0L, 0L, "SKIP: unchanged")
 
-    val orderEntries = manifest.filter(_.file.startsWith("orders_")).sortBy(_.file).map { f =>
-      if (processed(f))
-        journal(LogEntry(f.file, f.fingerprint, runTs, "SKIP", 0L, 0L,
-          "SKIP: unchanged"))
-      else {
-        val period = f.file.stripPrefix("orders_")
-        val incoming = spark.read.parquet(s"$landingRoot/orders/period=$period")
-        Quality.gate(incoming, Seq(Quality.NonEmpty,
-          Quality.NotNull("o_orderkey"), Quality.NotNull("o_custkey")))
-
-        // Stage new rows BEFORE appending: appending to a path refreshes
-        // every cached/derived plan that reads it, so computing `newIds`
-        // from an un-staged anti-join AFTER the append would re-evaluate
-        // against the already-appended keys and find nothing. Staging is
-        // also the crash-safe pattern at scale (append is a rename-in).
-        val stage = s"$bronzeRoot/_stage/${f.file}"
-        (readIfExists(spark, ordersDir) match {
-          case Some(existing) =>
-            incoming.join(existing.select("o_orderkey"), Seq("o_orderkey"), "left_anti")
-          case None => incoming
-        }).write.mode("overwrite").parquet(s"$stage/orders")
-        val newOrders = spark.read.parquet(s"$stage/orders")
-        val nOrders = newOrders.count()
-
-        // items of NEW orders only (semi-join J7) then composite-key
-        // anti-join (J6) — staged the same way. The landing item dump is
-        // partitioned by the order's period (Landing.explode), so both
-        // the candidate scan and the dedup anti-join prune to this
-        // file's partition instead of re-scanning every item per file.
-        val newIds = newOrders.select("o_orderkey").distinct()
-        val candidateItems = spark.read.parquet(s"$landingRoot/lineitem")
-          .filter(col("period") === period)
-          .join(newIds, col("l_orderkey") === col("o_orderkey"), "left_semi")
-        (readIfExists(spark, itemsDir) match {
-          case Some(existing) =>
-            candidateItems.join(
-              existing.filter(col("period") === period)
-                .select("l_orderkey", "l_linenumber"),
-              Seq("l_orderkey", "l_linenumber"), "left_anti")
-          case None => candidateItems
-        }).write.mode("overwrite").parquet(s"$stage/lineitem")
-        val newItems = spark.read.parquet(s"$stage/lineitem")
-        val nItems = newItems.count()
-        if (nItems > 0)
-          Quality.gate(newItems, Seq(Quality.NotNull("l_orderkey"),
-            Quality.NotNull("l_partkey"), Quality.NonNegative("l_extendedprice")))
-
-        // ITEMS append FIRST: if the JVM dies between the two appends, a
-        // rerun reprocesses the file, the item anti-join dedups the
-        // already-appended items, and the orders append completes — the
-        // reverse order would leave the file's items permanently lost
-        // (orders present ⇒ anti-join finds no "new" orders ⇒ no item
-        // candidates ever again).
-        if (nItems > 0)
-          newItems.write.mode("append").partitionBy("period").parquet(itemsDir)
-        newOrders.write.mode("append").parquet(ordersDir)
-        Workdirs.delete(spark, stage) // transient
-        journal(LogEntry(f.file, f.fingerprint, runTs, "OK", nOrders, nItems,
-          s"OK: inserted $nOrders"))
+    val orderFiles = manifest.filter(_.file.startsWith("orders_"))
+    def period(f: Landing.LandingFile) = f.file.stripPrefix("orders_")
+    val fresh = orderFiles.filterNot(processed).map(period)
+    val (counts, failure) =
+      if (fresh.isEmpty) (Map.empty[String, (Long, Long)], None)
+      else ingestOrders(spark, landingRoot, bronzeRoot, fresh)
+    val orderEntries = orderFiles.takeWhile(f => !failure.exists(_._1 == period(f))).map { f =>
+      counts.get(period(f)).fold(skip(f)) { case (nOrders, nItems) =>
+        LogEntry(f.file, f.fingerprint, runTs, "OK", nOrders, nItems, s"OK: inserted $nOrders")
       }
     }
 
-    val dimEntries = manifest.filter(_.file.endsWith("_full")).sortBy(_.file).map { f =>
-      if (processed(f))
-        journal(LogEntry(f.file, f.fingerprint, runTs, "SKIP", 0L, 0L,
-          "SKIP: unchanged"))
-      else {
-        val name = f.file.stripSuffix("_full")
-        val df = spark.read.parquet(s"$landingRoot/$name")
-        val n = df.count()
-        df.write.mode("overwrite").parquet(s"$bronzeRoot/$name") // full REPLACE
-        journal(LogEntry(f.file, f.fingerprint, runTs, "OK", n, 0L,
-          s"OK: replaced $n"))
+    val dimEntries = if (failure.nonEmpty) Nil else
+      manifest.filter(_.file.endsWith("_full")).map { f =>
+        if (processed(f)) skip(f)
+        else {
+          val name = f.file.stripSuffix("_full")
+          val df = spark.read.parquet(s"$landingRoot/$name")
+          val n = df.count()
+          df.write.mode("overwrite").parquet(s"$bronzeRoot/$name") // full REPLACE
+          LogEntry(f.file, f.fingerprint, runTs, "OK", n, 0L, s"OK: replaced $n")
+        }
       }
-    }
 
-    orderEntries ++ dimEntries
+    val entries = orderEntries ++ dimEntries
+    if (entries.nonEmpty)
+      writeTechLog(spark, bronzeRoot, (prior ++ entries.map(e => e.file_name -> e)).values.toSeq)
+    failure.foreach { case (_, e) => throw e }
+    entries
+  }
+
+  /** Gate, stage and append the new order periods `fresh` (sorted) as one
+    * set. Returns (orders, items) appended per ingested period, and the
+    * first failing period with its gate exception, if any.
+    */
+  private def ingestOrders(spark: SparkSession, landingRoot: String, bronzeRoot: String,
+                           fresh: Seq[String])
+      : (Map[String, (Long, Long)], Option[(String, Quality.QualityGateException)]) = {
+    val ordersDir = s"$bronzeRoot/orders"
+    val itemsDir = s"$bronzeRoot/lineitem"
+    val stage = s"$bronzeRoot/_stage"
+    def firstFailure(gate: Seq[(String, Long, Seq[Quality.Violation])]) =
+      gate.collectFirst { case (p, _, v) if v.nonEmpty => p -> new Quality.QualityGateException(v) }
+    // landing and bronze items are partitioned by period; read back, a
+    // yearly period is inferred as an int, so compare the manifest's string
+    def within(dir: String, periods: Seq[String]) =
+      spark.read.parquet(dir).withColumn("period", col("period").cast("string"))
+        .filter(col("period").isin(periods: _*))
+
+    // one order gate over every new period (a period the manifest lists
+    // but landing holds no rows for fails NonEmpty)
+    val orderFailure = firstFailure(Quality.validateBy(
+      within(s"$landingRoot/orders", fresh), "period", fresh,
+      Seq(Quality.NonEmpty, Quality.NotNull("o_orderkey"), Quality.NotNull("o_custkey"))))
+    val gated = fresh.takeWhile(p => !orderFailure.exists(_._1 == p))
+    def newTo(df: DataFrame, dir: String, keys: String*) =
+      if (!Workdirs.exists(spark, dir)) df
+      else df.join((if (keys.contains("period")) within(dir, gated) else spark.read.parquet(dir))
+        .select(keys.map(col): _*), keys, "left_anti")
+    if (gated.isEmpty) (Map.empty, orderFailure)
+    else try {
+      // Stage new rows BEFORE appending: appending to a path refreshes
+      // every cached/derived plan that reads it, so a lazy anti-join
+      // would re-evaluate against the already-appended keys after the
+      // append and find nothing. Staging is also the crash-safe pattern
+      // at scale (append is a rename-in). A key new to bronze in several
+      // periods is kept only in the first, as a per-file loop would.
+      newTo(within(s"$landingRoot/orders", gated), ordersDir, "o_orderkey")
+        .withColumn("__first", min(col("period")).over(Window.partitionBy(col("o_orderkey"))))
+        .filter(col("period") === col("__first")).drop("__first")
+        .write.mode("overwrite").parquet(s"$stage/orders")
+      val newOrders = spark.read.parquet(s"$stage/orders")
+
+      // items of NEW orders only, in their order's period (semi-join
+      // J7), then composite-key anti-join (J6), staged the same way;
+      // both item scans prune to the new periods
+      newTo(within(s"$landingRoot/lineitem", gated)
+          .join(newOrders.select(col("o_orderkey").as("l_orderkey"), col("period")),
+            Seq("l_orderkey", "period"), "left_semi"),
+        itemsDir, "l_orderkey", "l_linenumber", "period")
+        .write.mode("overwrite").parquet(s"$stage/lineitem")
+      val newItems = spark.read.parquet(s"$stage/lineitem")
+
+      val orderRows = Quality.validateBy(newOrders, "period", gated, Nil)
+      val itemGate = Quality.validateBy(newItems, "period", gated,
+        Seq(Quality.NotNull("l_orderkey"), Quality.NotNull("l_partkey"),
+          Quality.NonNegative("l_extendedprice")))
+      val itemFailure = firstFailure(itemGate)
+      val ok = gated.takeWhile(p => !itemFailure.exists(_._1 == p))
+      val counts = orderRows.zip(itemGate).collect {
+        case ((p, nOrders, _), (_, nItems, _)) if ok.contains(p) => p -> (nOrders, nItems)
+      }.toMap
+      def inOk(df: DataFrame) = df.filter(col("period").isin(ok: _*))
+
+      // ITEMS append FIRST: if the JVM dies between the two appends, a
+      // rerun reprocesses the batch, the item anti-join dedups the
+      // already-appended items, and the orders append completes — the
+      // reverse order would leave the items permanently lost (orders
+      // present ⇒ anti-join finds no "new" orders ⇒ no item candidates
+      // ever again).
+      if (counts.values.exists(_._2 > 0))
+        inOk(newItems).write.mode("append").partitionBy("period").parquet(itemsDir)
+      if (ok.nonEmpty) inOk(newOrders).drop("period").write.mode("append").parquet(ordersDir)
+      (counts, itemFailure.orElse(orderFailure))
+    } finally Workdirs.delete(spark, stage) // transient
   }
 }

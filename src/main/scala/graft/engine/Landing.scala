@@ -54,74 +54,28 @@ object Landing {
     *
     * `periodFmt` "yyyy" keeps the file count manageable at test scale;
     * "yyyy-MM" reproduces the reference's monthly grain — the pipeline is
-    * identical either way.
+    * identical either way, and Incremental.run ingests a run's new files
+    * as one set, so the file count does not set its job count.
     */
-  /** Landing-file count cap: the incremental contract is per-FILE
-    * (quality gate + anti-join + append + journal per landing file), so
-    * file count is a JOB count — and the journal is rewritten after
-    * every file, so it is also quadratic in files. A fixed year grain on
-    * the long-history rehearsal meant ~660 years at sf10 = 1,320
-    * sequential ingest jobs (found wedged mid-sweep, round 17). Real
-    * landing zones deliver bounded batch counts; beyond the cap,
-    * consecutive years are bucketed into equal-width batches.
-    */
-  val maxLandingFiles = 16
-
-  /** Data-sized year-bucket width for the default landing grain:
-    * ceil(span / [[maxLandingFiles]]), floored at 1 (width-1 = the plain
-    * year, byte-identical to the pre-r17 layout). ONE SOURCE OF TRUTH
-    * with the p01 oracle: PipelineQueries interpolates
-    * [[maxLandingFiles]] into the same ceil/floor formula in SQL, so the
-    * cap constant cannot drift between the engine and its oracle — a
-    * change HERE to the formula's shape (not just the cap) must be
-    * mirrored in that oracle's `yb` CTE.
-    */
-  def yearBucketWidth(minYear: Int, maxYear: Int): Long =
-    math.max(1L, math.ceil((maxYear - minYear + 1).toDouble / maxLandingFiles).toLong)
-
   def explode(spark: SparkSession, sfDir: String, landingRoot: String,
               periodFmt: String = "yyyy"): Seq[LandingFile] = {
-    // a null order date cannot be period-split (its rows would land in
-    // the hive default partition while the manifest says 'orders_null')
-    // — fail fast at the landing boundary instead. The year-span stats
-    // the default grain needs ride the SAME aggregation pass as the gate
-    // (Quality.gateWith): one scan per ingest, not two — min/max(year)
-    // skip nulls by SQL semantics, and a null date throws anyway, so
-    // pre-gate stats equal post-gate stats. NonEmpty rides the same
-    // pass too (gateWith's count(*)): on an EMPTY orders table
-    // min/max(year) are null and getAs[Int] would silently unbox them
-    // to 0, anchoring the default grain at year 0 — an empty ingest
-    // must fail at the boundary exactly like a null date does.
-    val (gated, stats) = Quality.gateWith(
-      Tables.orders(spark, sfDir),
-      Seq(Quality.NonEmpty, Quality.NotNull("o_orderdate")),
-      if (periodFmt != "yyyy") Nil
-      else Seq(min(year(col("o_orderdate"))).as("__min_year"),
-        max(year(col("o_orderdate"))).as("__max_year")))
-    // data-sized batch width for the default year grain: width-1 until
-    // the year span blows past the cap, then ceil(span/cap)-year buckets
-    // anchored at the min year ([[yearBucketWidth]] — the p01 oracle
-    // computes the same width from the same table in SQL).
-    val periodCol =
-      if (periodFmt != "yyyy") date_format(col("o_orderdate"), periodFmt)
-      else {
-        val minY = stats.getAs[Int]("__min_year")
-        val width = yearBucketWidth(minY, stats.getAs[Int]("__max_year"))
-        if (width == 1L) date_format(col("o_orderdate"), "yyyy")
-        else (floor((year(col("o_orderdate")) - lit(minY)) / lit(width))
-          * lit(width) + lit(minY.toLong)).cast("long").cast("string")
-      }
-    val orders = gated.withColumn("period", periodCol)
+    // an empty orders table or a null order date cannot be period-split
+    // (a null date's rows would land in the hive default partition while
+    // the manifest says 'orders_null') — fail fast at the landing
+    // boundary instead
+    val orders = Quality.gate(Tables.orders(spark, sfDir),
+        Seq(Quality.NonEmpty, Quality.NotNull("o_orderdate")))
+      .withColumn("period", date_format(col("o_orderdate"), periodFmt))
     // period + bounded hash salt (Gold.saltedPartitionedWrite): every
     // period is written by up to `writeFanout` parallel tasks instead of
     // one, with file count still bounded per period
     Gold.saltedPartitionedWrite(orders, "period", col("o_orderkey"),
       s"$landingRoot/orders")
     // items carry their ORDER's period and are partitioned by it, so the
-    // incremental per-file item pass is a partition-pruned scan instead
-    // of a full re-scan per file; an item whose order is absent gets a
-    // null period (hive default partition) and is never ingested —
-    // matching the semi-join-on-new-orders semantics
+    // incremental item pass prunes to the run's new periods; an item
+    // whose order is absent gets a null period (hive default partition)
+    // and is never ingested — matching the semi-join-on-new-orders
+    // semantics
     Gold.saltedPartitionedWrite(
       Tables.lineitem(spark, sfDir)
         .join(orders.select(col("o_orderkey").as("__ok"), col("period")),

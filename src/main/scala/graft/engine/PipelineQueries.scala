@@ -452,27 +452,15 @@ object PipelineQueries {
   )
 
   def oracles: Map[String, String] = Map(
-    // yb replays Landing.yearBucketWidth in SQL — the cap constant is
-    // INTERPOLATED from Landing.maxLandingFiles (one source of truth);
-    // a change to the Scala formula's SHAPE must be mirrored here.
     "p01_incremental_runs" ->
-      s"""WITH yb AS (
-        |  SELECT CAST(MIN(EXTRACT(year FROM o_orderdate)) AS BIGINT) AS miny,
-        |         GREATEST(CAST(1 AS BIGINT),
-        |           CAST(CEIL((MAX(EXTRACT(year FROM o_orderdate))
-        |                      - MIN(EXTRACT(year FROM o_orderdate)) + 1)
-        |                     / ${Landing.maxLandingFiles}.0) AS BIGINT)) AS w
-        |  FROM orders),
-        |ord AS (
-        |  SELECT 'orders_' || CAST(CAST(FLOOR((EXTRACT(year FROM o_orderdate) - yb.miny) / yb.w)
-        |                      * yb.w + yb.miny AS BIGINT) AS VARCHAR) AS file_name,
+      """WITH ord AS (
+        |  SELECT 'orders_' || strftime(o_orderdate, '%Y') AS file_name,
         |         COUNT(*) AS n_orders
-        |  FROM orders, yb GROUP BY 1),
+        |  FROM orders GROUP BY 1),
         |it AS (
-        |  SELECT 'orders_' || CAST(CAST(FLOOR((EXTRACT(year FROM o.o_orderdate) - yb.miny) / yb.w)
-        |                      * yb.w + yb.miny AS BIGINT) AS VARCHAR) AS file_name,
+        |  SELECT 'orders_' || strftime(o.o_orderdate, '%Y') AS file_name,
         |         COUNT(*) AS n_items
-        |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey, yb GROUP BY 1)
+        |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey GROUP BY 1)
         |SELECT ord.file_name, 'OK' AS run1_status, ord.n_orders AS run1_orders,
         |       COALESCE(it.n_items, 0) AS run1_items,
         |       TIMESTAMP '2024-01-01 01:00:00' AS run1_at,

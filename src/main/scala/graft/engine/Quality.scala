@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The reference's fail-fast data-quality gate (SURVEY §2.11): Pandera
@@ -58,22 +58,43 @@ object Quality {
   /** [[validate]] with caller-supplied aggregate columns folded into the
     * SAME single pass, returned as the extras Row (access by the alias
     * the caller gave each column). For callers that need a cheap
-    * whole-table statistic alongside the gate — Landing.explode's year
-    * span — so gating + stats cost ONE table scan per ingest, not two
-    * (at 100 TB a second full pass over bronze is a real job, and at
-    * sf0.1 the split pass was the only code change on p01's r17 path).
+    * whole-table statistic alongside the gate — Gold.ensure's layout
+    * sizing — so gating + stats cost ONE table scan, not two (at 100 TB
+    * a second full pass over silver is a real job).
     */
   def validateWith(df: DataFrame, checks: Seq[Check], extras: Seq[Column])
-      : Either[Seq[Violation], (DataFrame, org.apache.spark.sql.Row)] = {
-    val vchecks = checks.filter(_ != NonEmpty)
-    val counters = count(lit(1)).as("__rows") +:
-      (vchecks.map(c => sum(c.violation).cast("long").as(c.name)) ++ extras)
-    val row = df.agg(counters.head, counters.tail: _*).collect()(0)
-    val rows = row.getLong(0)
-    val violations =
-      vchecks.map(c => Violation(c.name, row.getAs[Long](c.name))).filter(_.count > 0) ++
-        (if (checks.contains(NonEmpty) && rows == 0) Seq(Violation(NonEmpty.name, 1)) else Nil)
+      : Either[Seq[Violation], (DataFrame, Row)] = {
+    val all = counters(checks) ++ extras
+    val row = df.agg(all.head, all.tail: _*).collect()(0)
+    val violations = violationsOf(checks, Some(row))
     if (violations.nonEmpty) Left(violations) else Right((df, row))
+  }
+
+  /** [[validate]] per value of `key`, still ONE aggregation pass (a
+    * `groupBy(key)` of the same counters): each of `keys`, in order, with
+    * its row count and its violations (empty = passed). A listed key with
+    * no rows counts 0 rows, so it fails [[NonEmpty]] if that is checked.
+    */
+  def validateBy(df: DataFrame, key: String, keys: Seq[String], checks: Seq[Check])
+      : Seq[(String, Long, Seq[Violation])] = {
+    val all = counters(checks)
+    val byKey = df.groupBy(col(key).cast("string")).agg(all.head, all.tail: _*)
+      .collect().map(r => r.getString(0) -> r).toMap
+    keys.map { k =>
+      val row = byKey.get(k)
+      (k, row.fold(0L)(_.getAs[Long]("__rows")), violationsOf(checks, row))
+    }
+  }
+
+  private def counters(checks: Seq[Check]): Seq[Column] =
+    count(lit(1)).as("__rows") +: checks.filter(_ != NonEmpty)
+      .map(c => sum(c.violation).cast("long").as(c.name))
+
+  /** Violations from a [[counters]] row; no row = no input rows. */
+  private def violationsOf(checks: Seq[Check], row: Option[Row]): Seq[Violation] = {
+    def n(name: String) = row.fold(0L)(_.getAs[Long](name))
+    checks.filter(_ != NonEmpty).map(c => Violation(c.name, n(c.name))).filter(_.count > 0) ++
+      (if (checks.contains(NonEmpty) && n("__rows") == 0) Seq(Violation(NonEmpty.name, 1)) else Nil)
   }
 
   /** Blocking gate: throw on any violation so downstream stages never run
@@ -83,8 +104,7 @@ object Quality {
     validate(df, checks).fold(v => throw new QualityGateException(v), identity)
 
   /** Blocking [[validateWith]]: the gated frame plus the extras Row. */
-  def gateWith(df: DataFrame, checks: Seq[Check], extras: Seq[Column])
-      : (DataFrame, org.apache.spark.sql.Row) =
+  def gateWith(df: DataFrame, checks: Seq[Check], extras: Seq[Column]): (DataFrame, Row) =
     validateWith(df, checks, extras)
       .fold(v => throw new QualityGateException(v), identity)
 

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
-import graft.engine.Gold
+import graft.engine.{Gold, Quality}
 
 /** The salted partitioned-write contract (used by the gold fact and both
   * landing splits): a HOT partition fans across multiple tasks/files —
@@ -66,5 +66,19 @@ class GoldSpec extends AnyFunSuite {
     graft.engine.Workdirs.settleAll(
       (1 to 4).map(_ => Future { n.incrementAndGet(): Unit }))
     assert(n.get() == 4)
+  }
+
+  test("a failed quality gate leaves no silver frame cached") {
+    // an empty lineitem fails the silver gate after both silvers are
+    // marked for caching; the failure must release them, not the session
+    val sf = TestSpark.tmpDir("gold-gate-fail")
+    val src = "/root/testdata/sf0.001"
+    spark.read.parquet(s"$src/orders.parquet").write.parquet(s"$sf/orders.parquet")
+    spark.read.parquet(s"$src/lineitem.parquet").limit(0).write.parquet(s"$sf/lineitem.parquet")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Quality.QualityGateException](Gold.ensure(spark, sf))
+    assert(e.getMessage.contains("non_empty=1"), e.getMessage)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"gate failure left ${added.size} cached RDD(s)")
   }
 }

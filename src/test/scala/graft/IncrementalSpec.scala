@@ -191,6 +191,104 @@ class IncrementalSpec extends AnyFunSuite {
       "fail-fast: nothing may be written for a gated file")
   }
 
+  test("a run's job count does not depend on its file count") {
+    // yearly landing = 2 order files, monthly = 4, same rows: one
+    // set-based pass per run starts the same jobs either way
+    def jobs(periodFmt: String): (Int, Int) = {
+      val src = TestSpark.tmpDir("inc-jobs-src")
+      val root = TestSpark.tmpDir("inc-jobs-root")
+      writeSource(src)
+      Landing.explode(spark, src, s"$root/landing", periodFmt = periodFmt)
+      def run() = TestSpark.jobsDuring(
+        Incremental.run(spark, s"$root/landing", s"$root/bronze"))
+      val cold = run()
+      (cold, run())
+    }
+    val (yearCold, yearRerun) = jobs("yyyy")
+    val (monthCold, monthRerun) = jobs("yyyy-MM")
+    assert(yearCold == monthCold, s"cold run: $yearCold jobs for 2 files, $monthCold for 4")
+    assert(yearRerun == monthRerun, s"rerun: $yearRerun jobs for 2 files, $monthRerun for 4")
+  }
+
+  /** Land (key, custkey, date) orders and (key, linenumber) items at the
+    * yearly grain; returns the pipeline root.
+    */
+  private def land(orders: Seq[(Option[Long], Long, String)],
+                   items: Seq[(Long, Int)]): String = {
+    val src = TestSpark.tmpDir("inc-set-src")
+    val root = TestSpark.tmpDir("inc-set-root")
+    orders.map { case (k, c, d) => (k, c, "F", 1.0, ts(s"$d 00:00:00"), "1-URGENT") }
+      .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+        "o_orderdate", "o_orderpriority")
+      .write.mode("overwrite").parquet(s"$src/orders.parquet")
+    items.map { case (k, n) => (k, n, 100L, 1.0) }
+      .toDF("l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice")
+      .write.mode("overwrite").parquet(s"$src/lineitem.parquet")
+    Seq((10L, "A")).toDF("c_custkey", "c_name")
+      .write.mode("overwrite").parquet(s"$src/customer.parquet")
+    Seq((100L, "p1")).toDF("p_partkey", "p_name")
+      .write.mode("overwrite").parquet(s"$src/part.parquet")
+    Landing.explode(spark, src, s"$root/landing", periodFmt = "yyyy")
+    root
+  }
+
+  /** Bronze orders as "key/cust/date", items as "key/line/period", and
+    * the tech log as "file status orders items note at", each sorted.
+    */
+  private def endState(root: String): (Seq[String], Seq[String], Seq[String]) = {
+    val fps = Landing.readManifest(spark, s"$root/landing").map(f => f.file -> f.fingerprint).toMap
+    val log = Incremental.readTechLog(spark, s"$root/bronze").sortBy(_.file_name).map { e =>
+      assert(e.fingerprint == fps(e.file_name), s"${e.file_name} logged a stale fingerprint")
+      s"${e.file_name} ${e.status} ${e.rows_orders} ${e.rows_items} ${e.note} ${e.processed_at}"
+    }
+    val orders = spark.read.parquet(s"$root/bronze/orders")
+      .selectExpr("concat_ws('/', o_orderkey, o_custkey, to_date(o_orderdate))")
+      .as[String].collect().toSeq.sorted
+    val items = spark.read.parquet(s"$root/bronze/lineitem")
+      .selectExpr("concat_ws('/', l_orderkey, l_linenumber, period)")
+      .as[String].collect().toSeq.sorted
+    (orders, items, log)
+  }
+
+  test("the set pass keeps the loop's end state: shared keys, mid-run gate failure") {
+    // order 1 lands in 1995 AND 1996 (landing files its items under both
+    // periods): only the first file keeps it, with its items; order 2 is
+    // duplicated inside 1995, and a duplicate within one file is kept
+    val shared = land(
+      Seq((Some(1L), 10L, "1995-03-01"), (Some(2L), 11L, "1995-07-01"),
+        (Some(2L), 13L, "1995-09-01"), (Some(1L), 12L, "1996-02-01"),
+        (Some(3L), 10L, "1996-05-01")),
+      Seq((1L, 1), (1L, 2), (2L, 1), (3L, 1)))
+    Incremental.run(spark, s"$shared/landing", s"$shared/bronze")
+    val (orders1, items1, log1) = endState(shared)
+    assert(orders1 == Seq("1/10/1995-03-01", "2/11/1995-07-01", "2/13/1995-09-01",
+      "3/10/1996-05-01"))
+    assert(items1 == Seq("1/1/1995", "1/2/1995", "2/1/1995", "2/1/1995", "3/1/1996"))
+    assert(log1 == Seq(
+      "customer_full OK 1 0 OK: replaced 1 2024-01-01 01:00:00.0",
+      "orders_1995 OK 3 4 OK: inserted 3 2024-01-01 01:00:00.0",
+      "orders_1996 OK 1 1 OK: inserted 1 2024-01-01 01:00:00.0",
+      "part_full OK 1 0 OK: replaced 1 2024-01-01 01:00:00.0"))
+
+    // a null key in the middle file of three: the first file is ingested
+    // and logged; the failing file, the later one and the dims are not
+    val failing = land(
+      Seq((Some(1L), 10L, "1995-03-01"), (Some(2L), 11L, "1995-08-01"),
+        (Some(3L), 10L, "1996-01-01"), (None, 12L, "1996-04-01"),
+        (Some(4L), 11L, "1997-02-01")),
+      Seq((1L, 1), (2L, 1), (3L, 1), (4L, 1)))
+    val e = intercept[graft.engine.Quality.QualityGateException] {
+      Incremental.run(spark, s"$failing/landing", s"$failing/bronze")
+    }
+    assert(e.getMessage == "quality gate failed: not_null(o_orderkey)=1")
+    val (orders2, items2, log2) = endState(failing)
+    assert(orders2 == Seq("1/10/1995-03-01", "2/11/1995-08-01"))
+    assert(items2 == Seq("1/1/1995", "2/1/1995"))
+    assert(log2 == Seq("orders_1995 OK 2 2 OK: inserted 2 2024-01-01 01:00:00.0"))
+    assert(Seq("customer", "part").forall(d => !new java.io.File(s"$failing/bronze/$d").exists()),
+      "a gate failure must not touch the dims")
+  }
+
   test("explode fails loudly on an EMPTY orders table (no 0-anchored grain)") {
     // On empty input min/max(year) are null, and getAs[Int] unboxes
     // null to 0 silently — without the NonEmpty gate explode would
