@@ -65,6 +65,19 @@ object Analytics {
   private def moneySum(c: Column): Column =
     sum(c.cast(org.apache.spark.sql.types.DecimalType(18, 6)))
 
+  /** `c` (a DOUBLE) rounded to `digits` decimals the way the oracle rounds
+    * a DOUBLE: DuckDB's `ROUND(x, n)` is C's `round(x * 10^n) / 10^n`, on
+    * the binary value, while Spark's `round(x, n)` rounds x's shortest
+    * decimal string half-up (8871.845 is 8871.8449999…: DuckDB gives
+    * 8871.84, Spark 8871.85). Rounding `c * 10^n` to an integer in
+    * Spark is exact: a double whose shortest string ends in .5 is
+    * exactly k + 0.5, and both engines then round it away from zero.
+    */
+  def roundDouble(c: Column, digits: Int = 2): Column = {
+    val scale = math.pow(10, digits)
+    round(c * scale, 0) / scale
+  }
+
   def kpis(fact: DataFrame, dimCustomer: DataFrame, states: Seq[String] = Nil): DataFrame = {
     val perOrder = stateGate(factWithState(fact, dimCustomer), states)
       .groupBy(col("order_id"))
@@ -74,17 +87,17 @@ object Analytics {
         moneySum(col("freight_value")).as("freight_value"))
     perOrder.agg(
       round(sum(col("order_revenue")), 2).cast("double").as("total_sales"),
-      round(avg(col("delivery_time_days")), 2).as("avg_delivery"),
+      roundDouble(avg(col("delivery_time_days"))).as("avg_delivery"),
       count(lit(1)).as("total_orders"),
       // divide by count(<col>), not count(*): SUM(decimal)/COUNT must keep
       // AVG's NULL semantics (NULL rows excluded from the denominator) or
       // it silently diverges from the reference dashboard's AVG the day a
       // money column carries a NULL — and the oracle gate can't catch it,
       // since both engines would drift together
-      round(sum(col("freight_value")).cast("double")
-        / count(col("freight_value")), 2).as("avg_freight"),
-      round(sum(col("order_revenue")).cast("double")
-        / count(col("order_revenue")), 2).as("avg_order_value"))
+      roundDouble(sum(col("freight_value")).cast("double")
+        / count(col("freight_value"))).as("avg_freight"),
+      roundDouble(sum(col("order_revenue")).cast("double")
+        / count(col("order_revenue"))).as("avg_order_value"))
   }
 
   /** Top-10 categories by revenue — reference `dashboard/queries.py:40-52`.
@@ -117,7 +130,7 @@ object Analytics {
       .groupBy(col("order_id"), col("customer_state"))
       .agg(max(col("delivery_time_days")).as("delivery_time_days"))
       .groupBy(col("customer_state"))
-      .agg(round(avg(col("delivery_time_days")), 2).as("avg_delivery_days"))
+      .agg(roundDouble(avg(col("delivery_time_days"))).as("avg_delivery_days"))
       .orderBy(col("avg_delivery_days").desc, col("customer_state"))
 
   /** Avg freight per state, order grain first — reference
@@ -129,8 +142,8 @@ object Analytics {
       .groupBy(col("order_id"), col("customer_state"))
       .agg(moneySum(col("freight_value")).as("freight_value"))
       .groupBy(col("customer_state"))
-      .agg(round(sum(col("freight_value")).cast("double")
-        / count(col("freight_value")), 2) // count(col): AVG NULL semantics
+      .agg(roundDouble(sum(col("freight_value")).cast("double")
+        / count(col("freight_value"))) // count(col): AVG NULL semantics
         .as("avg_freight"))
       .orderBy(col("avg_freight").desc, col("customer_state"))
 

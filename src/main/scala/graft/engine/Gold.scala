@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Materialized medallion layers (the reference's CTAS persistence —
   * `etl/tasks/silver.py:29-62`, `etl/tasks/gold.py:12-65` — SURVEY §2.1
@@ -25,12 +26,20 @@ import org.apache.spark.sql.functions._
   * calendar grain. Month grain on a long-history corpus (the
   * time-shifted rehearsal: 7,900 months at sf10) shattered the fact
   * into 7,900 tiny files — measured +17 s of footer/listing overhead on
-  * EVERY fact scan — while year grain on a driver-scale corpus would
-  * give one partition. [[periodGrain]] picks month unless the month
-  * count blows past [[maxPartitions]] (then year); [[adaptiveFanout]]
-  * adds writer tasks per partition only above a row floor. At the
-  * driver's gate scales (79 months) both collapse to exactly the
-  * reference's month-partitioned, 4-way-salted layout.
+  * EVERY fact scan. [[periodGrain]] picks month only when an average
+  * month holds [[fanoutRowFloor]] lineitems and the month count stays
+  * under [[maxPartitions]], else year; [[adaptiveFanout]] adds writer
+  * tasks per partition only above the same row floor. At the gate
+  * scales (sf0.001–sf0.1: at most 600k lineitems over 79 months) the
+  * fact is year-partitioned with one file per year; the reference's
+  * month-partitioned, 4-way-salted layout is what a corpus with 250k+
+  * lineitems per month gets.
+  *
+  * Every table is read back with the schema it was written with, kept
+  * next to the layer root in [[ensure]]'s memo: a reader resolves its
+  * relation from that schema and the directory listing, so building a
+  * query over gold starts no Spark job (schema inference is one job per
+  * read).
   */
 object Gold {
 
@@ -70,12 +79,16 @@ object Gold {
     */
   val maxPartitions = 256L
 
-  /** Calendar grain for `months` distinct order months: month while the
-    * partition count stays sane, else year. Returns the date_format
-    * pattern for the `order_period` partition column.
+  /** Calendar grain for `rows` lineitems over `months` distinct order
+    * months: month while an average month holds at least
+    * [[fanoutRowFloor]] rows and the partition count stays sane, else
+    * year (a month below the floor is a tiny file, and each file costs
+    * every scan a footer read). Returns the date_format pattern for the
+    * `order_period` partition column.
     */
-  def periodGrain(months: Long): String =
-    if (months <= maxPartitions) "yyyy-MM" else "yyyy"
+  def periodGrain(months: Long, rows: Long): String =
+    if (months <= maxPartitions && rows / math.max(1L, months) >= fanoutRowFloor) "yyyy-MM"
+    else "yyyy"
 
   /** The one salted partitioned-write shape (used by the gold fact and
     * both landing splits, asserted in GoldSpec): pure
@@ -94,12 +107,19 @@ object Gold {
     repart.write.mode("overwrite").partitionBy(partCol).parquet(dir)
   }
 
+  /** What [[ensure]] wrote for an sfDir: the layer root and the schema
+    * each table was written with, by table name.
+    */
+  private final case class Layers(dir: String, schemas: Map[String, StructType])
+
   /** Write silver + gold parquet for sfDir if this JVM hasn't yet; returns
     * the layer root (under the build dir, never the read-only testdata).
     * Thread-safe; runs at most once per (JVM, sfDir).
     */
-  def ensure(spark: SparkSession, sfDir: String): String =
-    Workdirs.materializeOnce("graft-layers", sfDir) { dir =>
+  def ensure(spark: SparkSession, sfDir: String): String = layers(spark, sfDir).dir
+
+  private def layers(spark: SparkSession, sfDir: String): Layers =
+    Workdirs.memoOnce("graft-layers", sfDir) { dir =>
       import scala.concurrent.Future
       import scala.concurrent.ExecutionContext.Implicits.global
       // fail-fast quality gate between bronze and silver (§2.11): one
@@ -114,7 +134,8 @@ object Gold {
       // the cache: two full passes per silver, four jobs instead of two
       // (at sf10 the silvers are tens of millions of rows; every saved
       // pass is real setup wall-clock).
-      val so = Medallion.silverOrders(Tables.orders(spark, sfDir)).persist()
+      val orders = Tables.orders(spark, sfDir) // feeds silver and dim_time
+      val so = Medallion.silverOrders(orders).persist()
       val sl = Medallion.silverLineitem(Tables.lineitem(spark, sfDir)).persist()
       // released on every exit, a failed gate included: a cached silver
       // outliving its materialization would pin memory for the session
@@ -133,54 +154,64 @@ object Gold {
         // canonicalized to its exact ≤4-decimal value (the t01 disc_price
         // argument; the oracle factSql applies the same canonicalization).
         // size the fact's layout from the gate rows (zero extra passes):
-        // distinct order months pick the calendar grain, lineitem count
-        // (the gate's own __rows counter) over the grain's partition count
-        // sizes the fan-out — hot periods fan out, tiny ones don't shatter
-        // into salt-files
+        // distinct order months and the lineitem count (the gate's own
+        // __rows counter) pick the calendar grain and, over the grain's
+        // partition count, the fan-out — hot periods fan out, tiny ones
+        // don't shatter into salt-files
         val months = math.max(1L, soStats.getAs[Long]("__months"))
-        val grain = periodGrain(months)
+        val items = slStats.getLong(0)
+        val grain = periodGrain(months, items)
         val periods =
           if (grain == "yyyy-MM") months else math.max(1L, months / 12)
-        val factFanout = adaptiveFanout(slStats.getLong(0), periods)
+        val factFanout = adaptiveFanout(items, periods)
         val fact = Medallion.factSales(so, sl)
-          .withColumn("price",
-            col("price").cast(org.apache.spark.sql.types.DecimalType(18, 4)))
-          .withColumn("freight_value",
-            col("freight_value").cast(org.apache.spark.sql.types.DecimalType(18, 4)))
+          .withColumn("price", col("price").cast(DecimalType(18, 4)))
+          .withColumn("freight_value", col("freight_value").cast(DecimalType(18, 4)))
           .withColumn("order_period",
             date_format(col("order_purchase_timestamp"), grain))
+        // each write returns the schema its frame was written with (the
+        // dims' source reads run inside their futures, so their
+        // schema-inference jobs overlap too)
+        def write(table: String, df: => DataFrame,
+                  save: (DataFrame, String) => Unit = _.write.mode("overwrite").parquet(_)) =
+          Future { val d = df; save(d, s"$dir/$table"); table -> d.schema }
         // the six layer writes are independent of each other — submit them
         // as concurrent Spark jobs (FIFO-scheduled over the same executor
         // pool) instead of serially leaving the cluster idle between
         // write barriers; driver threads are a standard way to overlap
         // independent jobs in one session
         val writes = Seq(
-          Future(so.write.mode("overwrite").parquet(s"$dir/silver_orders")),
-          Future(sl.write.mode("overwrite").parquet(s"$dir/silver_lineitem")),
-          Future(saltedPartitionedWrite(fact, "order_period", col("order_id"),
-            s"$dir/fact_sales", factFanout)),
-          Future(Medallion.dimCustomer(
-              Tables.customer(spark, sfDir), Tables.nation(spark, sfDir),
-              Tables.region(spark, sfDir))
-            .write.mode("overwrite").parquet(s"$dir/dim_customers")),
-          Future(Medallion.dimPart(Tables.part(spark, sfDir))
-            .write.mode("overwrite").parquet(s"$dir/dim_products")),
-          Future(Medallion.dimDate(Tables.orders(spark, sfDir))
-            .write.mode("overwrite").parquet(s"$dir/dim_time")))
+          write("silver_orders", so),
+          write("silver_lineitem", sl),
+          write("fact_sales", fact,
+            saltedPartitionedWrite(_, "order_period", col("order_id"), _, factFanout)),
+          write("dim_customers", Medallion.dimCustomer(Tables.customer(spark, sfDir),
+            Tables.nation(spark, sfDir), Tables.region(spark, sfDir))),
+          write("dim_products", Medallion.dimPart(Tables.part(spark, sfDir))),
+          write("dim_time", Medallion.dimDate(orders)))
         // settle ALL futures before propagating a failure: rethrowing on
         // the first error while sibling writes are still running would let
         // a retry start a second overwrite of the same paths concurrently
         // with the stragglers of the failed attempt
         Workdirs.settleAll(writes)
+        Layers(dir, writes.map(_.value.get.get).toMap) // all settled and succeeded
       } finally { so.unpersist(); sl.unpersist() }
     }
 
+  /** Gold/silver `table` of sfDir, read with the schema [[ensure]] wrote
+    * it with: no schema-inference job, and a partition column keeps its
+    * written type (a yearly `order_period` stays a string).
+    */
+  private def read(spark: SparkSession, sfDir: String, table: String): DataFrame = {
+    val l = layers(spark, sfDir)
+    spark.read.schema(l.schemas(table)).parquet(s"${l.dir}/$table")
+  }
+
   def silverOrders(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/silver_orders")
+    read(spark, sfDir, "silver_orders")
 
   def silverLineitem(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/silver_lineitem")
-
+    read(spark, sfDir, "silver_lineitem")
   /** Gold fact in the canonical column order of [[Medallion.factSales]]
     * (the `order_period` partition column stays available for pruning but
     * is projected away here so downstream schemas are unchanged).
@@ -203,16 +234,16 @@ object Gold {
     * representation in between.
     */
   def factDecimal(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/fact_sales")
+    read(spark, sfDir, "fact_sales")
       .select("order_id", "line_id", "customer_id", "product_id", "price",
         "freight_value", "order_purchase_timestamp", "delivery_time_days")
 
   def dimCustomer(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/dim_customers")
+    read(spark, sfDir, "dim_customers")
 
   def dimPart(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/dim_products")
+    read(spark, sfDir, "dim_products")
 
   def dimDate(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/dim_time")
+    read(spark, sfDir, "dim_time")
 }

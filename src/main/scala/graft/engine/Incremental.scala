@@ -1,8 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The Phase-2 incremental bronze pipeline (SURVEY §2.10; reference
   * `scripts/bronze_incremental.py`):
@@ -28,6 +29,14 @@ import org.apache.spark.sql.functions._
   * the sorted per-file loop's (see [[run]]). So a run starts the same
   * jobs for 3 files as for 300, and the tech log is rewritten once per
   * run instead of once per file (O(files²) writes).
+  *
+  * Every read declares the schema its table was written with: landing
+  * and bronze tables the one [[Landing.explode]] recorded next to the
+  * manifest (bronze holds landing rows), `_stage` the staged frame's own,
+  * the tech log [[LogEntry]]'s and the manifest its fixed one. So a run
+  * starts no schema-inference job, a landing `period` reads back as the
+  * manifest's string, and a file that lost a column or changed a type
+  * fails the read or throws a named error instead of being ingested.
   *
   * Scale posture: every data move is a distributed anti/semi-join shuffle
   * on the natural key + a parquet append; the only driver-side state is
@@ -62,12 +71,30 @@ object Incremental {
   /** Missing log ⇒ first run ⇒ empty; any OTHER failure (half-written
     * file, schema drift) propagates — silently treating corruption as
     * "no log yet" would let a rerun rewrite every entry's counts to 0.
+    * The log is read with [[LogEntry]]'s schema, not an inferred one: a
+    * column whose type changed fails the parquet read, and a missing
+    * column (which reads as nulls; every written entry has every field)
+    * throws [[CorruptTechLogException]]. So does a log directory with no
+    * entries: the engine never writes an empty log, and an overwrite
+    * torn after Spark deleted the old files leaves exactly that.
     */
   def readTechLog(spark: SparkSession, bronzeRoot: String): Seq[LogEntry] = {
-    import spark.implicits._
-    if (!Workdirs.exists(spark, techLogPath(bronzeRoot))) Nil
-    else spark.read.parquet(techLogPath(bronzeRoot)).as[LogEntry].collect().toSeq
+    val path = techLogPath(bronzeRoot)
+    if (!Workdirs.exists(spark, path)) Nil
+    else {
+      val rows = spark.read.schema(Encoders.product[LogEntry].schema).parquet(path).collect()
+      if (rows.isEmpty) throw new CorruptTechLogException(path, "no entries")
+      rows.toSeq.map { r =>
+        if (r.anyNull) throw new CorruptTechLogException(path, s"incomplete entry $r")
+        LogEntry(r.getString(0), r.getString(1), r.getTimestamp(2), r.getString(3),
+          r.getLong(4), r.getLong(5), r.getString(6))
+      }
+    }
   }
+
+  /** The tech log directory holds no entry, or an entry lacks a field. */
+  final class CorruptTechLogException(path: String, detail: String)
+    extends IllegalStateException(s"corrupt tech log $path: $detail")
 
   /** Upsert-by-rewrite of the (tiny, file-count-bounded) tech log — the
     * parquet stand-in for the reference's `ON CONFLICT DO UPDATE`.
@@ -89,7 +116,7 @@ object Incremental {
         e.copy(note = e.note.stripPrefix("SKIP: "))
       else e
     }
-    writeTechLog(spark, bronzeRoot, repaired)
+    if (repaired.nonEmpty) writeTechLog(spark, bronzeRoot, repaired) // no log yet: none to repair
   }
 
   /** One incremental run over a landing zone. Returns this run's log
@@ -106,6 +133,9 @@ object Incremental {
     */
   def run(spark: SparkSession, landingRoot: String, bronzeRoot: String): Seq[LogEntry] = {
     val manifest = Landing.readManifest(spark, landingRoot)
+    // every landing read, and every bronze read (bronze tables hold landing
+    // rows), declares the schema explode wrote: no inference job
+    lazy val schemas = Landing.schemas(spark, landingRoot)
     val priorLog = readTechLog(spark, bronzeRoot)
     val prior = priorLog.map(e => e.file_name -> e).toMap
     val runTs = nextRunTs(priorLog)
@@ -124,7 +154,7 @@ object Incremental {
     val fresh = orderFiles.filterNot(processed).map(period)
     val (counts, failure) =
       if (fresh.isEmpty) (Map.empty[String, (Long, Long)], None)
-      else ingestOrders(spark, landingRoot, bronzeRoot, fresh)
+      else ingestOrders(spark, landingRoot, bronzeRoot, fresh, schemas)
     val orderEntries = orderFiles.takeWhile(f => !failure.exists(_._1 == period(f))).map { f =>
       counts.get(period(f)).fold(skip(f)) { case (nOrders, nItems) =>
         LogEntry(f.file, f.fingerprint, runTs, "OK", nOrders, nItems, s"OK: inserted $nOrders")
@@ -136,7 +166,7 @@ object Incremental {
         if (processed(f)) skip(f)
         else {
           val name = f.file.stripSuffix("_full")
-          val df = spark.read.parquet(s"$landingRoot/$name")
+          val df = spark.read.schema(schemas(name)).parquet(s"$landingRoot/$name")
           val n = df.count()
           df.write.mode("overwrite").parquet(s"$bronzeRoot/$name") // full REPLACE
           LogEntry(f.file, f.fingerprint, runTs, "OK", n, 0L, s"OK: replaced $n")
@@ -155,29 +185,36 @@ object Incremental {
     * first failing period with its gate exception, if any.
     */
   private def ingestOrders(spark: SparkSession, landingRoot: String, bronzeRoot: String,
-                           fresh: Seq[String])
+                           fresh: Seq[String], schemas: Map[String, StructType])
       : (Map[String, (Long, Long)], Option[(String, Quality.QualityGateException)]) = {
     val ordersDir = s"$bronzeRoot/orders"
     val itemsDir = s"$bronzeRoot/lineitem"
     val stage = s"$bronzeRoot/_stage"
     def firstFailure(gate: Seq[(String, Long, Seq[Quality.Violation])]) =
       gate.collectFirst { case (p, _, v) if v.nonEmpty => p -> new Quality.QualityGateException(v) }
-    // landing and bronze items are partitioned by period; read back, a
-    // yearly period is inferred as an int, so compare the manifest's string
-    def within(dir: String, periods: Seq[String]) =
-      spark.read.parquet(dir).withColumn("period", col("period").cast("string"))
-        .filter(col("period").isin(periods: _*))
+    // landing orders and lineitem, and bronze lineitem, are partitioned
+    // by a string `period`; bronze orders are landing orders without it
+    val orderSchema = schemas("orders")
+    val itemSchema = schemas("lineitem")
+    val bronzeOrderSchema = StructType(orderSchema.filterNot(_.name == "period"))
+    def within(dir: String, schema: StructType, periods: Seq[String]) =
+      spark.read.schema(schema).parquet(dir).filter(col("period").isin(periods: _*))
+    // a staged frame is read back with the schema it was just written with
+    def staged(df: DataFrame, table: String) = {
+      df.write.mode("overwrite").parquet(s"$stage/$table")
+      spark.read.schema(df.schema).parquet(s"$stage/$table")
+    }
 
     // one order gate over every new period (a period the manifest lists
     // but landing holds no rows for fails NonEmpty)
     val orderFailure = firstFailure(Quality.validateBy(
-      within(s"$landingRoot/orders", fresh), "period", fresh,
+      within(s"$landingRoot/orders", orderSchema, fresh), "period", fresh,
       Seq(Quality.NonEmpty, Quality.NotNull("o_orderkey"), Quality.NotNull("o_custkey"))))
     val gated = fresh.takeWhile(p => !orderFailure.exists(_._1 == p))
-    def newTo(df: DataFrame, dir: String, keys: String*) =
+    def newTo(df: DataFrame, dir: String, schema: StructType, keys: String*) =
       if (!Workdirs.exists(spark, dir)) df
-      else df.join((if (keys.contains("period")) within(dir, gated) else spark.read.parquet(dir))
-        .select(keys.map(col): _*), keys, "left_anti")
+      else df.join((if (keys.contains("period")) within(dir, schema, gated)
+        else spark.read.schema(schema).parquet(dir)).select(keys.map(col): _*), keys, "left_anti")
     if (gated.isEmpty) (Map.empty, orderFailure)
     else try {
       // Stage new rows BEFORE appending: appending to a path refreshes
@@ -186,21 +223,22 @@ object Incremental {
       // append and find nothing. Staging is also the crash-safe pattern
       // at scale (append is a rename-in). A key new to bronze in several
       // periods is kept only in the first, as a per-file loop would.
-      newTo(within(s"$landingRoot/orders", gated), ordersDir, "o_orderkey")
-        .withColumn("__first", min(col("period")).over(Window.partitionBy(col("o_orderkey"))))
-        .filter(col("period") === col("__first")).drop("__first")
-        .write.mode("overwrite").parquet(s"$stage/orders")
-      val newOrders = spark.read.parquet(s"$stage/orders")
+      val newOrders = staged(
+        newTo(within(s"$landingRoot/orders", orderSchema, gated),
+            ordersDir, bronzeOrderSchema, "o_orderkey")
+          .withColumn("__first", min(col("period")).over(Window.partitionBy(col("o_orderkey"))))
+          .filter(col("period") === col("__first")).drop("__first"),
+        "orders")
 
       // items of NEW orders only, in their order's period (semi-join
       // J7), then composite-key anti-join (J6), staged the same way;
       // both item scans prune to the new periods
-      newTo(within(s"$landingRoot/lineitem", gated)
-          .join(newOrders.select(col("o_orderkey").as("l_orderkey"), col("period")),
-            Seq("l_orderkey", "period"), "left_semi"),
-        itemsDir, "l_orderkey", "l_linenumber", "period")
-        .write.mode("overwrite").parquet(s"$stage/lineitem")
-      val newItems = spark.read.parquet(s"$stage/lineitem")
+      val newItems = staged(
+        newTo(within(s"$landingRoot/lineitem", itemSchema, gated)
+            .join(newOrders.select(col("o_orderkey").as("l_orderkey"), col("period")),
+              Seq("l_orderkey", "period"), "left_semi"),
+          itemsDir, itemSchema, "l_orderkey", "l_linenumber", "period"),
+        "lineitem")
 
       val orderRows = Quality.validateBy(newOrders, "period", gated, Nil)
       val itemGate = Quality.validateBy(newItems, "period", gated,

@@ -1,7 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkException
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Landing zone: period-split order files + full dimension dumps + a
   * fingerprint manifest — the reference's `scripts/esplosione_dati.py`
@@ -18,6 +20,10 @@ import org.apache.spark.sql.functions._
   * (see Incremental.run) — reprocessing picks up NEW keys in the changed
   * file; corrections to already-ingested rows are dim-style full-replace
   * territory, not order-append territory.
+  *
+  * Next to the manifest, `_schemas.json` records the schema each landing
+  * table was written with; [[Incremental.run]] reads landing and bronze
+  * with it instead of inferring it (one Spark job per inferred read).
   */
 object Landing {
 
@@ -76,34 +82,55 @@ object Landing {
     // whose order is absent gets a null period (hive default partition)
     // and is never ingested — matching the semi-join-on-new-orders
     // semantics
-    Gold.saltedPartitionedWrite(
-      Tables.lineitem(spark, sfDir)
-        .join(orders.select(col("o_orderkey").as("__ok"), col("period")),
-          col("l_orderkey") === col("__ok"), "left")
-        .drop("__ok"),
-      "period", col("l_orderkey"), s"$landingRoot/lineitem")
-    Tables.customer(spark, sfDir).write.mode("overwrite")
-      .parquet(s"$landingRoot/customer")
-    Tables.part(spark, sfDir).write.mode("overwrite")
-      .parquet(s"$landingRoot/part")
+    val items = Tables.lineitem(spark, sfDir)
+      .join(orders.select(col("o_orderkey").as("__ok"), col("period")),
+        col("l_orderkey") === col("__ok"), "left")
+      .drop("__ok")
+    Gold.saltedPartitionedWrite(items, "period", col("l_orderkey"), s"$landingRoot/lineitem")
+    val dims = Seq("customer" -> "c_custkey", "part" -> "p_partkey").map {
+      case (name, key) =>
+        val dim = Tables.load(spark, sfDir, name)
+        dim.write.mode("overwrite").parquet(s"$landingRoot/$name")
+        (name, key, dim)
+    }
 
     val orderCols = orders.columns.filterNot(_ == "period").toSeq
     val orderFps = orders.groupBy(col("period"))
       .agg(fingerprintAgg("o_orderkey", orderCols).as("fp"), count(lit(1)).as("rows"))
       .collect()
       .map(r => LandingFile(s"orders_${r.getString(0)}", r.getString(1), r.getLong(2)))
-    val dimFps = Seq("customer" -> "c_custkey", "part" -> "p_partkey").map {
-      case (name, key) =>
-        val dim = spark.read.parquet(s"$landingRoot/$name")
-        val r = dim
-          .agg(fingerprintAgg(key, dim.columns.toSeq).as("fp"), count(lit(1)).as("rows"))
-          .collect()(0)
-        LandingFile(s"${name}_full", r.getString(0), r.getLong(1))
+    // fingerprinted from the frame just written, not a read-back of it:
+    // the same rows and types, without a schema-inference job
+    val dimFps = dims.map { case (name, key, dim) =>
+      val r = dim
+        .agg(fingerprintAgg(key, dim.columns.toSeq).as("fp"), count(lit(1)).as("rows"))
+        .collect()(0)
+      LandingFile(s"${name}_full", r.getString(0), r.getLong(1))
     }
+    writeSchemas(spark, landingRoot, Seq("orders" -> orders.schema,
+      "lineitem" -> items.schema) ++ dims.map { case (name, _, dim) => name -> dim.schema })
     val manifest = (orderFps.toSeq ++ dimFps).sortBy(_.file)
     writeManifest(spark, landingRoot, manifest)
     manifest
   }
+
+  private def schemasPath(landingRoot: String) = s"$landingRoot/_schemas.json"
+
+  /** Record, next to the manifest, the schema each landing table was
+    * written with (orders and lineitem with their string `period`
+    * partition column): one struct field per table, as Spark's JSON
+    * rendering of a [[StructType]].
+    */
+  private def writeSchemas(spark: SparkSession, landingRoot: String,
+                           tables: Seq[(String, StructType)]): Unit =
+    Workdirs.writeString(spark, schemasPath(landingRoot),
+      StructType(tables.map { case (name, schema) => StructField(name, schema) }).json)
+
+  /** The schema [[explode]] wrote each landing table with, by table name. */
+  def schemas(spark: SparkSession, landingRoot: String): Map[String, StructType] =
+    DataType.fromJson(Workdirs.readString(spark, schemasPath(landingRoot)))
+      .asInstanceOf[StructType].fields
+      .map(f => f.name -> f.dataType.asInstanceOf[StructType]).toMap
 
   /** Manifest as a JSON dataset (S12): one `{"file","fingerprint","rows"}`
     * object per line, written/read with Spark's JSON source.
@@ -115,10 +142,27 @@ object Landing {
       .json(s"$landingRoot/_manifest")
   }
 
+  /** The manifest, read with its fixed schema (no inference job). A
+    * malformed line fails the read (FAILFAST), a line missing a field
+    * would read as nulls, and a manifest with no entry (explode gates
+    * orders NonEmpty, so it never writes one) is an uncommitted write:
+    * each throws [[CorruptManifestException]] instead of yielding a null
+    * entry or a run that silently ingests nothing.
+    */
   def readManifest(spark: SparkSession, landingRoot: String): Seq[LandingFile] = {
-    import spark.implicits._
-    spark.read.json(s"$landingRoot/_manifest")
-      .select(col("file"), col("fingerprint"), col("rows").cast("long"))
-      .as[LandingFile].collect().toSeq.sortBy(_.file)
+    val dir = s"$landingRoot/_manifest"
+    val rows =
+      try spark.read.schema(Encoders.product[LandingFile].schema)
+        .option("mode", "FAILFAST").json(dir).collect()
+      catch { case e: SparkException => throw new CorruptManifestException(dir, e.getMessage, e) }
+    if (rows.isEmpty) throw new CorruptManifestException(dir, "no entries", null)
+    rows.toSeq.map { r =>
+      if (r.anyNull) throw new CorruptManifestException(dir, s"incomplete entry $r", null)
+      LandingFile(r.getString(0), r.getString(1), r.getLong(2))
+    }.sortBy(_.file)
   }
+
+  /** The manifest cannot be parsed, holds no entry, or an entry lacks a field. */
+  final class CorruptManifestException(dir: String, detail: String, cause: Throwable)
+    extends IllegalStateException(s"corrupt landing manifest $dir: $detail", cause)
 }

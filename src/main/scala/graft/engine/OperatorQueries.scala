@@ -173,13 +173,13 @@ object OperatorQueries {
     "o15_pivot" -> ((s, d) =>
       lineitem(s, d).groupBy(col("l_returnflag"))
         .pivot("l_linestatus", Seq("F", "O"))
-        .agg(round(sum(col("l_quantity")), 2))
+        .agg(Analytics.roundDouble(sum(col("l_quantity")), 2))
         .orderBy("l_returnflag")),
 
     // rollup with subtotal rows (keys coalesced to 'ALL' for determinism)
     "o16_rollup" -> ((s, d) =>
       lineitem(s, d).rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("cnt"), round(sum(col("l_quantity")), 2).as("qty"))
+        .agg(count(lit(1)).as("cnt"), Analytics.roundDouble(sum(col("l_quantity")), 2).as("qty"))
         .select(
           coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
           coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
@@ -203,7 +203,7 @@ object OperatorQueries {
         .select(col("event_type"),
           regexp_extract(col("props"), "\"k\":\\s*(\\d+)", 1).cast("long").as("k"))
         .groupBy("event_type")
-        .agg(count(lit(1)).as("cnt"), round(avg(col("k")), 2).as("avg_k"))
+        .agg(count(lit(1)).as("cnt"), Analytics.roundDouble(avg(col("k")), 2).as("avg_k"))
         .orderBy("event_type")),
 
     // LEFT OUTER join + null-aware aggregation: every customer with the
@@ -431,7 +431,7 @@ object OperatorQueries {
         .join(nation(s, d), col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("n_name"), col("c_acctbal"))
         .withColumn("decile", ntile(10).over(w).cast("long"))
-        .withColumn("prank", round(percent_rank().over(w), 6))
+        .withColumn("prank", Analytics.roundDouble(percent_rank().over(w), 6))
         .orderBy("n_name", "c_acctbal", "c_custkey")
         .select(col("c_custkey"), col("n_name"), col("c_acctbal"),
           col("decile"), col("prank"))

@@ -36,7 +36,7 @@ object SimilarityQueries {
     // the top-k cut still use the unrounded value inside ivfTopK
     "x01_ann_ivf" -> ((s, d) =>
       Similarity.ivfTopK(embeddings(s, d), nQueries = 10, k = 5, nprobe = 2)
-        .withColumn("cos", round(col("cos"), 6))
+        .withColumn("cos", Analytics.roundDouble(col("cos"), 6))
         .orderBy(col("query_id"), col("cos").desc, col("neighbor_id"))),
 
     // the production-shape near-dup: FULL corpus, pairs only within each
@@ -45,7 +45,7 @@ object SimilarityQueries {
     // to 6 decimals on both engines; the threshold filters the raw value.
     "o42_clustered_neardup" -> ((s, d) =>
       Similarity.clusteredNearDup(embeddings(s, d), threshold = 0.4)
-        .withColumn("cos", round(col("cos"), 6))
+        .withColumn("cos", Analytics.roundDouble(col("cos"), 6))
         .orderBy("a", "b")),
 
     // SRP/SimHash-for-vectors near-dup: deterministic ±1 hyperplane
@@ -78,7 +78,7 @@ object SimilarityQueries {
     // Recall vs exact o23 additionally asserted in SimilaritySpec.
     "x07_sq8_ann" -> ((s, d) =>
       Similarity.sq8TopK(embeddings(s, d), nQueries = 10, k = 5, c = 25)
-        .withColumn("cos", round(col("cos"), 6))
+        .withColumn("cos", Analytics.roundDouble(col("cos"), 6))
         .orderBy(col("query_id"), col("cos").desc, col("neighbor_id"))),
 
     // integer-exact Lloyd's k-means (k=8, 3 update rounds) over quantized
@@ -106,7 +106,7 @@ object SimilarityQueries {
     // Similarity.pqTopK); cos rounded to 6 decimals as x01/x07 do.
     "x10_pq_ann" -> ((s, d) =>
       Similarity.pqTopK(embeddings(s, d), nQueries = 10, k = 5, c = 100)
-        .withColumn("cos", round(col("cos"), 6))
+        .withColumn("cos", Analytics.roundDouble(col("cos"), 6))
         .orderBy(col("query_id"), col("cos").desc, col("neighbor_id"))),
 
     // multimodal frame sampling as PURE BUILTINS over the binary column
@@ -181,9 +181,9 @@ object SimilarityQueries {
           element_at(col("features"), 2).as("byte_std"))
         .groupBy("source")
         .agg(count(lit(1)).as("n_media"),
-          round(sum(col("byte_mean").cast("decimal(18,6)")).cast("double")
+          Analytics.roundDouble(sum(col("byte_mean").cast("decimal(18,6)")).cast("double")
             / count(lit(1)), 4).as("avg_byte_mean"),
-          round(sum(col("byte_std").cast("decimal(18,6)")).cast("double")
+          Analytics.roundDouble(sum(col("byte_std").cast("decimal(18,6)")).cast("double")
             / count(lit(1)), 4).as("avg_byte_std"))
         .orderBy("source")
     })

@@ -26,8 +26,8 @@ object TextQueries {
         .agg(
           count(lit(1)).as("n_docs"),
           sum(col("n_tokens")).cast("long").as("total_tokens"),
-          round(avg(col("n_tokens")), 2).as("avg_tokens"),
-          round(avg(col("n_chars")), 2).as("avg_chars"))
+          Analytics.roundDouble(avg(col("n_tokens")), 2).as("avg_tokens"),
+          Analytics.roundDouble(avg(col("n_chars")), 2).as("avg_chars"))
         .orderBy("source")),
 
     // per-doc quality score: token count, a BPE-ish regex token count
@@ -53,7 +53,7 @@ object TextQueries {
         nTok.as("n_tokens"),
         q.getField("n_bpeish").as("n_bpeish"),
         q.getField("n_punct").as("n_punct"),
-        round(stopRatio, 4).as("stopword_ratio"),
+        Analytics.roundDouble(stopRatio, 4).as("stopword_ratio"),
         when(nTok >= 50 && stopRatio.between(0.02, 0.3), "good")
           .when(nTok >= 20, "fair")
           .otherwise("poor").as("quality"))
@@ -100,7 +100,7 @@ object TextQueries {
       val nDocs = docs.agg(count(lit(1)).as("n_docs"))
       val scored = tf.join(df, "term")
         .crossJoin(broadcast(nDocs))
-        .withColumn("tfidf", round(col("tf") *
+        .withColumn("tfidf", Analytics.roundDouble(col("tf") *
           log((col("n_docs") + lit(1.0)) / (col("df") + lit(1.0))), 6))
       scored
         .withColumn("rn", row_number().over(
@@ -270,14 +270,14 @@ object TextQueries {
       val sh2 = TextOps.shinglesText(col("text"), 2) // r21: one-pass kernel
       val base = docs.select(col("doc_id"),
         size(toks).as("n_tokens"),
-        round(lit(1.0) - size(array_distinct(sh2)).cast("double") /
+        Analytics.roundDouble(lit(1.0) - size(array_distinct(sh2)).cast("double") /
           size(sh2).cast("double"), 4).as("dup_2gram_frac"))
       val topTok = docs.select(col("doc_id"), explode(toks).as("tok"))
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
         .groupBy("doc_id").agg(max(col("c")).as("max_tok"))
       base.join(topTok, "doc_id")
         .withColumn("top_token_share",
-          round(col("max_tok").cast("double") / col("n_tokens").cast("double"), 4))
+          Analytics.roundDouble(col("max_tok").cast("double") / col("n_tokens").cast("double"), 4))
         .select(col("doc_id"), col("n_tokens"), col("top_token_share"),
           col("dup_2gram_frac"),
           (col("top_token_share") >= 0.2 || col("dup_2gram_frac") >= 0.05)
@@ -317,7 +317,7 @@ object TextQueries {
         .join(hits, Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_grams"),
           coalesce(col("n_dup"), lit(0L)).as("n_dup_grams"),
-          round(coalesce(col("n_dup"), lit(0L)).cast("double") /
+          Analytics.roundDouble(coalesce(col("n_dup"), lit(0L)).cast("double") /
             col("n_grams").cast("double"), 4).as("dup_frac"))
         .orderBy("doc_id")
     }),
@@ -412,9 +412,9 @@ object TextQueries {
       ranked.agg(
         count(lit(1)).as("n_terms"),
         sum(col("freq")).cast("long").as("total_tokens"),
-        round(regr_slope(log(col("freq")), log(col("rank"))), 4).as("slope"),
-        round(regr_intercept(log(col("freq")), log(col("rank"))), 4).as("intercept"),
-        round(regr_r2(log(col("freq")), log(col("rank"))), 4).as("r2"))
+        Analytics.roundDouble(regr_slope(log(col("freq")), log(col("rank"))), 4).as("slope"),
+        Analytics.roundDouble(regr_intercept(log(col("freq")), log(col("rank"))), 4).as("intercept"),
+        Analytics.roundDouble(regr_r2(log(col("freq")), log(col("rank"))), 4).as("r2"))
     }),
 
     // n-gram/stopword language-ID heuristic vs the labeled lang column
@@ -460,7 +460,7 @@ object TextQueries {
         .crossJoin(broadcast(tot))
         .groupBy("doc_id")
         .agg(count(lit(1)).cast("long").as("n_tokens"),
-          round(avg(-log(2.0, col("c") / col("n"))), 2).as("surprisal"))
+          Analytics.roundDouble(avg(-log(2.0, col("c") / col("n"))), 2).as("surprisal"))
         .orderBy("doc_id")
     }),
 
@@ -543,7 +543,7 @@ object TextQueries {
         .withColumn("score", col("idf") * col("tf") * (lit(k1) + 1.0) /
           (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))))
         .groupBy(col("doc_id"))
-        .agg(round(sum(col("score")), 6).as("bm25"),
+        .agg(Analytics.roundDouble(sum(col("score")), 6).as("bm25"),
           count(lit(1)).as("n_terms_hit"))
         .orderBy(col("bm25").desc, col("doc_id"))
         .limit(15)

@@ -30,7 +30,7 @@ object TpchQueries {
         .filter(col("l_shipdate") <= to_timestamp(lit("1998-09-02")))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
+          Analytics.roundDouble(sum(col("l_quantity")), 2).as("sum_qty"),
           // money sums ride DECIMAL(18,6) — exact and association-order-
           // free; a SUM(double) over 60 M rows drifts in its last ulp and
           // crossed the round(…,2) boundary at the sf10 rehearsal. The
@@ -42,8 +42,8 @@ object TpchQueries {
             .cast("double").as("sum_base_price"),
           round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
             .cast("decimal(18,6)")), 2).cast("double").as("sum_disc_price"),
-          round(avg(col("l_quantity")), 2).as("avg_qty"),
-          round(sum(col("l_discount").cast("decimal(18,6)")).cast("double")
+          Analytics.roundDouble(avg(col("l_quantity")), 2).as("avg_qty"),
+          Analytics.roundDouble(sum(col("l_discount").cast("decimal(18,6)")).cast("double")
             / count(col("l_discount")), 4).as("avg_disc"), // count(col): AVG NULL semantics
           count(lit(1)).as("count_order"))
         .orderBy("l_returnflag", "l_linestatus")),
@@ -154,7 +154,7 @@ object TpchQueries {
           col("l_shipdate") < to_timestamp(lit("1996-10-01")))
         .join(part(s, d).select("p_partkey", "p_type"),
           col("l_partkey") === col("p_partkey"))
-        .agg(round(
+        .agg(Analytics.roundDouble(
           lit(100.0) * sum(when(col("p_type") === "PROMO", rev)
             .otherwise(lit(0).cast("decimal(18,4)"))).cast("double")
             / sum(rev).cast("double"), 2).as("promo_revenue_pct"))
@@ -417,7 +417,7 @@ object TpchQueries {
             (lit(1) - col("l_discount").cast("decimal(18,4)"))).as("volume"),
           col("supp_nation"))
       vol.groupBy(col("o_year"))
-        .agg(round(
+        .agg(Analytics.roundDouble(
           sum(when(col("supp_nation") === "NATION_3", col("volume"))).cast("double") /
             sum(col("volume")).cast("double"), 4).as("mkt_share"))
         .orderBy("o_year")
@@ -521,7 +521,7 @@ object TpchQueries {
         .join(broadcast(nation(s, d).filter(col("n_name") === "NATION_5")
           .select(col("n_nationkey"))), col("s_nationkey") === col("n_nationkey"),
           "left_semi")
-        .select(col("s_name"), round(col("s_acctbal"), 2).as("s_acctbal"))
+        .select(col("s_name"), Analytics.roundDouble(col("s_acctbal"), 2).as("s_acctbal"))
         .orderBy("s_name")
     })
   )

@@ -26,21 +26,39 @@ object Workdirs {
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true): Unit
   }
 
-  private val done = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Write `text` as the whole content of the file at `path`. */
+  def writeString(spark: SparkSession, path: String, text: String): Unit = {
+    val p = new Path(path)
+    val out = p.getFileSystem(spark.sessionState.newHadoopConf()).create(p, true)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  /** The whole content of the file at `path`. */
+  def readString(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    val in = p.getFileSystem(spark.sessionState.newHadoopConf()).open(p)
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  private val done = new java.util.concurrent.ConcurrentHashMap[String, Any]()
 
   /** Filesystem-safe key for an sfDir. */
   def key(sfDir: String): String =
     sfDir.replaceAll("[^A-Za-z0-9.]+", "_").dropWhile(_ == '_')
 
-  /** Run `build` at most once per (JVM, kind, sfDir); returns the
-    * work dir under `target/<kind>/<key>`.
+  /** Run `build` at most once per (JVM, kind, sfDir) on the work dir
+    * `target/<kind>/<key>`; returns what that one run returned.
     */
+  def memoOnce[A](kind: String, sfDir: String)(build: String => A): A =
+    done.computeIfAbsent(s"$kind|$sfDir", _ =>
+      build(new java.io.File(s"target/$kind/${key(sfDir)}").getAbsolutePath))
+      .asInstanceOf[A]
+
+  /** [[memoOnce]] for a build that only writes; returns the work dir. */
   def materializeOnce(kind: String, sfDir: String)(build: String => Unit): String =
-    done.computeIfAbsent(s"$kind|$sfDir", _ => {
-      val dir = new java.io.File(s"target/$kind/${key(sfDir)}").getAbsolutePath
-      build(dir)
-      dir
-    })
+    memoOnce(kind, sfDir) { dir => build(dir); dir }
 
   def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)

@@ -45,4 +45,23 @@ class AnalyticsSpec extends AnyFunSuite {
     val r = Analytics.monthlyTrend(fact, dimC).collect()
     assert(r.length == 1 && r(0).getString(0) == "2020-01" && r(0).getDouble(1) == 70.0)
   }
+
+  test("order-grain averages round the double the way the oracle's ROUND(DOUBLE, 2) does") {
+    // one single-item order per state, so each state's avg_freight is its
+    // freight value; DuckDB rounds the binary value (8871.845 is
+    // 8871.8449999…), Spark's round(x, 2) its shortest decimal string
+    val freights = Seq("S1" -> 8871.845, "S2" -> 1.005, "S3" -> 0.125, "S4" -> 2.675)
+    val oneItemOrders = freights.zipWithIndex.map { case ((_, f), i) =>
+      (i.toLong, 1L, i.toLong, 1L, 1.0, f, ts("2020-01-06 00:00:00"), 1L)
+    }.toDF("order_id", "line_id", "customer_id", "product_id", "price",
+      "freight_value", "order_purchase_timestamp", "delivery_time_days")
+    val states = freights.zipWithIndex.map { case ((st, _), i) => (i.toLong, st) }
+      .toDF("c_custkey", "customer_state")
+    val got = Analytics.avgFreightByState(oneItemOrders, states).collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(got == Map("S1" -> 8871.84, "S2" -> 1.0, "S3" -> 0.13, "S4" -> 2.68))
+    val direct = freights.map(_._2).toDF("x")
+      .select(Analytics.roundDouble($"x")).as[Double].collect().toSeq
+    assert(direct == Seq(8871.84, 1.0, 0.13, 2.68))
+  }
 }

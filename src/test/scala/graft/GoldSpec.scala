@@ -1,8 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.col
-import graft.engine.{Gold, Quality}
+import org.apache.spark.sql.functions.{col, date_format, round, sum}
+import graft.engine.{Analytics, Gold, Quality}
 
 /** The salted partitioned-write contract (used by the gold fact and both
   * landing splits): a HOT partition fans across multiple tasks/files —
@@ -38,6 +38,22 @@ class GoldSpec extends AnyFunSuite {
     // content survives the fan-out intact
     assert(spark.read.parquet(dir).count() == 520)
     assert(spark.read.parquet(dir).select("id").distinct().count() == 520)
+  }
+
+  test("the fact is month-grained only when an average month clears the row floor") {
+    import Gold.{adaptiveFanout, fanoutRowFloor => floor, maxPartitions, periodGrain}
+    // the reference's 36-month history: one lineitem short of the floor
+    // per month is year grain; at the floor it is month grain, and the
+    // salted write then fans each month across two writers
+    assert(periodGrain(36, 36 * floor - 1) == "yyyy")
+    assert(periodGrain(36, 36 * floor) == "yyyy-MM")
+    assert(adaptiveFanout(36 * floor - 1, 3) == 4) // year grain: 3 fat years
+    assert(adaptiveFanout(36 * floor, 36) == 2)
+    assert(adaptiveFanout(36 * floor - 36, 36) == 1)
+    // more months than the partition cap coarsen to years however full
+    assert(periodGrain(maxPartitions, maxPartitions * floor) == "yyyy-MM")
+    assert(periodGrain(maxPartitions + 1, (maxPartitions + 1) * floor * 10) == "yyyy")
+    assert(periodGrain(0, 0) == "yyyy")
   }
 
   test("settleAll waits for stragglers before rethrowing the first failure") {
@@ -80,5 +96,53 @@ class GoldSpec extends AnyFunSuite {
     assert(e.getMessage.contains("non_empty=1"), e.getMessage)
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.isEmpty, s"gate failure left ${added.size} cached RDD(s)")
+  }
+
+  private val dashboard = Seq("a01_kpis", "a02_top_categories", "a03_orders_by_state",
+    "a04_shipping_time_by_state", "a05_avg_freight_by_state", "a06_monthly_trend",
+    "a07_weekday_seasonality", "a08_kpis_filtered", "o20_sql_surface",
+    "o82_sql_decimal_surface")
+
+  test("building a dashboard query over written gold starts no Spark job") {
+    val sf = "/root/testdata/sf0.001"
+    Gold.ensure(spark, sf)
+    val jobs = dashboard.map(q => q -> TestSpark.jobsDuring(SparkEntry.queries(q)(spark, sf)))
+    assert(jobs.forall(_._2 == 0), s"jobs started while building: $jobs")
+  }
+
+  test("two sfDirs in one session: each query reads its own gold") {
+    // B keeps two thirds of A's orders; the same session builds both
+    // layers and interleaves the queries (o20/o82 re-register their
+    // views on each sfDir change)
+    val a = "/root/testdata/sf0.001"
+    val b = TestSpark.tmpDir("gold-two-sf")
+    Seq("lineitem", "customer", "nation", "region", "part").foreach(t =>
+      spark.read.parquet(s"$a/$t.parquet").write.parquet(s"$b/$t.parquet"))
+    spark.read.parquet(s"$a/orders.parquet").filter("o_orderkey % 3 <> 0")
+      .write.parquet(s"$b/orders.parquet")
+    // the expected result reads the written files with inferred schemas
+    def inferred(sf: String, q: String) = {
+      val dir = Gold.ensure(spark, sf)
+      val fact = spark.read.parquet(s"$dir/fact_sales").drop("order_period")
+        .withColumn("price", col("price").cast("double"))
+        .withColumn("freight_value", col("freight_value").cast("double"))
+      val dimC = spark.read.parquet(s"$dir/dim_customers")
+      q match {
+        case "a01_kpis" => Analytics.kpis(fact, dimC)
+        case "a03_orders_by_state" => Analytics.ordersByState(fact, dimC)
+        case "o20_sql_surface" => fact
+          .groupBy(date_format(col("order_purchase_timestamp"), "yyyy-MM").as("period"))
+          .agg(round(sum(col("price").cast("decimal(18,4)")), 2).cast("double").as("revenue"))
+          .orderBy("period")
+      }
+    }
+    val runs = for (sf <- Seq(a, b, a, b); q <- Seq("a01_kpis", "a03_orders_by_state",
+      "o20_sql_surface")) yield {
+      val got = SparkEntry.queries(q)(spark, sf).collect().toSeq
+      assert(got == inferred(sf, q).collect().toSeq, s"$q on $sf")
+      (sf, q) -> got
+    }
+    val byKey = runs.toMap
+    assert(byKey((a, "a01_kpis")) != byKey((b, "a01_kpis")), "the two layers must differ")
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
+import org.apache.spark.sql.functions.col
 import graft.engine.{Incremental, Landing}
 
 class IncrementalSpec extends AnyFunSuite {
@@ -307,5 +308,66 @@ class IncrementalSpec extends AnyFunSuite {
       s"gate must name the NonEmpty violation, got: ${e.getMessage}")
     assert(!new java.io.File(s"$root/landing").exists(),
       "fail-fast: an empty ingest must write no landing files")
+  }
+
+  /** Delete every file under `dir`, keeping the directory itself. */
+  private def emptyDir(dir: String): Unit =
+    new java.io.File(dir).listFiles().foreach(f => assert(f.delete(), s"could not delete $f"))
+
+  test("a corrupt manifest fails the run with a named error, before any ingest") {
+    def corrupt(rewrite: Seq[String] => Seq[String]): String = {
+      val root = land(Seq((Some(1L), 10L, "1995-03-01"), (Some(2L), 11L, "1996-07-01")),
+        Seq((1L, 1), (2L, 1)))
+      val part = new java.io.File(s"$root/landing/_manifest").listFiles()
+        .filter(_.getName.endsWith(".json")).head.toPath
+      val lines = java.nio.file.Files.readAllLines(part).toArray.map(_.toString).toSeq
+      java.nio.file.Files.write(part, rewrite(lines).mkString("\n").getBytes("UTF-8"))
+      // the rewritten part no longer matches its checksum sidecar
+      new java.io.File(part.getParent.toFile, s".${part.getFileName}.crc").delete()
+      root
+    }
+    // a line cut off mid-field (a torn write) and a line missing a field
+    val torn = corrupt(ls => ls.init :+ ls.last.take(ls.last.length / 2))
+    val partial = corrupt(ls => ls.map(_.replaceFirst(",\"rows\":\\d+", "")))
+    // an uncommitted manifest write: the directory holds no entry
+    val uncommitted = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
+    emptyDir(s"$uncommitted/landing/_manifest")
+    for (root <- Seq(torn, partial, uncommitted)) {
+      intercept[Landing.CorruptManifestException] {
+        Incremental.run(spark, s"$root/landing", s"$root/bronze")
+      }
+      assert(!new java.io.File(s"$root/bronze").exists(), "nothing may be ingested")
+    }
+  }
+
+  test("a tech log with no entry, a missing column or a changed column type fails readTechLog") {
+    def logged(change: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+      val root = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
+      Incremental.run(spark, s"$root/landing", s"$root/bronze")
+      val path = s"$root/bronze/tech/processed_files"
+      val log = change(spark.read.parquet(path))
+      spark.createDataFrame(java.util.Arrays.asList(log.collect(): _*), log.schema)
+        .coalesce(1).write.mode("overwrite").parquet(path)
+      s"$root/bronze"
+    }
+    // an overwrite torn after Spark deleted the old files: the log
+    // directory holds no data file, or one empty file
+    for (leave <- Seq("nothing", "an empty file")) {
+      val root = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
+      Incremental.run(spark, s"$root/landing", s"$root/bronze")
+      val path = s"$root/bronze/tech/processed_files"
+      if (leave == "nothing") emptyDir(path)
+      else Incremental.writeTechLog(spark, s"$root/bronze", Nil)
+      intercept[Incremental.CorruptTechLogException](
+        Incremental.readTechLog(spark, s"$root/bronze"))
+      intercept[Incremental.CorruptTechLogException](
+        Incremental.run(spark, s"$root/landing", s"$root/bronze"))
+    }
+    val noNote = logged(_.drop("note"))
+    intercept[Incremental.CorruptTechLogException](Incremental.readTechLog(spark, noNote))
+    val textCounts = logged(_.withColumn("rows_orders", col("rows_orders").cast("string")))
+    val e = intercept[org.apache.spark.SparkException](
+      Incremental.readTechLog(spark, textCounts))
+    assert(e.getMessage.contains("rows_orders"), e.getMessage)
   }
 }

@@ -234,8 +234,9 @@ class PlanAuditSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val factDir = s"${graft.engine.Gold.ensure(spark, sf)}/fact_sales"
     // take a real partition value from the written layout (the grain is
-    // data-sized since round 17: month at gate scales, year beyond the
-    // partition-count cap — the pruning property must hold either way)
+    // data-sized: year at the gate scales, month once an average month
+    // holds Gold.fanoutRowFloor lineitems — the pruning property must
+    // hold either way)
     val period = new java.io.File(factDir).listFiles()
       .map(_.getName).find(_.startsWith("order_period="))
       .map(_.stripPrefix("order_period=")).get
