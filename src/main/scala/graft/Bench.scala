@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: every registry query against SPARK_GRAFT_SF_DIR,
@@ -18,6 +17,9 @@ import java.nio.file.{Files, Paths}
   *  - layer materialization (Gold.ensure) is timed separately as
   *    `setup_sec` — it is a run-once pipeline cost, amortized across all
   *    queries, exactly like the reference's nightly CTAS rebuild.
+  *  - the noise sentinel runs no work of its own: it reads the host's
+  *    CPU counters at each end of the timed window ([[cpuWindow]]) and
+  *    compares per-query times with a committed clean bench.
   *
   * Round-6 bisect of the round-5 "common-subset regression" (r4 43.8 s →
   * r5 47.4 s driver-measured, with o26 0.42→1.66 and o34 0.59→1.13):
@@ -54,119 +56,88 @@ object Bench {
     timed.sortBy { case (name, t) => (-t, name) }.take(n).map(_._1).toSet
   }
 
-  /** Idle-box norm for the calibration probe below, committed as the
-    * MEASURED SPREAD, not just a midpoint, so the threshold can be
-    * tightened (or re-baselined) against real endpoints. On this
-    * machine class (local[32], 128 GiB), five idle-box runs of the 4B
-    * probe spanned 0.74-1.08 s (the spread is the resident session
-    * tooling, which is the realistic baseline condition); the probe
-    * scales linearly with row count above ~1B (0.15 s @ 256M, 0.37 s
-    * @ 2B — a fixed ~0.1 s plan/dispatch overhead dominates below).
-    * Re-baseline procedure when resident tooling drifts: on an idle
-    * box run `runMain graft.BenchCalibrate` (5 probe samples, JSON to
-    * stdout) and commit the new endpoints + norm here, keeping
-    * NoisyFactor ≥ hi/norm.
-    *
-    * Under the co-resident Spark JVMs that polluted BENCH_r10.json
-    * (recorded 240 s vs 72 s clean) the probe degrades with the
-    * contention because it is pure CPU work with no I/O to hide
-    * behind. Chosen over a setup_sec comparison as the primary
-    * sentinel because Gold.ensure legitimately changes across rounds;
-    * the probe is binary- and data-independent.
-    *
-    * Round-12 rework (the round-11 sentinel MISSED a 2.75×-polluted
-    * run, stamping it noisy:false at factor 1.25):
-    *  - NoisyFactor 2.0 → 1.3: the idle spread tops at 1.08/0.85 =
-    *    1.27, so 1.3 flags anything outside the probe's own observed
-    *    tail. The old 2.0 was far laxer than the damage curve — a
-    *    1.25-factor CPU reading coexisted with 2.75× query inflation
-    *    because queries also contend on shuffle I/O and page cache.
-    *  - probes run MID-BENCH (every ProbeEveryQueries queries), not
-    *    only at the endpoints, and the verdict takes the max over all
-    *    samples: load that rises after the first probe and falls
-    *    before the last is no longer invisible.
-    *  - a second, independent signal: the median per-query ratio vs
-    *    the last committed clean bench (BENCH_CLEAN.json; self-
-    *    history). The CPU probe under-reads I/O contention; history
-    *    sees exactly what the queries experienced. Either signal
-    *    alone marks the run noisy.
-    *  - the probe uses the bench's actual core count as its split
-    *    count and scales the norm by 32/cpus, so a 16- or 64-core
-    *    host gets a correct yardstick instead of a systematic 2×
-    *    false positive / under-detection.
-    * `noisy:false` is NOT a cleanliness certificate — it means no
-    * signal exceeded its threshold; both JSONs carry that note.
-    *
-    * Round-19 re-baseline: the host generation changed around r17 —
-    * a same-binary A/B (the r16 tree rebuilt and benched back-to-back
-    * with the r19 tree on one idle box, SCALE.md) put the ~1.45×
-    * cross-round bench drift entirely on the environment, and 24 idle
-    * probe samples (three BenchCalibrate runs + the in-bench probes of
-    * an idle-box run) measured the NEW host's idle spread at
-    * 0.80-1.59 s, median ≈1.03 — the old 0.74-1.08/0.85 envelope was
-    * the OLD host's. Norm moves to the measured median; NoisyFactor
-    * moves 1.3 → 1.6 because this host's own idle tail reaches
-    * 1.59/1.03 ≈ 1.54 (hypervisor steal variance, not load we can
-    * see) — anything tighter false-positives on an empty box. The
-    * history signal (threshold 1.5) stays the finer instrument here;
-    * it sees what queries experienced, not what the CPU probe can.
+  /** The CPU signal's threshold, as a slowdown: `noise_factor` is the
+    * factor by which a CPU-bound query slows when other processes or
+    * the hypervisor take part of the host's capacity, so 1.6 means they
+    * took 37.5% of it over the timed window.
     */
-  val CalibrationIdleLoSec = 0.80
-  val CalibrationIdleHiSec = 1.59
-  val CalibrationNormSec = 1.03
   val NoisyFactor = 1.6
   /** Self-history signal: median per-query ratio vs the committed
     * clean bench above this ⇒ noisy. Queries with baseline time below
     * HistoryMinBaselineSec are excluded (timer noise dominates their
     * ratios); the signal abstains entirely (None) below
-    * HistoryMinQueries common queries or on an sf mismatch.
+    * HistoryMinQueries common queries, or against a baseline from
+    * another sf or core count ([[historyOff]]).
     */
   val HistoryNoisyFactor = 1.5
   val HistoryMinBaselineSec = 0.15
   val HistoryMinQueries = 10
-  val ProbeEveryQueries = 20
-  /** Probe work: total rows hashed, fixed regardless of core count
-    * (splits = cores ⇒ idle time ≈ norm × 32/cpus).
-    */
-  val ProbeRows = 4000000000L
 
-  /** (deviation factor, polluted?) for a measured calibration time
-    * against an effective norm (already scaled for core count).
+  /** One reading of the host's aggregate `cpu` line of /proc/stat (in
+    * clock ticks; busy = user + nice + system + irq + softirq + steal,
+    * total = busy + idle + iowait) and of this JVM's own CPU time.
     */
-  def noiseVerdict(calibrationSec: Double, normSec: Double = CalibrationNormSec): (Double, Boolean) = {
-    val f = calibrationSec / normSec
-    (f, f > NoisyFactor)
+  final case class CpuSnapshot(wallNanos: Long, ownCpuNanos: Long, busyTicks: Long,
+                               stealTicks: Long, totalTicks: Long, cpus: Int)
+
+  object CpuSnapshot {
+    /** Parse /proc/stat text; None when it has no well-formed aggregate
+      * line with at least the eight fields up to steal.
+      */
+    def parse(procStat: String, wallNanos: Long, ownCpuNanos: Long): Option[CpuSnapshot] = {
+      val lines = procStat.linesIterator.toSeq
+      val cpus = lines.count(_.matches("cpu\\d+ .*"))
+      lines.find(_.startsWith("cpu "))
+        .flatMap(l => scala.util.Try(l.split("\\s+").drop(1).map(_.toLong)).toOption)
+        .filter(f => f.length >= 8 && cpus > 0)
+        .map { f =>
+          val busy = f(0) + f(1) + f(2) + f(5) + f(6) + f(7)
+          CpuSnapshot(wallNanos, ownCpuNanos, busy, f(7), busy + f(3) + f(4), cpus)
+        }
+    }
   }
 
-  /** One CPU-bound calibration probe pass: xxhash64 over a constant
-    * range, one split per core the bench assumes it owns.
+  /** Read a snapshot now; None when /proc/stat or the process CPU time
+    * cannot be read.
     */
-  def calibrateOnce(spark: SparkSession, splits: Int, rows: Long = ProbeRows): Double = {
-    val t0 = System.nanoTime()
-    spark.range(0L, rows, 1, splits)
-      .selectExpr("bit_xor(xxhash64(id)) as h") // bit_xor: no ANSI long overflow
-      .write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
+  def cpuSnapshot(): Option[CpuSnapshot] =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case os: com.sun.management.OperatingSystemMXBean =>
+        try {
+          val stat = Files.readString(Paths.get("/proc/stat"))
+          val own = os.getProcessCpuTime
+          if (own < 0) None else CpuSnapshot.parse(stat, System.nanoTime(), own)
+        } catch { case _: java.io.IOException => None }
+      case _ => None
+    }
+
+  /** What the host's CPU did over a window, as shares of its capacity:
+    * busy (anyone's, steal included), this JVM's own, and steal.
+    */
+  final case class CpuWindow(wallSec: Double, cpus: Int, busyShare: Double,
+                             ownShare: Double, stealShare: Double) {
+    /** The share other processes or the hypervisor took. The bench's
+      * own CPU, GC and JIT threads included, is never foreign.
+      */
+    def foreignShare: Double = math.max(0.0, busyShare - ownShare)
+    def foreignCpuSec: Double = foreignShare * wallSec * cpus
+    /** The slowdown a CPU-bound query sees from the foreign share; the
+      * floor on the free share keeps a saturated window finite.
+      */
+    def noiseFactor: Double = 1.0 / math.max(1.0 - foreignShare, 1e-3)
+    def noisy: Boolean = noiseFactor > NoisyFactor
   }
 
-  /** Endpoint probe: min of two passes (first absorbs codegen), like
-    * the queries. Mid-run probes start as single passes — the max-over-
-    * samples verdict wants sensitivity there, and the plan is already
-    * codegen-warm after the first endpoint probe — but a sample over
-    * the threshold is CONFIRMED with one more pass (min of the two):
-    * the pollution that matters is sustained across a query's own two
-    * passes, so a probe must distinguish sustained contention (both
-    * readings high) from a one-off GC blip landing on the probe (the
-    * first sf0.01 shakedown of this sentinel produced exactly that —
-    * one 1.23 s mid-run sample between 0.56-0.70 s neighbours).
+  /** The window between two snapshots. The own share is own CPU seconds
+    * over wall seconds × the CPU count /proc/stat reports.
     */
-  def calibrate(spark: SparkSession, splits: Int, rows: Long = ProbeRows): Double =
-    math.min(calibrateOnce(spark, splits, rows), calibrateOnce(spark, splits, rows))
-
-  def calibrateConfirmed(spark: SparkSession, splits: Int, threshold: Double): Double = {
-    val first = calibrateOnce(spark, splits)
-    if (first <= threshold) first
-    else math.min(first, calibrateOnce(spark, splits))
+  def cpuWindow(before: CpuSnapshot, after: CpuSnapshot): CpuWindow = {
+    val wallSec = math.max(after.wallNanos - before.wallNanos, 1L) / 1e9
+    val ticks = math.max(after.totalTicks - before.totalTicks, 1L).toDouble
+    CpuWindow(wallSec, after.cpus,
+      busyShare = (after.busyTicks - before.busyTicks) / ticks,
+      ownShare = (after.ownCpuNanos - before.ownCpuNanos) / 1e9 / (wallSec * after.cpus),
+      stealShare = (after.stealTicks - before.stealTicks) / ticks)
   }
 
   /** Extract the per-query map (and the sf basename, if recorded) from
@@ -188,6 +159,25 @@ object Bench {
     val sf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(json).map(_.group(1).split('/').last)
     (queries, sf)
   }
+
+  /** The core count a bench JSON was recorded with (bench_out.json's
+    * `cpus`); None when it was not recorded.
+    */
+  def baselineCpus(json: String): Option[Int] =
+    "\"cpus\":(\\d+)".r.findFirstMatchIn(json).map(_.group(1).toInt)
+
+  /** Why the history signal must abstain against a baseline, if it must.
+    * Per-query ratios measure pollution only against a baseline recorded
+    * at the same sf on the same core count: across sfs they measure data
+    * growth, across hosts the host (a 32-core baseline read 0.67 on a
+    * 4-core host, where a 2.2× slowdown would still read below 1.5).
+    */
+  def historyOff(baseSf: Option[String], baseCpus: Option[Int],
+                 sf: String, cpus: Int): Option[String] =
+    if (!baseSf.contains(sf)) Some(s"baseline sf ${baseSf.getOrElse("unknown")} != run sf $sf")
+    else if (!baseCpus.contains(cpus))
+      Some(s"baseline cpus ${baseCpus.fold("unknown")(_.toString)} != run cpus $cpus")
+    else None
 
   /** The self-history sentinel's full reading: the median ratio (None =
     * abstained), HOW MANY queries it was computed over, and which short
@@ -262,9 +252,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpusN = Session.cpus
-    // effective norm for this host: the committed norm was measured at
-    // 32-way parallelism over fixed total work, so time ∝ 32/cpus
-    val probeNorm = CalibrationNormSec * 32.0 / cpusN
     val spark = Session.local(cpusN)
 
     def materialize(name: String): Unit =
@@ -274,12 +261,6 @@ object Bench {
     val setup0 = System.nanoTime()
     graft.engine.Gold.ensure(spark, sfDir)
     val setupSec = (System.nanoTime() - setup0) / 1e9
-    // noise sentinel, CPU-probe signal: endpoint probes (min-of-two)
-    // before and after the timed queries PLUS a single-pass probe every
-    // ProbeEveryQueries timed queries; the factor is the max over all
-    // samples, so load confined to any window of ~20 queries is seen.
-    val probeSamples = scala.collection.mutable.ArrayBuffer[Double]()
-    probeSamples += calibrate(spark, cpusN)
 
     // optional subset run (comma-separated full names or short-id
     // prefixes) — the bisect lever for attributing cross-round drift to
@@ -313,6 +294,10 @@ object Bench {
           Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
       }
     }
+    // noise sentinel, CPU signal: one host-CPU snapshot at each end of
+    // the timed window (third passes included); nothing runs between
+    // the queries but the queries
+    val cpuBefore = cpuSnapshot()
     // min of two timed passes per query: a single pass attributes GC
     // pauses and JIT recompiles to whichever query they land on (observed
     // as 4× spikes on queries whose identical-shape siblings run in 1 s);
@@ -320,9 +305,7 @@ object Bench {
     // only, and a query is an error only when BOTH passes fail — a
     // transient single-pass failure must not report a fast-fail duration
     // as the query's time, nor a succeeded query as an error.
-    val results: Seq[(String, Option[Double])] = names.zipWithIndex.map { case (n, i) =>
-      if (i > 0 && i % ProbeEveryQueries == 0)
-        probeSamples += calibrateConfirmed(spark, cpusN, NoisyFactor * probeNorm)
+    val results: Seq[(String, Option[Double])] = names.map { n =>
       foldPasses(Seq(timeOne(n), timeOne(n))) match {
         case Left(err) => errors(n) = err; n -> None
         case Right(t)  => n -> Some(t)
@@ -360,52 +343,54 @@ object Bench {
         n -> foldPasses(Seq(Right(t), timeOne(n))).getOrElse(t)
       case other => other
     }
+    val cpuAfter = cpuSnapshot()
     val errJson = errors.map { case (k, v) => Json.quote(k) + ":" + Json.quote(v) }
       .mkString("{", ",", "}")
     val total = timed.map(_._2).sum
-    // noise sentinel verdict: CPU-probe factor (max over samples) OR
-    // self-history factor — either over its threshold stamps
-    // "noisy":true into BOTH JSONs: a reader comparing this bench
-    // against history must see the flag next to the headline number,
-    // not have to dig the calibration times out of the sidecar.
-    probeSamples += calibrate(spark, cpusN)
-    val calibrationSec = probeSamples.max
-    val (cpuFactor, cpuNoisy) = noiseVerdict(calibrationSec, probeNorm)
+    // noise sentinel verdict: CPU factor OR self-history factor — either
+    // over its threshold stamps "noisy":true into BOTH JSONs: a reader
+    // comparing this bench against history must see the flag next to
+    // the headline number, not have to dig it out of the sidecar.
+    val cpu = for (b <- cpuBefore; a <- cpuAfter) yield cpuWindow(b, a)
+    if (cpu.isEmpty)
+      System.err.println("[bench] CPU sentinel ABSTAINED: /proc/stat or the process CPU time is unreadable")
+    val cpuNoisy = cpu.exists(_.noisy)
     val sfShort = sfDir.split('/').last
     // self-history: per-query ratios vs the last committed clean bench
-    // (bench_out.json format). Applied only when the baseline was
-    // recorded at the SAME sf — cross-sf ratios measure data growth,
-    // not pollution.
+    // (bench_out.json format), applied only when the baseline was
+    // recorded at the SAME sf on the SAME core count (historyOff)
     val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BENCH_CLEAN.json")
-    val (baseQueries, baseSf) = (try {
+    val baselineJson = try {
       val p = Paths.get(baselinePath)
-      if (Files.exists(p)) parseBaseline(Files.readString(p))
-      else (Map.empty[String, Double], None)
-    } catch { case _: Throwable => (Map.empty[String, Double], None) })
+      if (Files.exists(p)) Files.readString(p) else ""
+    } catch { case _: Throwable => "" }
+    val (baseQueries, baseSf) = parseBaseline(baselineJson)
+    val off = historyOff(baseSf, baselineCpus(baselineJson), sfShort, cpusN)
     val histSignal =
-      if (baseSf.contains(sfShort)) historySignal(timed, baseQueries)
+      if (off.isEmpty) historySignal(timed, baseQueries)
       else HistorySignal(None, 0, Nil)
     // parallel to the ABSTAINED message below: when the sentinel is off
-    // because the baseline was recorded at a different sf, say so — a
-    // noisy:false on such a run is probe-only, and the reader must not
-    // mistake history_n:0 for a coverage bug
-    if (baseQueries.nonEmpty && !baseSf.contains(sfShort))
-      System.err.println(s"[bench] history sentinel OFF: baseline sf ${baseSf.getOrElse("unknown")} != run sf $sfShort — noisy verdict is CPU-probe-only")
+    // because the baseline was recorded at a different sf or core count,
+    // say so — a noisy:false on such a run is CPU-only, and the reader
+    // must not mistake history_n:0 for a coverage bug
+    if (baseQueries.nonEmpty)
+      off.foreach(why => System.err.println(s"[bench] history sentinel OFF: $why — noisy verdict is CPU-only"))
     val histFactorOpt = histSignal.factor
     if (histSignal.droppedIds.nonEmpty)
       System.err.println(s"[bench] history sentinel dropped ${histSignal.droppedIds.size} ambiguous short ids: ${histSignal.droppedIds.mkString(", ")}")
-    if (baseSf.contains(sfShort) && histFactorOpt.isEmpty)
+    if (off.isEmpty && histFactorOpt.isEmpty)
       System.err.println(s"[bench] history sentinel ABSTAINED: only ${histSignal.matched} baseline-matched queries (need $HistoryMinQueries)")
     val histNoisy = histFactorOpt.exists(_ > HistoryNoisyFactor)
     val noisy = cpuNoisy || histNoisy
     val histJson = histFactorOpt.map(h => rnd(h, 2)).getOrElse("null")
+    def cpuJson(f: CpuWindow => Double, s: Int): String = cpu.map(w => rnd(f(w), s)).getOrElse("null")
     // noisy:false means "no signal exceeded its threshold", NOT a
     // cleanliness certificate — both JSONs say so explicitly, because
     // round 11 proved a clean-looking factor can sit beside polluted
-    // query times the probes never sampled.
+    // query times.
     val noiseNote = "noisy:false is no cleanliness certificate"
     val noiseJson =
-      s""","calibration_sec":${rnd(calibrationSec, 2)},"noise_factor":${rnd(cpuFactor, 2)},"history_factor":$histJson,"history_n":${histSignal.matched},"noisy":$noisy,"noise_note":${Json.quote(noiseNote)}"""
+      s""","calibration_sec":${cpuJson(_.foreignCpuSec, 2)},"noise_factor":${cpuJson(_.noiseFactor, 2)},"history_factor":$histJson,"history_n":${histSignal.matched},"noisy":$noisy,"noise_note":${Json.quote(noiseNote)}"""
     // stdout trims every char it can spare (bench_out.json keeps full
     // names and full precision): per-query keys are the registry's UNIQUE
     // short ids ("o22" for o22_minhash_lsh_jaccard — the prefix before
@@ -433,31 +418,14 @@ object Bench {
     val json = Iterator(2, 1, 0)
       .map(stdoutJson).find(_.length <= 1985).getOrElse(noQueries)
     Files.writeString(Paths.get(outPath(sys.env)),
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${timed.map { case (k, v) => Json.quote(k) + ":" + v }.mkString("{", ",", "}")},"setup_sec":$setupSec,"n_errors":${errors.size},"errors":$errJson,"cpus":$cpusN,"probe_samples":${probeSamples.mkString("[", ",", "]")},"calibration_sec":$calibrationSec,"calibration_norm_sec":$probeNorm,"noise_factor":$cpuFactor,"history_factor":$histJson,"history_n":${histSignal.matched},"history_dropped_ids":${histSignal.droppedIds.map(Json.quote).mkString("[", ",", "]")},"history_baseline_sf":${baseSf.map(Json.quote).getOrElse("null")},"noisy":$noisy,"noise_note":${Json.quote(noiseNote)},"sf":${Json.quote(sfDir)}}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${timed.map { case (k, v) => Json.quote(k) + ":" + v }.mkString("{", ",", "}")},"setup_sec":$setupSec,"n_errors":${errors.size},"errors":$errJson,"cpus":$cpusN,"calibration_sec":${cpuJson(_.foreignCpuSec, 3)},"noise_factor":${cpuJson(_.noiseFactor, 3)},"busy_share":${cpuJson(_.busyShare, 4)},"own_share":${cpuJson(_.ownShare, 4)},"steal_share":${cpuJson(_.stealShare, 4)},"history_factor":$histJson,"history_n":${histSignal.matched},"history_dropped_ids":${histSignal.droppedIds.map(Json.quote).mkString("[", ",", "]")},"history_baseline_sf":${baseSf.map(Json.quote).getOrElse("null")},"noisy":$noisy,"noise_note":${Json.quote(noiseNote)},"sf":${Json.quote(sfDir)}}""")
     if (noisy)
-      System.err.println(f"[bench] NOISY run: probe max $calibrationSec%.2f s vs norm $probeNorm%.2f s (factor $cpuFactor%.2f), history factor ${histJson} — treat totals as polluted")
+      System.err.println(s"[bench] NOISY run: CPU factor ${cpuJson(_.noiseFactor, 2)} (foreign share ${cpuJson(_.foreignShare, 2)}), history factor $histJson — treat totals as polluted")
     if (errors.nonEmpty)
       System.err.println(s"[bench] ${errors.size} queries FAILED: ${errors.keys.mkString(", ")}")
     spark.stop()
     // printed last (after stop) so no Spark shutdown line can push the
     // JSON out of the driver's tail window
     println(json)
-  }
-}
-
-/** Re-baseline helper for the calibration norm: five idle-box probe
-  * samples (after one untimed codegen warm-up), printed as JSON. Run on
-  * an idle box, then commit the observed endpoints and a norm near the
-  * median into Bench.CalibrationIdle{Lo,Hi}Sec / CalibrationNormSec,
-  * keeping NoisyFactor ≥ hi/norm.
-  */
-object BenchCalibrate {
-  def main(args: Array[String]): Unit = {
-    val cpus = Session.cpus
-    val spark = Session.local(cpus)
-    Bench.calibrateOnce(spark, cpus) // untimed codegen warm-up
-    val samples = (1 to 5).map(_ => Bench.calibrateOnce(spark, cpus))
-    spark.stop()
-    println(s"""{"cpus":$cpus,"probe_rows":${Bench.ProbeRows},"samples":${samples.map(s => f"$s%.3f").mkString("[", ",", "]")}}""")
   }
 }

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local SparkSession builder: every main (Bench, BenchCalibrate,
-  * Verify, Explain, PlanDiff, ScaleData) and the test suite's `TestSpark`
-  * start their session here, so a conf cannot drift between them.
+/** The one local SparkSession builder: every main (Bench, Verify,
+  * Explain, PlanDiff, ScaleData) and the test suite's `TestSpark` start
+  * their session here, so a conf cannot drift between them.
   * `dev/hooks/pre-commit` refuses any other `SparkSession.builder` under
   * `src/`.
   */

@@ -372,8 +372,8 @@ object Dedup {
 
   /** Exact duplicate groups by full-text hash — the scale-safe exact
     * dedup (shuffle buckets by md5, never compares texts pairwise).
-    * Same shape as query o03; here returning one row per KEPT doc with
-    * its group size, the "drop duplicates, keep first" contract.
+    * One row per KEPT doc with its group size, the "drop duplicates,
+    * keep first" contract; query o03 reports the groups of two or more.
     */
   def exactDedup(docs: DataFrame): DataFrame =
     docs

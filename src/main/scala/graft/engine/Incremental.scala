@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import scala.util.control.NonFatal
 
 /** The Phase-2 incremental bronze pipeline (SURVEY §2.10; reference
   * `scripts/bronze_incremental.py`):
@@ -68,21 +69,24 @@ object Incremental {
 
   private def techLogPath(bronzeRoot: String) = s"$bronzeRoot/tech/processed_files"
 
-  /** Missing log ⇒ first run ⇒ empty; any OTHER failure (half-written
-    * file, schema drift) propagates — silently treating corruption as
-    * "no log yet" would let a rerun rewrite every entry's counts to 0.
-    * The log is read with [[LogEntry]]'s schema, not an inferred one: a
-    * column whose type changed fails the parquet read, and a missing
-    * column (which reads as nulls; every written entry has every field)
-    * throws [[CorruptTechLogException]]. So does a log directory with no
-    * entries: the engine never writes an empty log, and an overwrite
-    * torn after Spark deleted the old files leaves exactly that.
+  /** Missing log ⇒ first run ⇒ empty. Any other failure throws
+    * [[CorruptTechLogException]] — silently treating corruption as "no
+    * log yet" would let a rerun rewrite every entry's counts to 0:
+    *  - a read that fails (a truncated file, or a column whose type
+    *    changed: the log is read with [[LogEntry]]'s schema, not an
+    *    inferred one), with the read's error as the cause;
+    *  - an entry with a null field (a missing column reads as nulls;
+    *    every written entry has every field);
+    *  - a log directory with no entries: the engine never writes an
+    *    empty log, and an overwrite torn after Spark deleted the old
+    *    files leaves exactly that.
     */
   def readTechLog(spark: SparkSession, bronzeRoot: String): Seq[LogEntry] = {
     val path = techLogPath(bronzeRoot)
     if (!Workdirs.exists(spark, path)) Nil
     else {
-      val rows = spark.read.schema(Encoders.product[LogEntry].schema).parquet(path).collect()
+      val rows = try spark.read.schema(Encoders.product[LogEntry].schema).parquet(path).collect()
+        catch { case NonFatal(e) => throw new CorruptTechLogException(path, s"unreadable: ${e.getMessage}", e) }
       if (rows.isEmpty) throw new CorruptTechLogException(path, "no entries")
       rows.toSeq.map { r =>
         if (r.anyNull) throw new CorruptTechLogException(path, s"incomplete entry $r")
@@ -92,9 +96,11 @@ object Incremental {
     }
   }
 
-  /** The tech log directory holds no entry, or an entry lacks a field. */
-  final class CorruptTechLogException(path: String, detail: String)
-    extends IllegalStateException(s"corrupt tech log $path: $detail")
+  /** The tech log cannot be read (a truncated file, a changed column
+    * type), its directory holds no entry, or an entry lacks a field.
+    */
+  final class CorruptTechLogException(path: String, detail: String, cause: Throwable = null)
+    extends IllegalStateException(s"corrupt tech log $path: $detail", cause)
 
   /** Upsert-by-rewrite of the (tiny, file-count-bounded) tech log — the
     * parquet stand-in for the reference's `ON CONFLICT DO UPDATE`.

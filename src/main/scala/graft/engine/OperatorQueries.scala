@@ -35,10 +35,9 @@ object OperatorQueries {
     // A9 GROUP BY + HAVING duplicate probe (reference test.py:6-13),
     // pointed at document texts (feeds the dedup suite)
     "o03_dup_probe" -> ((s, d) =>
-      documents(s, d)
-        .groupBy(md5(col("text")).as("text_md5"))
-        .agg(count(lit(1)).as("cnt"), min(col("doc_id")).as("keep_id"))
-        .filter(col("cnt") > 1)
+      Dedup.exactDedup(documents(s, d))
+        .filter(col("group_size") > 1)
+        .select(col("text_md5"), col("group_size").as("cnt"), col("keep_id"))
         .orderBy("text_md5")),
 
     // A2 conditional aggregation — the DQC null/negative counters

@@ -29,27 +29,57 @@ class BenchFoldSpec extends AnyFunSuite {
     assert(folded == Right(4.0))
   }
 
+  /** A window of `wallSec` on `cpus` CPUs at 100 ticks per CPU-second. */
+  private def window(busy: Double, own: Double, steal: Double = 0.0,
+                     cpus: Int = 4, wallSec: Double = 10.0): Bench.CpuWindow = {
+    val ticks = (wallSec * cpus * 100).toLong
+    val before = Bench.CpuSnapshot(0L, 0L, 0L, 0L, 0L, cpus)
+    Bench.cpuWindow(before, Bench.CpuSnapshot((wallSec * 1e9).toLong,
+      (own * wallSec * cpus * 1e9).round, (busy * ticks).round, (steal * ticks).round, ticks, cpus))
+  }
+
   test("noise sentinel: factor is measured/norm, noisy strictly above NoisyFactor") {
-    val (fIdle, noisyIdle) = Bench.noiseVerdict(Bench.CalibrationNormSec)
-    assert(math.abs(fIdle - 1.0) < 1e-9 && !noisyIdle)
+    // the factor is the CPU-bound slowdown from the capacity others took
+    val idle = window(busy = 0.0, own = 0.0)
+    assert(math.abs(idle.noiseFactor - 1.0) < 1e-9 && !idle.noisy)
     // exactly at the threshold is NOT noisy (> not >=): the flag marks
-    // pollution, not the norm's own tail
-    val (fAt, noisyAt) = Bench.noiseVerdict(Bench.CalibrationNormSec * Bench.NoisyFactor)
-    assert(math.abs(fAt - Bench.NoisyFactor) < 1e-9 && !noisyAt)
-    val (fHot, noisyHot) = Bench.noiseVerdict(Bench.CalibrationNormSec * 5.0)
-    assert(fHot > Bench.NoisyFactor && noisyHot)
-    // the threshold sits just outside the probe's own observed idle
-    // tail (hi/norm = 1.27): tight enough that the round-11 class of
-    // miss (factor 1.25 beside 2.75× query inflation) is now within
-    // one idle-spread width of flagging, loose enough that the
-    // committed idle endpoints themselves never flag
+    // pollution, not the host's own tail
+    val at = window(busy = 1.0 - 1.0 / Bench.NoisyFactor, own = 0.0)
+    assert(math.abs(at.noiseFactor - Bench.NoisyFactor) < 1e-9 && !at.noisy)
+    val hot = window(busy = 0.9, own = 0.1)
+    assert(hot.noiseFactor > Bench.NoisyFactor && hot.noisy)
     assert(Bench.NoisyFactor < 2.0)
-    assert(Bench.CalibrationIdleHiSec / Bench.CalibrationNormSec < Bench.NoisyFactor)
-    val (_, noisyAtIdleHi) = Bench.noiseVerdict(Bench.CalibrationIdleHiSec)
-    assert(!noisyAtIdleHi)
-    // an explicit norm (the cpus-scaled yardstick) changes the factor
-    val (fScaled, _) = Bench.noiseVerdict(1.7, 1.7)
-    assert(math.abs(fScaled - 1.0) < 1e-9)
+  }
+
+  test("CPU window from two snapshots: own load and idle are not noisy, steal is") {
+    val stat =
+      """cpu  1000 50 200 8000 100 10 20 300 40 0
+        |cpu0 500 25 100 4000 50 5 10 150 20 0
+        |cpu1 500 25 100 4000 50 5 10 150 20 0
+        |intr 12345
+        |""".stripMargin
+    // busy = user + nice + system + irq + softirq + steal; guest time is
+    // already inside user and nice, so it is not counted twice
+    assert(Bench.CpuSnapshot.parse(stat, 7L, 9L) ==
+      Some(Bench.CpuSnapshot(7L, 9L, 1580L, 300L, 9680L, 2)))
+    assert(Bench.CpuSnapshot.parse("intr 1\n", 7L, 9L).isEmpty)
+    assert(Bench.CpuSnapshot.parse("cpu  1 2 3\ncpu0 1 2 3\n", 7L, 9L).isEmpty)
+    assert(Bench.CpuSnapshot.parse(stat.replace("8000", "x"), 7L, 9L).isEmpty)
+    // an idle host
+    val idle = window(busy = 0.02, own = 0.0)
+    assert(!idle.noisy && idle.noiseFactor < 1.1)
+    // the bench's own load saturates the host: none of it is foreign
+    val own = window(busy = 0.99, own = 0.99)
+    assert(!own.noisy && own.foreignShare < 1e-9 && own.foreignCpuSec < 1e-6)
+    // own CPU a hair above the busy ticks clamps at no foreign load
+    assert(window(busy = 0.5, own = 0.55).foreignShare == 0.0)
+    // the hypervisor steals half the host while the bench uses the rest
+    val stolen = window(busy = 1.0, own = 0.5, steal = 0.5)
+    assert(stolen.noisy && math.abs(stolen.noiseFactor - 2.0) < 1e-9)
+    assert(math.abs(stolen.stealShare - 0.5) < 1e-9)
+    assert(math.abs(stolen.foreignCpuSec - 20.0) < 1e-6, "half of 4 CPUs for 10 s")
+    // a saturated foreign window stays finite
+    assert(window(busy = 1.0, own = 0.0).noiseFactor.isFinite)
   }
 
   test("baseline parse: queries map and sf basename out of bench_out.json format") {
@@ -121,6 +151,23 @@ class BenchFoldSpec extends AnyFunSuite {
     assert(s.matched == 20 && s.droppedIds.isEmpty)
   }
 
+  test("history abstains against a baseline from another host or sf") {
+    val json = """{"metric":"total","value":47.5,"unit":"sec","queries":{"a01_kpis":0.25},"setup_sec":9.4,"n_errors":0,"errors":{},"cpus":32,"noisy":false,"sf":"data/sf0.1"}"""
+    assert(Bench.baselineCpus(json).contains(32))
+    // the committed BENCH_CLEAN.json is a 32-core run: a 4-core run's
+    // ratios against it measure the host, not pollution
+    val off = Bench.historyOff(Some("sf0.1"), Bench.baselineCpus(json), "sf0.1", 4)
+    assert(off.exists(_.contains("cpus 32")), off)
+    // a baseline that did not record its cores abstains too
+    val noCpus = json.replace("\"cpus\":32,", "")
+    assert(Bench.baselineCpus(noCpus).isEmpty)
+    assert(Bench.historyOff(Some("sf0.1"), None, "sf0.1", 4).exists(_.contains("unknown")))
+    // another sf abstains, as before
+    assert(Bench.historyOff(Some("sf0.1"), Some(4), "sf0.01", 4).exists(_.contains("sf0.1")))
+    // same sf, same cores: the signal runs
+    assert(Bench.historyOff(Some("sf0.1"), Some(32), "sf0.1", 32).isEmpty)
+  }
+
   test("bench landing pad: env override, driver-contract default") {
     // round 19 lost a completed-capable sf10 bench to the hardcoded cwd
     // bench_out.json (the driver's later sf0.1 run clobbered it); the
@@ -135,30 +182,25 @@ class BenchFoldSpec extends AnyFunSuite {
 
   test("synthetic background burn: the probe detects a deliberate CPU burn") {
     // the round-11 sentinel's failure mode was under-detection; this
-    // locks the probe's sensitivity: a full-box spin burn must raise
-    // the measured probe time past NoisyFactor × its own idle reading.
-    // Small probe (fixed work, 2 splits on the shared local[2] session)
-    // so the test stays ~seconds; sensitivity is what's asserted, not
-    // absolute times, so the committed 4B/32-split norm is not needed.
-    val spark = TestSpark.spark
-    val rows = 200000000L
-    Bench.calibrateOnce(spark, 2, rows) // untimed codegen warm-up
-    val idle = Bench.calibrate(spark, 2, rows)
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // 2× oversubscription: more runnable spinners than cores guarantees
-    // the probe's task threads actually lose timeslices
-    val burners = (1 to 2 * Runtime.getRuntime.availableProcessors).map { _ =>
-      val t = new Thread(() => {
-        var x = 0L
-        while (!stop.get) { x += 1; if (x == Long.MaxValue) x = 0 }
-      })
-      t.setDaemon(true); t.start(); t
-    }
+    // locks the CPU signal's sensitivity: a full-box spin burn must read
+    // noisy. The burn runs in child processes, because this JVM's own
+    // threads are the bench's load and are correctly not foreign.
+    def snapshot() = Bench.cpuSnapshot().getOrElse(fail("/proc/stat unreadable"))
+    val burners = scala.collection.mutable.ArrayBuffer[Process]()
     try {
-      val burned = Bench.calibrate(spark, 2, rows)
-      assert(burned > idle * Bench.NoisyFactor,
-        f"probe under burn $burned%.3f s vs idle $idle%.3f s — sentinel would miss this")
-    } finally stop.set(true)
+      // 2× oversubscription: more runnable spinners than cores
+      for (_ <- 1 to 2 * Runtime.getRuntime.availableProcessors)
+        burners += new ProcessBuilder("sh", "-c", "while :; do :; done").start()
+      Thread.sleep(200)
+      val before = snapshot()
+      Thread.sleep(1500)
+      val burned = Bench.cpuWindow(before, snapshot())
+      assert(burned.noisy,
+        f"factor ${burned.noiseFactor}%.2f (busy ${burned.busyShare}%.2f, own ${burned.ownShare}%.2f) under burn — sentinel would miss this")
+    } finally {
+      burners.foreach(_.destroyForcibly())
+      burners.foreach(_.waitFor())
+    }
   }
 
   test("slowest decile: ceil(n/10) names, slowest-first, deterministic ties") {

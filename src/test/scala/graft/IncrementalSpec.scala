@@ -366,8 +366,24 @@ class IncrementalSpec extends AnyFunSuite {
     val noNote = logged(_.drop("note"))
     intercept[Incremental.CorruptTechLogException](Incremental.readTechLog(spark, noNote))
     val textCounts = logged(_.withColumn("rows_orders", col("rows_orders").cast("string")))
-    val e = intercept[org.apache.spark.SparkException](
+    val e = intercept[Incremental.CorruptTechLogException](
       Incremental.readTechLog(spark, textCounts))
     assert(e.getMessage.contains("rows_orders"), e.getMessage)
+  }
+
+  test("a truncated tech log file fails the run with a named error") {
+    val root = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
+    Incremental.run(spark, s"$root/landing", s"$root/bronze")
+    val dir = new java.io.File(s"$root/bronze/tech/processed_files")
+    val part = dir.listFiles().filter(_.getName.endsWith(".parquet")).head.toPath
+    val bytes = java.nio.file.Files.readAllBytes(part)
+    java.nio.file.Files.write(part, bytes.take(bytes.length / 2))
+    // the halved file no longer matches its checksum sidecar
+    new java.io.File(dir, s".${part.getFileName}.crc").delete()
+    val e = intercept[Incremental.CorruptTechLogException](
+      Incremental.readTechLog(spark, s"$root/bronze"))
+    assert(e.getCause != null, "the read's own error is attached")
+    intercept[Incremental.CorruptTechLogException](
+      Incremental.run(spark, s"$root/landing", s"$root/bronze"))
   }
 }
