@@ -7,6 +7,10 @@ the sfDir parquet tables in DuckDB and compares with the Spark parquet dump
 written by graft.Verify. Columns are sorted by name before comparison, like
 the driver; rows are compared both in emitted order and sorted.
 
+After the `== N pass, ... ==` line, one `[empty-pass]` line names the
+queries that passed on 0 rows: for those the check covered the output
+schema only.
+
 Usage: python3 dev/check_oracle.py <sfDir> <verifyOutDir> [--timeout SECS]
        [--json OUT] [--memory-limit SIZE] [--temp-dir DIR[:MAXSIZE]]
        [--only q1,q2,...] [--replica-proof q1,q2,...]
@@ -408,6 +412,10 @@ def main(sf_dir, out_dir, timeout=None, json_out=None, memory_limit=None,
                 print(f"    spark cols={list(s.columns)}\n    duck  cols={list(o.columns)}")
             n_fail += 1
     print(f"== {n_pass} pass, {n_fail} fail, {n_timeout} timeout ==")
+    # a pass on 0 rows checks the output schema only, not the operator
+    empty = sorted(n for n, r in results.items()
+                   if r.get("match") is True and r.get("rows") == 0)
+    print("[empty-pass] " + " ".join(empty))
     if json_out:
         # a --only run is a SUBSET artifact — record the selection so a
         # targeted re-proof file is self-describing and cannot be mistaken

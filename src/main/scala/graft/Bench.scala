@@ -235,9 +235,6 @@ object Bench {
       (baseDropped.filter(curIds.contains) ++ curDropped).distinct.sorted)
   }
 
-  def medianRatio(current: Seq[(String, Double)], baseline: Map[String, Double]): Option[Double] =
-    historySignal(current, baseline).factor
-
   /** Landing pad for the full-precision bench JSON. Cwd-relative
     * `bench_out.json` is the driver's contract path and stays the
     * default, but it is also a TRAP on a shared box: two benches (a

@@ -16,10 +16,6 @@ object Catalog {
   def tableExists(spark: SparkSession, sfDir: String, name: String): Boolean =
     Workdirs.exists(spark, s"$sfDir/$name.parquet")
 
-  /** Registered-view existence (the temp-view flavor of S13). */
-  def viewExists(spark: SparkSession, name: String): Boolean =
-    spark.catalog.tableExists(name)
-
   /** ANSI-ish SQL type name for a Spark type (matches DuckDB's DESCRIBE
     * names for every type in the testdata schemas).
     */

@@ -500,15 +500,14 @@ object Dedup {
         Window.partitionBy(col("bkt")).orderBy(col("sh"))))
       .select(col("sh"), col("df"),
         (col("rn").cast("long") * B + col("bkt")).as("sid"))
-    // (doc_id, n, df, sid) postings MATERIALIZED once, doc_id-partitioned
-    // (round 21): the old repartition pin had two consumers (rank window,
-    // iset aggregation) and each cloned the pinned exchange — re-running
-    // the sid join and the explode behind it. The checkpoint preserves
-    // the hashpartitioning(doc_id), so the window and the groupBy both
-    // run exchange-free on the cached 32 B/posting blocks.
+    // (doc_id, n, df, sid) postings MATERIALIZED once (round 21): its two
+    // consumers (rank window, iset aggregation) would otherwise each
+    // re-run the sid join and the explode behind it. A checkpoint scan
+    // advertises no partitioning (Graph.pagerankFixedPoint's note), so
+    // each consumer shuffles the 32 B/posting blocks on doc_id itself; a
+    // doc_id repartition before the barrier would be one more shuffle.
     val postsSid = posts.join(sids, "sh")
       .select(col("doc_id"), col("n"), col("df"), col("sid"))
-      .repartition(col("doc_id"))
       .localCheckpoint(true)
     val prefixLen = col("n") - ceil(lit(threshold) * col("n") - lit(eps)) + 1
     // prefix postings materialized once more: the candidate self-join's
@@ -530,10 +529,9 @@ object Dedup {
       .agg(sort_array(collect_list(col("sid"))).as("iset"), first(col("n")).as("n"))
       .localCheckpoint(true)
     // alias self-join on the prefix postings (both sides read the one
-    // pinned postsSid exchange below the shared rank window). The length
-    // filter AND the positional filter are both inside the JOIN
-    // CONDITION, pruning rows before they are ever
-    // emitted: 1+min(na−ra, nb−rb) ≥ α ⟺ ra ≤ na−α+1 ∧ rb ≤ nb−α+1,
+    // `ranked` checkpoint). The length filter AND the positional filter
+    // are both inside the JOIN CONDITION, pruning rows before they are
+    // ever emitted: 1+min(na−ra, nb−rb) ≥ α ⟺ ra ≤ na−α+1 ∧ rb ≤ nb−α+1,
     // and since a pair's matches have co-monotone ranks on both sides
     // (one shared global order), a qualifying pair's FIRST match always
     // passes while every match of a positionally-hopeless pair fails —

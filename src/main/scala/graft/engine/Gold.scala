@@ -140,10 +140,10 @@ object Gold {
       // released on every exit, a failed gate included: a cached silver
       // outliving its materialization would pin memory for the session
       try {
-        val (_, soStats) = Quality.gateWith(so, Quality.orderChecks,
+        val soStats = Quality.gateWith(so, Quality.orderChecks,
           Seq(countDistinct(date_format(col("o_orderdate"), "yyyy-MM"))
             .cast("long").as("__months")))
-        val (_, slStats) = Quality.gateWith(sl, Quality.lineitemChecks, Nil)
+        val slStats = Quality.gateWith(sl, Quality.lineitemChecks, Nil)
         // the gold fact's money columns are DECIMAL(18,4) ON DISK (round
         // 16): exactness becomes a property of the schema instead of a
         // per-query cast convention — every downstream money aggregate is

@@ -1,9 +1,9 @@
 package graft.engine
 
-import org.apache.spark.SparkException
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import scala.util.control.NonFatal
 
 /** Landing zone: period-split order files + full dimension dumps + a
   * fingerprint manifest — the reference's `scripts/esplosione_dati.py`
@@ -126,11 +126,17 @@ object Landing {
     Workdirs.writeString(spark, schemasPath(landingRoot),
       StructType(tables.map { case (name, schema) => StructField(name, schema) }).json)
 
-  /** The schema [[explode]] wrote each landing table with, by table name. */
-  def schemas(spark: SparkSession, landingRoot: String): Map[String, StructType] =
-    DataType.fromJson(Workdirs.readString(spark, schemasPath(landingRoot)))
+  /** The schema [[explode]] wrote each landing table with, by table name.
+    * A file that is missing or cannot be parsed throws
+    * [[CorruptManifestException]].
+    */
+  def schemas(spark: SparkSession, landingRoot: String): Map[String, StructType] = {
+    val path = schemasPath(landingRoot)
+    try DataType.fromJson(Workdirs.readString(spark, path))
       .asInstanceOf[StructType].fields
       .map(f => f.name -> f.dataType.asInstanceOf[StructType]).toMap
+    catch { case NonFatal(e) => throw new CorruptManifestException(path, s"unreadable: ${e.getMessage}", e) }
+  }
 
   /** Manifest as a JSON dataset (S12): one `{"file","fingerprint","rows"}`
     * object per line, written/read with Spark's JSON source.
@@ -143,26 +149,29 @@ object Landing {
   }
 
   /** The manifest, read with its fixed schema (no inference job). A
-    * malformed line fails the read (FAILFAST), a line missing a field
-    * would read as nulls, and a manifest with no entry (explode gates
-    * orders NonEmpty, so it never writes one) is an uncommitted write:
-    * each throws [[CorruptManifestException]] instead of yielding a null
-    * entry or a run that silently ingests nothing.
+    * missing manifest or a malformed line fails the read (FAILFAST), a
+    * line missing a field would read as nulls, and a manifest with no
+    * entry (explode gates orders NonEmpty, so it never writes one) is an
+    * uncommitted write: each throws [[CorruptManifestException]] instead
+    * of yielding a null entry or a run that silently ingests nothing.
     */
   def readManifest(spark: SparkSession, landingRoot: String): Seq[LandingFile] = {
     val dir = s"$landingRoot/_manifest"
     val rows =
       try spark.read.schema(Encoders.product[LandingFile].schema)
         .option("mode", "FAILFAST").json(dir).collect()
-      catch { case e: SparkException => throw new CorruptManifestException(dir, e.getMessage, e) }
-    if (rows.isEmpty) throw new CorruptManifestException(dir, "no entries", null)
+      catch { case NonFatal(e) => throw new CorruptManifestException(dir, s"unreadable: ${e.getMessage}", e) }
+    if (rows.isEmpty) throw new CorruptManifestException(dir, "no entries")
     rows.toSeq.map { r =>
-      if (r.anyNull) throw new CorruptManifestException(dir, s"incomplete entry $r", null)
+      if (r.anyNull) throw new CorruptManifestException(dir, s"incomplete entry $r")
       LandingFile(r.getString(0), r.getString(1), r.getLong(2))
     }.sortBy(_.file)
   }
 
-  /** The manifest cannot be parsed, holds no entry, or an entry lacks a field. */
-  final class CorruptManifestException(dir: String, detail: String, cause: Throwable)
-    extends IllegalStateException(s"corrupt landing manifest $dir: $detail", cause)
+  /** The manifest or `_schemas.json` is missing or cannot be parsed (the
+    * read's error is the cause), the manifest holds no entry, or an entry
+    * lacks a field.
+    */
+  final class CorruptManifestException(path: String, detail: String, cause: Throwable = null)
+    extends IllegalStateException(s"corrupt landing manifest $path: $detail", cause)
 }

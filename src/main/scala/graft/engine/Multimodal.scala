@@ -48,30 +48,6 @@ object Multimodal {
     Array(sum / n, math.sqrt(math.max(0.0, sumSq / n - (sum / n) * (sum / n))), mn, mx)
   }
 
-  /** Frame sampling shape (video/audio): every `stride`-th fixed-size
-    * chunk of the payload as one "frame". A real decoder replaces the
-    * byte-slicing with codec frame extraction; the schema contract
-    * (array of fixed-size binary frames per row) and the partition-local
-    * execution are what downstream code depends on.
-    */
-  def sampleFrames(bytes: Array[Byte], frameSize: Int, stride: Int): Array[Array[Byte]] = {
-    require(frameSize > 0 && stride > 0)
-    (0 until bytes.length by frameSize * stride)
-      .map(off => bytes.slice(off, math.min(off + frameSize, bytes.length)))
-      .filter(_.nonEmpty)
-      .toArray
-  }
-
-  /** Resize shape (image): downsample the payload to `targetLen` bytes by
-    * striding — stands in for a pixel-space resize, keeping the
-    * fixed-output-size contract a batch featurizer needs.
-    */
-  def resizeStub(bytes: Array[Byte], targetLen: Int): Array[Byte] = {
-    require(targetLen > 0)
-    if (bytes.length <= targetLen) bytes
-    else Array.tabulate(targetLen)(i => bytes((i.toLong * bytes.length / targetLen).toInt))
-  }
-
   /** Wrap a documents-shaped table as a media table (text bytes standing
     * in for image/audio payloads — the plumbing under test, not the codec).
     */

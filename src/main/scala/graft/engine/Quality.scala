@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** The reference's fail-fast data-quality gate (SURVEY §2.11): Pandera
   * schemas + SQL DQC checks (`etl/tasks/silver.py:7-19,42,58`,
   * `scripts/bronze_incremental.py:68-106`) re-expressed as a reusable
-  * `Seq[Check] → Either[Violations, DataFrame]` module.
+  * `Seq[Check]` gate.
   *
   * Scale posture: ALL checks are evaluated in ONE distributed aggregation
   * pass (a single `agg` of conditional counters — the A2 shape), never by
@@ -49,31 +49,34 @@ object Quality {
       "quality gate failed: " +
         violations.map(v => s"${v.check}=${v.count}").mkString(", "))
 
-  /** Evaluate all checks in one aggregation pass. Left = violations
-    * (fail-fast input for [[gate]]), Right = the validated frame.
+  /** Blocking gate: evaluate all checks in ONE aggregation pass and throw
+    * on any violation so downstream stages never run (the reference's
+    * pipeline-abort semantics, `README_FASE1.md:61-62`). `extras` are
+    * caller-supplied aggregate columns folded into the SAME pass and
+    * returned in the counters Row (access by the alias the caller gave
+    * each column): Gold.ensure's layout sizing gets its whole-table
+    * statistics from the gate's scan, not a second one (at 100 TB a
+    * second full pass over silver is a real job).
     */
-  def validate(df: DataFrame, checks: Seq[Check]): Either[Seq[Violation], DataFrame] =
-    validateWith(df, checks, Nil).map(_._1)
-
-  /** [[validate]] with caller-supplied aggregate columns folded into the
-    * SAME single pass, returned as the extras Row (access by the alias
-    * the caller gave each column). For callers that need a cheap
-    * whole-table statistic alongside the gate — Gold.ensure's layout
-    * sizing — so gating + stats cost ONE table scan, not two (at 100 TB
-    * a second full pass over silver is a real job).
-    */
-  def validateWith(df: DataFrame, checks: Seq[Check], extras: Seq[Column])
-      : Either[Seq[Violation], (DataFrame, Row)] = {
+  def gateWith(df: DataFrame, checks: Seq[Check], extras: Seq[Column]): Row = {
     val all = counters(checks) ++ extras
     val row = df.agg(all.head, all.tail: _*).collect()(0)
     val violations = violationsOf(checks, Some(row))
-    if (violations.nonEmpty) Left(violations) else Right((df, row))
+    if (violations.nonEmpty) throw new QualityGateException(violations)
+    row
   }
 
-  /** [[validate]] per value of `key`, still ONE aggregation pass (a
-    * `groupBy(key)` of the same counters): each of `keys`, in order, with
-    * its row count and its violations (empty = passed). A listed key with
-    * no rows counts 0 rows, so it fails [[NonEmpty]] if that is checked.
+  /** [[gateWith]] with no extras: the gated frame, unchanged. */
+  def gate(df: DataFrame, checks: Seq[Check]): DataFrame = {
+    gateWith(df, checks, Nil)
+    df
+  }
+
+  /** The [[gateWith]] counters per value of `key`, still ONE aggregation
+    * pass (a `groupBy(key)`), without throwing: each of `keys`, in order,
+    * with its row count and its violations (empty = passed). A listed key
+    * with no rows counts 0 rows, so it fails [[NonEmpty]] if that is
+    * checked.
     */
   def validateBy(df: DataFrame, key: String, keys: Seq[String], checks: Seq[Check])
       : Seq[(String, Long, Seq[Violation])] = {
@@ -96,17 +99,6 @@ object Quality {
     checks.filter(_ != NonEmpty).map(c => Violation(c.name, n(c.name))).filter(_.count > 0) ++
       (if (checks.contains(NonEmpty) && n("__rows") == 0) Seq(Violation(NonEmpty.name, 1)) else Nil)
   }
-
-  /** Blocking gate: throw on any violation so downstream stages never run
-    * (the reference's pipeline-abort semantics, `README_FASE1.md:61-62`).
-    */
-  def gate(df: DataFrame, checks: Seq[Check]): DataFrame =
-    validate(df, checks).fold(v => throw new QualityGateException(v), identity)
-
-  /** Blocking [[validateWith]]: the gated frame plus the extras Row. */
-  def gateWith(df: DataFrame, checks: Seq[Check], extras: Seq[Column]): (DataFrame, Row) =
-    validateWith(df, checks, extras)
-      .fold(v => throw new QualityGateException(v), identity)
 
   /** The silver-orders contract (`silver.py:8-18` analog). */
   val orderChecks: Seq[Check] = Seq(

@@ -128,7 +128,7 @@ object Similarity {
     * kernel: one corpus pass → (vec_id, sig), where `sig` packs
     * `planes` projection-sign bits into one long (bit p = sign of the
     * projection on deterministic ±1 hyperplane p; for a pair at angle θ,
-    * E[hamming] = planes·θ/π). All SRP consumers ([[srpNearDup]],
+    * E[hamming] = planes·θ/π). All SRP consumers ([[srpBlockedNearDup]],
     * [[srpClusteredNearDup]]) share this; the 8-byte signature — not
     * the vector — is what rides any downstream shuffle.
     *
@@ -153,31 +153,6 @@ object Similarity {
       .select(col("vec_id"), sigBits.as("sig"))
       .repartition(col("vec_id"))
   }
-
-  /** Flat-banded SRP near-dup: banded LSH over [[srpSignatures]]
-    * generates candidates, and pairs at signature hamming ≤ t are
-    * emitted. Completeness is o21's pigeonhole argument verbatim: with
-    * t < bands a qualifying pair dirties at most t bands and must share
-    * one clean band, so the banded join misses nothing — the output is
-    * EXACTLY "all pairs at hamming ≤ t".
-    *
-    * Scale posture, stated honestly: band width is the pruning dial,
-    * and it is bounded by planes/bands with bands > t. This corpus's
-    * CLOSEST embedding pairs sit at ~34° (hamming 12/64), so asking for
-    * them needs t=15 with 16×4-bit bands — a 4-bit band passes 1/16 of
-    * random pairs, weak pruning, inherent to a wide angular radius;
-    * the flat band join is then O(n²) candidates. That is why the
-    * REGISTRY runs [[srpClusteredNearDup]] (same signatures, candidates
-    * scoped to k-means blocks) — this flat variant remains correct and
-    * is the right call only at a tight radius (t ≤ 7/64 with 8×8-bit
-    * bands, ~3% pass rate) or a bounded corpus. It is
-    * [[srpBlockedNearDup]] with every vector in one block.
-    */
-  def srpNearDup(emb: DataFrame, planes: Int = 64, bands: Int = 16,
-                 t: Int = 15, quantScale: Int = 1000): DataFrame =
-    srpBlockedNearDup(emb, emb.select(col("vec_id"), lit(0).as("cluster")),
-      planes, bands, t, quantScale)
-      .select(col("a"), col("b"), col("hamming"))
 
   /** Cluster-scoped SRP near-dup: [[srpSignatures]] banding composed
     * with the [[kmeansAssign]] coarse blocks — the production shape for
@@ -212,9 +187,9 @@ object Similarity {
 
   /** The block-agnostic candidate core [[srpClusteredNearDup]] is built
     * on: SRP banding scoped to a caller-supplied `blocks(vec_id,
-    * cluster)` assignment — any blocking discipline plugs in (flat
-    * [[kmeansAssign]] blocks, the two-level [[kmeansAssign2]] `block`
-    * ids renamed to `cluster`, or an upstream ingest partitioner).
+    * cluster)` assignment — any blocking discipline plugs in
+    * ([[kmeansAssign]] blocks, one constant block for flat banding, or
+    * an upstream ingest partitioner).
     * Semantics, per the srpClusteredNearDup contract: exactly "all
     * same-block pairs at signature hamming ≤ t" (within a block the
     * banding stays pigeonhole-complete for t < bands).
@@ -339,9 +314,7 @@ object Similarity {
 
   /** Lloyd update rounds over a [[quantizedShifted]] corpus: returns the
     * FINAL (cluster, cv, cn2) centroid frame, eagerly checkpointed
-    * (≤ k rows; see [[lloydRounds]]). Shared by [[kmeansAssign]] (flat
-    * codebook) and [[kmeansAssign2]] (coarse stage of the two-level
-    * codebook).
+    * (≤ k rows; see [[lloydRounds]]). Used by [[kmeansAssign]].
     */
   private def lloydCentroids(q: DataFrame, k: Int, iterations: Int): DataFrame = {
     // ≥1 round required: with 0 rounds the returned init codebook would
@@ -354,7 +327,7 @@ object Similarity {
     // corpus cost for identical bits. Released before returning; the
     // caller's final assignment pass pays exactly one fresh scan. At
     // 100 TB the quantizer trains on a bounded sample and this cached
-    // frame IS the sample (the kmeansAssign2/pqTopK contract).
+    // frame IS the sample (the pqTopK contract).
     val qT = q.localCheckpoint(true)
     val init = qT.filter(col("vec_id") < k)
       .select(col("vec_id").cast("int").as("cluster"),
@@ -369,8 +342,8 @@ object Similarity {
     * each assigns every `train` row (vec_id, [part], qv, qn2) to its
     * [[nearest]] centroid, then rebuilds each centroid as its members'
     * per-position `sum div count`. `part` scopes the codebook (none:
-    * [[lloydCentroids]]; `cluster`: [[kmeansAssign2]]'s fine cells;
-    * `sub`: [[pqTopK]]'s sub-spaces) and `id` names the centroid.
+    * [[lloydCentroids]]; `sub`: [[pqTopK]]'s sub-spaces) and `id` names
+    * the centroid.
     *
     * Only the final ([part], id, cv, cn2) codebook is eagerly
     * checkpointed (round 20): each lazy round is a broadcast child of
@@ -399,82 +372,6 @@ object Similarity {
       cent = if (i == iterations) next.localCheckpoint(true) else next
     }
     cent
-  }
-
-  /** Two-level coarse/fine quantizer — the capacity dial AFTER
-    * capacity-bounded flat k (SCALE.md's stated "next dial"): when
-    * k ∝ n makes flat assignment's n·k dot products the dominant cost,
-    * split the codebook into kCoarse·kFine cells. Training and
-    * assignment then cost n·(kCoarse + kFine) dots per round instead of
-    * n·k — each row finds its coarse cell against the ≤kCoarse
-    * broadcast centroids, then its fine centroid against only ITS
-    * cell's ≤kFine candidates (a broadcast join on the coarse key,
-    * never the full fine codebook). This is the IVF coarse-quantizer +
-    * per-list sub-quantizer recipe (FAISS `IVF…,IVF…` / IMI family,
-    * minus PQ compression) in declarative Spark.
-    *
-    * Exactness discipline is [[kmeansAssign]]'s, unchanged: quantized
-    * shifted integer arithmetic, argmin ties to the smaller
-    * (cluster, fine) id, floor-div updates, no RNG — the assignment is
-    * partition-invariant and bit-reproducible across engines. Fine
-    * seeding is deterministic and DISTRIBUTED: per (coarse cell,
-    * residue `vec_id % kFine`) the MIN vec_id seeds — a map-side-
-    * combinable aggregate, no window over the corpus, no driver
-    * collection. An empty (cell, residue) just seeds fewer fine
-    * centroids there, and a (cell, fine) that loses all members drops
-    * out (the kmeansAssign drop-out policy; no RNG re-seeding).
-    *
-    * Scale shape: the fine rounds iterate over a ONE-TIME
-    * localCheckpoint of the coarse-assigned quantized corpus — released
-    * before returning — so each round is one broadcast join + one
-    * map-side-combined update, not a replay of the coarse stage (at
-    * 100 TB the quantizer trains on a bounded sample; that cached frame
-    * IS the sample). The RETURNED assignment is lazy and STATELESS: one
-    * pass over the source against the two final broadcast codebooks
-    * (coarse argmin, then fine argmin within the cell), so callers can
-    * apply it to the full corpus — or to tomorrow's ingest — without
-    * holding any training state. Output:
-    * (vec_id, cluster, fine, block = cluster·kFine + fine, dist2).
-    */
-  def kmeansAssign2(emb: DataFrame, kCoarse: Int = 8, kFine: Int = 8,
-                    iterations: Int = 3, quantScale: Int = 1000): DataFrame = {
-    val q = quantizedShifted(emb, quantScale)
-    val coarse = lloydCentroids(q, kCoarse, iterations)
-    // each row's coarse cell (vec_id, cluster, qv, qn2): cached once for
-    // the fine rounds, and re-run by the final stateless pass, so the
-    // training membership is identical by construction
-    def inCell(cells: DataFrame): DataFrame =
-      nearest(q.crossJoin(broadcast(cells)), Nil, "cluster", "qv", "qn2")
-        .select(col("vec_id"), col("m.cluster").as("cluster"), col("qv"), col("qn2"))
-    val qa = inCell(coarse).localCheckpoint(true)
-    val seedIds = qa.groupBy(col("cluster"),
-        pmod(col("vec_id"), lit(kFine)).cast("int").as("fine"))
-      .agg(min(col("vec_id")).as("vec_id"))
-    val fineInit = qa.join(broadcast(seedIds), Seq("vec_id", "cluster"))
-      .select(col("cluster"), col("fine"),
-        col("qv").as("cv"), col("qn2").as("cn2"))
-    val fineCent = lloydRounds(qa, fineInit, Some("cluster"), "fine", iterations)
-    // the final fine codebook is materialized; the training corpus cache
-    // is dead weight from here — release it NOW (the returned frame
-    // below reads only the source and the two ≤k-row codebooks)
-    qa.unpersist()
-    // coverage guard for out-of-training rows: the stateless pass below
-    // inner-joins fineCent on the coarse cell, so a cell with no fine
-    // centroids would silently DROP any vector whose coarse argmin lands
-    // there. Training rows can't hit this (fineCent's cells are exactly
-    // the argmin winners over qa), but "tomorrow's ingest" can — a coarse
-    // centroid may survive its last update round yet win zero rows in the
-    // final qa assignment. Restricting the argmin candidates to covered
-    // cells is a no-op for every training row (its winner is covered by
-    // construction) and routes new rows to their nearest COVERED cell
-    // instead of vanishing. ≤kCoarse-row semi-join, still broadcast.
-    val coveredCoarse =
-      coarse.join(fineCent.select(col("cluster")).distinct(), Seq("cluster"))
-    nearest(inCell(coveredCoarse).join(broadcast(fineCent), Seq("cluster")),
-        Seq(col("cluster")), "fine")
-      .select(col("vec_id"), col("cluster"), col("m.fine").as("fine"),
-        (col("cluster") * lit(kFine) + col("m.fine")).cast("int").as("block"),
-        col("m.d").cast("long").as("dist2"))
   }
 
   /** Per-label centroids of the embedding column, computed by position
@@ -560,12 +457,11 @@ object Similarity {
       k, col("cos").desc, col("neighbor_id"))
   }
 
-  /** PQ (product-quantization) ANN — the compression dial AFTER [[sq8TopK]]
-    * and the stated "next dial" on the two-level codebook
-    * ([[kmeansAssign2]]): vectors are split into `m` contiguous
-    * sub-vectors, each sub-space gets its own `ksub`-entry codebook
-    * (integer-exact Lloyd's, the [[kmeansAssign]] discipline), and every
-    * corpus vector is stored as `m` small codes. Queries never touch
+  /** PQ (product-quantization) ANN — the compression dial AFTER
+    * [[sq8TopK]]: vectors are split into `m` contiguous sub-vectors,
+    * each sub-space gets its own `ksub`-entry codebook (integer-exact
+    * Lloyd's, the [[kmeansAssign]] discipline), and every corpus vector
+    * is stored as `m` small codes. Queries never touch
     * corpus vectors during the candidate scan: a per-query lookup table
     * (`m·ksub` exact integer sub-distances) turns each candidate's codes
     * into an asymmetric-distance (ADC) score with `m` table lookups —

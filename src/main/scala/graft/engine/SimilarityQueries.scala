@@ -110,8 +110,8 @@ object SimilarityQueries {
         .orderBy(col("query_id"), col("cos").desc, col("neighbor_id"))),
 
     // multimodal frame sampling as PURE BUILTINS over the binary column
-    // (Multimodal.sampleFrames' contract — every stride-th fixed-size
-    // chunk — expressed as substring-on-binary inside a transform
+    // (the frame-sampling contract — every stride-th fixed-size chunk,
+    // whose reference MultimodalSpec pins this query to — expressed as substring-on-binary inside a transform
     // lambda, so the whole frame ledger stays in whole-stage codegen;
     // no typed map, no shuffle until the final order). Each frame gets
     // a portable md5 over its UPPERCASE hex — the cross-engine hash
@@ -141,7 +141,7 @@ object SimilarityQueries {
     }),
 
     // multimodal resize-to-fixed-size as PURE BUILTINS (the x08 recipe
-    // applied to Multimodal.resizeStub's strided-downsample contract:
+    // applied to the strided-downsample contract MultimodalSpec pins:
     // out[i] = bytes[(i·n) div 64]): payloads ≤ 64 bytes pass through,
     // longer ones are sampled at 64 exact integer stride positions; the
     // ledger row carries the md5 of the resized payload's uppercase hex

@@ -16,17 +16,9 @@ object TextHash {
 
   private val Seed = 42L
 
-  def tokens(text: UTF8String): Array[String] =
-    text.toString.trim.split("\\s+").filter(_.nonEmpty)
-
-  /** w-token shingles; a document shorter than w tokens is one shingle. */
-  def shingles(toks: Array[String], w: Int): Array[String] =
-    if (toks.length <= w) Array(toks.mkString(" "))
-    else Array.tabulate(toks.length - w + 1)(i => toks.slice(i, i + w).mkString(" "))
-
   // ---------------------------------------------------------------------
-  // Byte-level tokenizer core (round 21). The String-world pipeline above
-  // (decode UTF-8 → trim → regex split → re-encode every token/shingle
+  // Byte-level tokenizer core (round 21). The String-world pipeline it
+  // replaced (decode UTF-8 → trim → regex split → re-encode every token/shingle
   // for every hash call) dominated the signature kernels' cost: the
   // MinHash loop re-encoded each shingle k=32 times. The byte scan below
   // produces token [start,end) offsets directly on the UTF-8 bytes, and
@@ -34,7 +26,7 @@ object TextHash {
   // shingle is ENCODED exactly once however many seeds hash it.
   //
   // Exactness argument (unit-locked in TextKernelSpec against the String
-  // pipeline): `\s` is the ASCII set {09,0A,0B,0C,0D,20} and every
+  // pipeline, kept as the test sources' `Reference.tokens`/`shingles`): `\s` is the ASCII set {09,0A,0B,0C,0D,20} and every
   // multi-byte UTF-8 code unit is ≥ 0x80, so a byte scan finds exactly
   // the regex split boundaries; `String.trim` strips chars ≤ U+0020 —
   // exactly the bytes ≤ 0x20, each a single-byte codepoint; and parquet

@@ -18,8 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * tokenization uses [[TextHash.tokenOffsetsSqlTrim]] — the byte-exact
   * equivalent of `filter(split(trim(text), "\\s+"), t => t =!= "")`, which
   * trims 0x20 ONLY (Spark/DuckDB `trim`), unlike the JVM-trim signature
-  * kernels. Shingling is [[TextHash.shingles]]' contract (≤ w tokens ⇒ one
-  * shingle of all tokens). Byte-identity to the old chains is unit-locked
+  * kernels. A doc with ≤ w tokens is one shingle of all its tokens. Byte-identity to the old chains is unit-locked
   * in TextKernelSpec over the corpus AND adversarial control-byte /
   * non-ASCII / whitespace-edge inputs.
   */

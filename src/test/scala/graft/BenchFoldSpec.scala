@@ -97,20 +97,20 @@ class BenchFoldSpec extends AnyFunSuite {
     val base = (1 to 20).map(i => f"q$i%02d" -> 1.0).toMap
     // clean run: all ratios 1.0
     val clean = (1 to 20).map(i => f"q$i%02d" -> 1.0)
-    assert(Bench.medianRatio(clean, base).contains(1.0))
+    assert(Bench.historySignal(clean, base).factor.contains(1.0))
     // polluted run: everything 2×; median sees it even though one
     // query improved 10× (median, not mean — a legitimately changed
     // plan must not dominate)
     val polluted = (1 to 19).map(i => f"q$i%02d" -> 2.0) :+ ("q20" -> 0.1)
-    assert(Bench.medianRatio(polluted, base).exists(_ > Bench.HistoryNoisyFactor))
+    assert(Bench.historySignal(polluted, base).factor.exists(_ > Bench.HistoryNoisyFactor))
     // fast queries are excluded: their ratios are timer noise
     val fastBase = base ++ (21 to 40).map(i => f"f$i%02d" -> 0.01).toMap
     val fastWild = clean ++ (21 to 40).map(i => f"f$i%02d" -> 0.09)
-    assert(Bench.medianRatio(fastWild, fastBase).contains(1.0))
+    assert(Bench.historySignal(fastWild, fastBase).factor.contains(1.0))
     // fewer than HistoryMinQueries common slow queries: abstain (None)
-    assert(Bench.medianRatio(clean.take(Bench.HistoryMinQueries - 1), base).isEmpty)
+    assert(Bench.historySignal(clean.take(Bench.HistoryMinQueries - 1), base).factor.isEmpty)
     // no baseline at all: abstain
-    assert(Bench.medianRatio(clean, Map.empty).isEmpty)
+    assert(Bench.historySignal(clean, Map.empty).factor.isEmpty)
     // SHORT-ID baseline (the committed BENCH_CLEAN stdout format) must
     // match FULL registry names in the current run — the r18-found
     // abstention bug: exact-name intersection was empty, so the
@@ -118,10 +118,10 @@ class BenchFoldSpec extends AnyFunSuite {
     // format landed
     val shortBase = (1 to 20).map(i => f"q$i%02d" -> 1.0).toMap
     val fullClean = (1 to 20).map(i => f"q$i%02d_some_name" -> 2.0)
-    assert(Bench.medianRatio(fullClean, shortBase).contains(2.0))
+    assert(Bench.historySignal(fullClean, shortBase).factor.contains(2.0))
     // ambiguous short ids are dropped, not mismatched
     val collided = fullClean :+ ("q01_other_name" -> 9.0)
-    assert(Bench.medianRatio(collided, shortBase).contains(2.0))
+    assert(Bench.historySignal(collided, shortBase).factor.contains(2.0))
   }
 
   test("history sentinel reports coverage and dropped ids (not silent)") {

@@ -24,11 +24,8 @@ class CatalogSpec extends AnyFunSuite {
     assert(d == Map("k" -> "BIGINT", "s" -> "VARCHAR", "v" -> "DOUBLE"))
   }
 
-  test("tableExists probes the sfDir layout; viewExists probes the catalog") {
+  test("tableExists probes the sfDir layout") {
     assert(Catalog.tableExists(spark, "/root/testdata/sf0.001", "orders"))
     assert(!Catalog.tableExists(spark, "/root/testdata/sf0.001", "nonexistent"))
-    TestSpark.spark.range(1).createOrReplaceTempView("catalog_spec_view")
-    assert(Catalog.viewExists(spark, "catalog_spec_view"))
-    assert(!Catalog.viewExists(spark, "catalog_spec_missing"))
   }
 }

@@ -280,6 +280,26 @@ class DedupSpec extends AnyFunSuite {
     assert(groups(1L) == 1 && groups(3L) == 1 && groups(4L) == 1)
   }
 
+  test("o03_dup_probe lists each exact-duplicate group's md5, size and min id, in md5 order") {
+    // groups of 2 and 3 whose smallest id is not their first row, plus singletons
+    val docs = Seq(
+      7L -> "alpha beta gamma", 2L -> "alpha beta gamma",
+      9L -> "delta epsilon", 4L -> "delta epsilon", 11L -> "delta epsilon",
+      1L -> "zeta", 3L -> "eta theta", 5L -> "alpha beta gamma ")
+    val sfDir = TestSpark.tmpDir("o03-sf")
+    docs.toDF("doc_id", "text").write.parquet(s"$sfDir/documents.parquet")
+    def md5hex(s: String): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val want = docs.groupBy(_._2).values.filter(_.size > 1)
+      .map(g => (md5hex(g.head._2), g.size.toLong, g.map(_._1).min)).toSeq.sortBy(_._1)
+    assert(want.map(_._2).sorted == Seq(2L, 3L))
+    val got = graft.SparkEntry.queries("o03_dup_probe")(spark, sfDir).collect()
+      .map(r => (r.getAs[String]("text_md5"), r.getAs[Long]("cnt"), r.getAs[Long]("keep_id")))
+      .toSeq
+    assert(got == want)
+  }
+
   test("normalizedDedup collapses case/punct/whitespace variants, keeps min id") {
     val docs = Seq(
       (1L, "Hello,   World!"),

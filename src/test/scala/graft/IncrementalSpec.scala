@@ -332,10 +332,28 @@ class IncrementalSpec extends AnyFunSuite {
     // an uncommitted manifest write: the directory holds no entry
     val uncommitted = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
     emptyDir(s"$uncommitted/landing/_manifest")
-    for (root <- Seq(torn, partial, uncommitted)) {
-      intercept[Landing.CorruptManifestException] {
+    // missing landing metadata: the manifest directory, or _schemas.json
+    def without(rel: String): String = {
+      val root = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
+      graft.engine.Workdirs.deleteRecursively(new java.io.File(s"$root/landing/$rel"))
+      root
+    }
+    // _schemas.json cut in half: with its checksum sidecar the read fails
+    // the checksum, without it the JSON parse fails
+    def halvedSchemas(keepCrc: Boolean): String = {
+      val root = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
+      val file = java.nio.file.Paths.get(s"$root/landing/_schemas.json")
+      val bytes = java.nio.file.Files.readAllBytes(file)
+      java.nio.file.Files.write(file, bytes.take(bytes.length / 2))
+      if (!keepCrc) new java.io.File(s"$root/landing/._schemas.json.crc").delete()
+      root
+    }
+    for (root <- Seq(torn, partial, uncommitted, without("_manifest"),
+        without("_schemas.json"), halvedSchemas(keepCrc = true), halvedSchemas(keepCrc = false))) {
+      val e = intercept[Landing.CorruptManifestException] {
         Incremental.run(spark, s"$root/landing", s"$root/bronze")
       }
+      assert(e.getMessage.contains(s"$root/landing/_"), e.getMessage)
       assert(!new java.io.File(s"$root/bronze").exists(), "nothing may be ingested")
     }
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Multimodal
+import graft.Reference.{resizeStub, sampleFrames}
 
 class MultimodalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -17,7 +18,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("sampleFrames: fixed-size frames at the given stride") {
     val bytes = Array.tabulate(100)(_.toByte)
-    val frames = Multimodal.sampleFrames(bytes, frameSize = 10, stride = 2)
+    val frames = sampleFrames(bytes, frameSize = 10, stride = 2)
     assert(frames.length == 5)
     assert(frames.forall(_.length == 10))
     assert(frames(1)(0) == 20.toByte) // second frame starts at offset frameSize*stride
@@ -33,7 +34,7 @@ class MultimodalSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     docs.foreach { r =>
       val bytes = r.getString(1).getBytes("UTF-8")
-      val frames = Multimodal.sampleFrames(bytes, frameSize = 32, stride = 4)
+      val frames = sampleFrames(bytes, frameSize = 32, stride = 4)
       frames.zipWithIndex.foreach { case (f, i) =>
         assert(got((r.getLong(0), i)) == f.length.toLong,
           s"doc ${r.getLong(0)} frame $i length mismatch")
@@ -55,7 +56,7 @@ class MultimodalSpec extends AnyFunSuite {
     docs.foreach { r =>
       val bytes = r.getString(1).getBytes("UTF-8")
       if (bytes.nonEmpty) {
-        val resized = Multimodal.resizeStub(bytes, 64)
+        val resized = resizeStub(bytes, 64)
         val hex = resized.map(b => "%02X".format(b & 0xff)).mkString
         assert(got(r.getLong(0)) == md5hex(hex),
           s"doc ${r.getLong(0)} resize ledger mismatch")
@@ -65,10 +66,10 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("resizeStub: fixed output length, endpoints preserved-ish") {
     val bytes = Array.tabulate(1000)(i => (i % 251).toByte)
-    val out = Multimodal.resizeStub(bytes, 64)
+    val out = resizeStub(bytes, 64)
     assert(out.length == 64)
     assert(out(0) == bytes(0))
-    assert(Multimodal.resizeStub(Array[Byte](1, 2), 64).length == 2) // no upsampling
+    assert(resizeStub(Array[Byte](1, 2), 64).length == 2) // no upsampling
   }
 
   test("featurize: partition-parallel map preserves ids and row count") {

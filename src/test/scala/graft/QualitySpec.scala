@@ -15,9 +15,10 @@ class QualitySpec extends AnyFunSuite {
   ).toDF("k", "status", "price")
 
   test("clean frame passes all checks") {
-    val out = Quality.validate(df,
-      Seq(NonEmpty, NotNull("k"), NonNegative("price"), InSet("status", Seq("F", "P", "O"))))
-    assert(out.isRight)
+    val checks =
+      Seq(NonEmpty, NotNull("k"), NonNegative("price"), InSet("status", Seq("F", "P", "O")))
+    val row = Quality.gateWith(df, checks, Nil) // throws on any violation
+    assert(checks.filter(_ != NonEmpty).forall(c => row.getAs[Long](c.name) == 0))
   }
 
   test("violations are reported per check with counts") {
@@ -26,8 +27,10 @@ class QualitySpec extends AnyFunSuite {
       (Some(2L), Some("X"), 2.0),
       (Option.empty[Long], Some("P"), 3.0)
     ).toDF("k", "status", "price")
-    val Left(vs) = Quality.validate(bad,
-      Seq(NotNull("k"), NonNegative("price"), InSet("status", Seq("F", "P", "O")))): @unchecked
+    val vs = intercept[QualityGateException] {
+      Quality.gate(bad,
+        Seq(NotNull("k"), NonNegative("price"), InSet("status", Seq("F", "P", "O"))))
+    }.violations
     val byName = vs.map(v => v.check -> v.count).toMap
     assert(byName("not_null(k)") == 2)
     assert(byName("non_negative(price)") == 1)
@@ -35,7 +38,9 @@ class QualitySpec extends AnyFunSuite {
   }
 
   test("NonEmpty flags an empty frame") {
-    val Left(vs) = Quality.validate(df.filter("k < 0"), Seq(NonEmpty)): @unchecked
+    val vs = intercept[QualityGateException] {
+      Quality.gate(df.filter("k < 0"), Seq(NonEmpty))
+    }.violations
     assert(vs.map(_.check) == Seq("non_empty"))
   }
 

@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 import graft.engine.Similarity
 
 class SimilaritySpec extends AnyFunSuite {
@@ -62,6 +63,15 @@ class SimilaritySpec extends AnyFunSuite {
     assert(cs.forall(_.getSeq[Double](1).length == 6))
   }
 
+  /** Flat SRP banding: [[Similarity.srpBlockedNearDup]] with every vector
+    * in one constant block, as (a, b, hamming).
+    */
+  private def srpNearDup(emb: DataFrame, planes: Int = 64, bands: Int = 16,
+                         t: Int = 15): DataFrame =
+    Similarity.srpBlockedNearDup(emb, emb.select(col("vec_id"), lit(0).as("cluster")),
+        planes, bands, t)
+      .select(col("a"), col("b"), col("hamming"))
+
   test("srpNearDup: identical and near-identical vectors found; banding is complete") {
     // 0/1 identical (hamming 0), 2 a tiny perturbation of 0 (small
     // hamming), 3 orthogonal-ish noise. The banded join's output must
@@ -72,7 +82,7 @@ class SimilaritySpec extends AnyFunSuite {
       (2L, Seq(0.5f, 0.5f, 0.5f, 0.5f, 0.5f, 0.52f), 0),
       (3L, Seq(1.0f, -1.0f, 0.9f, -0.7f, 0.2f, -0.4f), 1)
     ).toDF("vec_id", "embedding", "label")
-    val out = Similarity.srpNearDup(rows, planes = 64, bands = 16, t = 15)
+    val out = srpNearDup(rows, planes = 64, bands = 16, t = 15)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(out((0L, 1L)) == 0L, "identical vectors must pair at hamming 0")
     assert(out.contains((0L, 2L)) && out((0L, 2L)) == out((1L, 2L)),
@@ -176,14 +186,13 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("srpNearDup on the real corpus equals brute-force all-pairs hamming") {
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val got = Similarity.srpNearDup(emb)
+    val got = srpNearDup(emb)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // brute force: reuse the pipeline's own signatures, then all-pairs
     // in memory (500 vecs) — proves the BANDING loses nothing, which is
     // the claim the oracle also checks cross-engine
-    import org.apache.spark.sql.functions._
     val planes = 64
-    val sigs = Similarity.srpNearDup(emb, planes = planes, bands = 64, t = 63)
+    val sigs = srpNearDup(emb, planes = planes, bands = 64, t = 63)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val expected = sigs.filter(_._2 <= 15)
     assert(got == expected,
@@ -216,82 +225,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got.nonEmpty, "cluster-scoped near-dup must find pairs on the corpus")
     assert(got == expected,
       s"within-block banding must equal brute-force same-block hamming; " +
-        s"missing=${(expected.keySet -- got.keySet).size} spurious=${(got.keySet -- expected.keySet).size}")
-  }
-
-  test("kmeansAssign2 with kFine=1 reduces to the flat coarse assignment") {
-    // one fine centroid per coarse cell adds nothing: the two-level
-    // (vec_id, cluster) must equal kmeansAssign's (same coarse Lloyd
-    // rounds, same argmin arithmetic, same tie-breaks)
-    val flat = Similarity.kmeansAssign(interleaved, k = 3, iterations = 3)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val two = Similarity.kmeansAssign2(interleaved, kCoarse = 3, kFine = 1,
-        iterations = 3)
-      .collect()
-    assert(two.map(r => r.getLong(0) -> r.getInt(1)).toMap == flat,
-      "kFine=1 coarse assignment must equal the flat k-means assignment")
-    assert(two.forall(_.getInt(2) == 0), "the only fine id is 0")
-    assert(two.forall(r => r.getInt(3) == r.getInt(1)),
-      "block = cluster*1 + 0 = cluster")
-  }
-
-  test("kmeansAssign2 is partition-invariant and block ids are consistent") {
-    val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val a = Similarity.kmeansAssign2(emb, kCoarse = 4, kFine = 3, iterations = 2)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4)))
-    val b = Similarity.kmeansAssign2(emb.repartition(7), kCoarse = 4, kFine = 3,
-        iterations = 2)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4)))
-    assert(a.toSet == b.toSet,
-      "floor-div integer arithmetic must make the two-level result partition-free")
-    assert(a.length == 500, "every vector assigned exactly once")
-    assert(a.forall { case (_, c, f, blk, _) =>
-      f >= 0 && f < 3 && blk == c * 3 + f
-    }, "fine in [0,kFine) and block = cluster*kFine + fine")
-    // the two-level codebook must actually subdivide: more distinct
-    // blocks than coarse cells on a 500-vector real corpus
-    assert(a.map(_._4).distinct.length > a.map(_._2).distinct.length,
-      "fine level must subdivide at least one coarse cell")
-  }
-
-  test("kmeansAssign2's returned plan is cartesian-free and codebook-broadcast only") {
-    // the PlanAuditSpec contract applied to the non-registry path: the
-    // stateless returned assignment must meet the corpus only through
-    // broadcast codebooks (BNL over <=k rows / broadcast hash join),
-    // never a cartesian product
-    val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val plan = Similarity.kmeansAssign2(emb, kCoarse = 4, kFine = 3, iterations = 1)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"),
-      "two-level assignment must not plan a cartesian product")
-    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
-      "codebooks must arrive by broadcast")
-  }
-
-  test("srpBlockedNearDup over two-level blocks equals brute-force same-block hamming") {
-    val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val blocks2 = Similarity.kmeansAssign2(emb, kCoarse = 4, kFine = 2,
-      iterations = 2)
-    val got = Similarity.srpBlockedNearDup(emb,
-        blocks2.select(col("vec_id"), col("block").as("cluster")))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getInt(2), r.getLong(3)))
-      .toMap
-    val sigs = Similarity.srpSignatures(emb)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val blocks = blocks2
-      .collect().map(r => r.getLong(0) -> r.getInt(3)).toMap
-    val ids = sigs.keys.toSeq.sorted
-    val expected = (for {
-      i <- ids.indices.iterator
-      j <- (i + 1) until ids.length
-      a = ids(i); b = ids(j)
-      if blocks(a) == blocks(b)
-      h = java.lang.Long.bitCount(sigs(a) ^ sigs(b)).toLong
-      if h <= 15
-    } yield (a, b) -> (blocks(a), h)).toMap
-    assert(got.nonEmpty, "two-level blocked near-dup must find pairs on the corpus")
-    assert(got == expected,
-      s"two-level blocked banding must equal brute-force same-block hamming; " +
         s"missing=${(expected.keySet -- got.keySet).size} spurious=${(got.keySet -- expected.keySet).size}")
   }
 }

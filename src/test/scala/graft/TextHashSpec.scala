@@ -9,16 +9,16 @@ class TextHashSpec extends AnyFunSuite {
   private def u(s: String) = UTF8String.fromString(s)
 
   test("tokens: trims, splits on runs of whitespace, drops empties") {
-    assert(TextHash.tokens(u("  a  b\t c \n")).toSeq == Seq("a", "b", "c"))
-    assert(TextHash.tokens(u("single")).toSeq == Seq("single"))
-    assert(TextHash.tokens(u("   ")).toSeq == Seq.empty)
+    assert(Reference.tokens(u("  a  b\t c \n")).toSeq == Seq("a", "b", "c"))
+    assert(Reference.tokens(u("single")).toSeq == Seq("single"))
+    assert(Reference.tokens(u("   ")).toSeq == Seq.empty)
   }
 
   test("shingles: w-grams; short docs collapse to one shingle") {
     val toks = Array("a", "b", "c", "d")
-    assert(TextHash.shingles(toks, 3).toSeq == Seq("a b c", "b c d"))
-    assert(TextHash.shingles(Array("a", "b"), 3).toSeq == Seq("a b"))
-    assert(TextHash.shingles(Array("a", "b", "c"), 3).toSeq == Seq("a b c"))
+    assert(Reference.shingles(toks, 3).toSeq == Seq("a b c", "b c d"))
+    assert(Reference.shingles(Array("a", "b"), 3).toSeq == Seq("a b"))
+    assert(Reference.shingles(Array("a", "b", "c"), 3).toSeq == Seq("a b c"))
   }
 
   test("simhash64 is deterministic and identical for identical text") {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.engine.TextOps
 import graft.functions.{GraftFunctions, PortableHash, TextHash}
+import graft.Reference.{shingles => refShingles, tokens => refTokens}
 
 /** Round-21 kernel equivalence lock: the byte-level tokenizer/shingler
   * rewrites (TextHash.{minhash,simhash64,bottomK}, PortableHash.simhash64,
@@ -73,13 +74,6 @@ class TextKernelSpec extends AnyFunSuite {
   private def allTexts = adversarial ++ corpusTexts
 
   // ---- reference implementations: the pre-round-21 String pipelines ----
-
-  private def refTokens(text: UTF8String): Array[String] =
-    text.toString.trim.split("\\s+").filter(_.nonEmpty)
-
-  private def refShingles(toks: Array[String], w: Int): Array[String] =
-    if (toks.length <= w) Array(toks.mkString(" "))
-    else Array.tabulate(toks.length - w + 1)(i => toks.slice(i, i + w).mkString(" "))
 
   private def refHashToken(s: String, seed: Long): Long = {
     val utf8 = UTF8String.fromString(s)
