@@ -22,11 +22,7 @@ object Bucketing {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val warehouse = new java.net.URI(
       spark.conf.get("spark.sql.warehouse.dir")).getPath
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(warehouse, table))
+    Workdirs.deleteRecursively(new java.io.File(warehouse, table))
     df.write
       .mode("overwrite")
       .bucketBy(buckets, key)

@@ -1,20 +1,13 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
-/** Catalog introspection (SURVEY §2.1 S13/S14): existence probes and
-  * DESCRIBE, the reference's `information_schema.tables` checks
-  * (`scripts/bronze_incremental.py:56-63`) and column listing
-  * (`bronze_incremental.py:102`).
+/** Catalog introspection (SURVEY §2.1 S14): DESCRIBE, the reference's
+  * column listing (`scripts/bronze_incremental.py:102`). The existence
+  * probes of S13 are [[Workdirs.exists]].
   */
 object Catalog {
-
-  /** Does a (parquet-dir or single-file) table exist under sfDir? Probed
-    * via Hadoop FileSystem so the check works on HDFS/S3 paths too.
-    */
-  def tableExists(spark: SparkSession, sfDir: String, name: String): Boolean =
-    Workdirs.exists(spark, s"$sfDir/$name.parquet")
 
   /** ANSI-ish SQL type name for a Spark type (matches DuckDB's DESCRIBE
     * names for every type in the testdata schemas).

@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Materialized medallion layers (the reference's CTAS persistence —
   * `etl/tasks/silver.py:29-62`, `etl/tasks/gold.py:12-65` — SURVEY §2.1
@@ -144,15 +144,6 @@ object Gold {
           Seq(countDistinct(date_format(col("o_orderdate"), "yyyy-MM"))
             .cast("long").as("__months")))
         val slStats = Quality.gateWith(sl, Quality.lineitemChecks, Nil)
-        // the gold fact's money columns are DECIMAL(18,4) ON DISK (round
-        // 16): exactness becomes a property of the schema instead of a
-        // per-query cast convention — every downstream money aggregate is
-        // association-order-free by construction, and a new consumer
-        // cannot reintroduce the SUM(double) drift class by forgetting a
-        // cast. Values are unchanged: price carries ≤2 decimals (exact in
-        // DECIMAL(18,4) both ways), and freight's double product is
-        // canonicalized to its exact ≤4-decimal value (the t01 disc_price
-        // argument; the oracle factSql applies the same canonicalization).
         // size the fact's layout from the gate rows (zero extra passes):
         // distinct order months and the lineitem count (the gate's own
         // __rows counter) pick the calendar grain and, over the grain's
@@ -165,8 +156,6 @@ object Gold {
           if (grain == "yyyy-MM") months else math.max(1L, months / 12)
         val factFanout = adaptiveFanout(items, periods)
         val fact = Medallion.factSales(so, sl)
-          .withColumn("price", col("price").cast(DecimalType(18, 4)))
-          .withColumn("freight_value", col("freight_value").cast(DecimalType(18, 4)))
           .withColumn("order_period",
             date_format(col("order_purchase_timestamp"), grain))
         // each write returns the schema its frame was written with (the
@@ -212,28 +201,12 @@ object Gold {
 
   def silverLineitem(spark: SparkSession, sfDir: String): DataFrame =
     read(spark, sfDir, "silver_lineitem")
-  /** Gold fact in the canonical column order of [[Medallion.factSales]]
-    * (the `order_period` partition column stays available for pruning but
-    * is projected away here so downstream schemas are unchanged).
-    *
-    * Money columns read back as DOUBLE for the legacy consumer surface:
-    * the on-disk schema is DECIMAL(18,4) (see [[ensure]]) and the
-    * decimal→double conversion is exact for ≤4-decimal money values, so
-    * every pre-round-16 consumer sees bit-identical doubles. Consumers
-    * that aggregate money should prefer [[factDecimal]] and skip the
-    * double detour entirely.
+  /** Gold fact in the canonical column order of [[Medallion.factSales]],
+    * money as the DECIMAL(18,4) it is stored in (the `order_period`
+    * partition column stays available for pruning but is projected away
+    * here).
     */
   def fact(spark: SparkSession, sfDir: String): DataFrame =
-    factDecimal(spark, sfDir)
-      .withColumn("price", col("price").cast("double"))
-      .withColumn("freight_value", col("freight_value").cast("double"))
-
-  /** Gold fact with its NATIVE decimal money schema (price and
-    * freight_value as DECIMAL(18,4)) — the end-to-end exact-money
-    * surface: silver → gold → aggregate without any floating-point
-    * representation in between.
-    */
-  def factDecimal(spark: SparkSession, sfDir: String): DataFrame =
     read(spark, sfDir, "fact_sales")
       .select("order_id", "line_id", "customer_id", "product_id", "price",
         "freight_value", "order_purchase_timestamp", "delivery_time_days")

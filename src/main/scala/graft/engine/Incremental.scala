@@ -32,9 +32,10 @@ import scala.util.control.NonFatal
   * run instead of once per file (O(files²) writes).
   *
   * Every read declares the schema its table was written with: landing
-  * and bronze tables the one [[Landing.explode]] recorded next to the
-  * manifest (bronze holds landing rows), `_stage` the staged frame's own,
-  * the tech log [[LogEntry]]'s and the manifest its fixed one. So a run
+  * and bronze tables the one [[Landing.explode]] recorded in the
+  * manifest (bronze holds landing rows), `_stage` the staged frame's own
+  * and the tech log [[LogEntry]]'s; the manifest is parsed on the
+  * driver. So a run
   * starts no schema-inference job, a landing `period` reads back as the
   * manifest's string, and a file that lost a column or changed a type
   * fails the read or throws a named error instead of being ingested.
@@ -138,10 +139,10 @@ object Incremental {
     *    in the first (and counts there); duplicates within one file stay.
     */
   def run(spark: SparkSession, landingRoot: String, bronzeRoot: String): Seq[LogEntry] = {
-    val manifest = Landing.readManifest(spark, landingRoot)
     // every landing read, and every bronze read (bronze tables hold landing
-    // rows), declares the schema explode wrote: no inference job
-    lazy val schemas = Landing.schemas(spark, landingRoot)
+    // rows), declares the schema explode wrote in the manifest: no
+    // inference job
+    val Landing.Manifest(manifest, schemas) = Landing.readManifest(spark, landingRoot)
     val priorLog = readTechLog(spark, bronzeRoot)
     val prior = priorLog.map(e => e.file_name -> e).toMap
     val runTs = nextRunTs(priorLog)

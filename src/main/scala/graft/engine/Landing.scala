@@ -1,8 +1,11 @@
 package graft.engine
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 import scala.util.control.NonFatal
 
 /** Landing zone: period-split order files + full dimension dumps + a
@@ -21,9 +24,11 @@ import scala.util.control.NonFatal
   * file; corrections to already-ingested rows are dim-style full-replace
   * territory, not order-append territory.
   *
-  * Next to the manifest, `_schemas.json` records the schema each landing
-  * table was written with; [[Incremental.run]] reads landing and bronze
-  * with it instead of inferring it (one Spark job per inferred read).
+  * The manifest is one JSON file, `_manifest.json`, written and read on
+  * the driver. Besides the fingerprints it records the schema each
+  * landing table was written with; [[Incremental.run]] reads landing and
+  * bronze with it instead of inferring it (one Spark job per inferred
+  * read).
   */
 object Landing {
 
@@ -72,6 +77,10 @@ object Landing {
     val orders = Quality.gate(Tables.orders(spark, sfDir),
         Seq(Quality.NonEmpty, Quality.NotNull("o_orderdate")))
       .withColumn("period", date_format(col("o_orderdate"), periodFmt))
+    // the old manifest goes before the first landing write: an explode
+    // that dies part-way must not leave it describing new data, which a
+    // run would SKIP under the old fingerprints
+    Workdirs.delete(spark, manifestPath(landingRoot))
     // period + bounded hash salt (Gold.saltedPartitionedWrite): every
     // period is written by up to `writeFanout` parallel tasks instead of
     // one, with file count still bounded per period
@@ -107,70 +116,65 @@ object Landing {
         .collect()(0)
       LandingFile(s"${name}_full", r.getString(0), r.getLong(1))
     }
-    writeSchemas(spark, landingRoot, Seq("orders" -> orders.schema,
-      "lineitem" -> items.schema) ++ dims.map { case (name, _, dim) => name -> dim.schema })
-    val manifest = (orderFps.toSeq ++ dimFps).sortBy(_.file)
+    val manifest = Manifest((orderFps.toSeq ++ dimFps).sortBy(_.file),
+      (Seq("orders" -> orders.schema, "lineitem" -> items.schema) ++
+        dims.map { case (name, _, dim) => name -> dim.schema }).toMap)
     writeManifest(spark, landingRoot, manifest)
-    manifest
+    manifest.files
   }
 
-  private def schemasPath(landingRoot: String) = s"$landingRoot/_schemas.json"
-
-  /** Record, next to the manifest, the schema each landing table was
-    * written with (orders and lineitem with their string `period`
-    * partition column): one struct field per table, as Spark's JSON
-    * rendering of a [[StructType]].
+  /** What [[explode]] wrote: every file-group, sorted by name, and the
+    * schema each landing table was written with (orders and lineitem
+    * with their string `period` partition column), by table name.
     */
-  private def writeSchemas(spark: SparkSession, landingRoot: String,
-                           tables: Seq[(String, StructType)]): Unit =
-    Workdirs.writeString(spark, schemasPath(landingRoot),
-      StructType(tables.map { case (name, schema) => StructField(name, schema) }).json)
+  final case class Manifest(files: Seq[LandingFile], schemas: Map[String, StructType])
 
-  /** The schema [[explode]] wrote each landing table with, by table name.
-    * A file that is missing or cannot be parsed throws
-    * [[CorruptManifestException]].
+  /** The manifest as stored: each schema is Spark's JSON rendering of its
+    * [[StructType]], kept as a JSON object.
     */
-  def schemas(spark: SparkSession, landingRoot: String): Map[String, StructType] = {
-    val path = schemasPath(landingRoot)
-    try DataType.fromJson(Workdirs.readString(spark, path))
-      .asInstanceOf[StructType].fields
-      .map(f => f.name -> f.dataType.asInstanceOf[StructType]).toMap
-    catch { case NonFatal(e) => throw new CorruptManifestException(path, s"unreadable: ${e.getMessage}", e) }
+  private final case class Stored(files: Seq[LandingFile], schemas: Map[String, JsonNode])
+
+  // a missing or null field fails the parse instead of reading as 0 or null
+  private val json = JsonMapper.builder().addModule(DefaultScalaModule)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES,
+      DeserializationFeature.FAIL_ON_NULL_CREATOR_PROPERTIES)
+    .build()
+
+  private def manifestPath(landingRoot: String): String = s"$landingRoot/_manifest.json"
+
+  /** The manifest as one JSON file (S12, the reference's `_manifest.json`),
+    * written on the driver: no Spark job.
+    */
+  private def writeManifest(spark: SparkSession, landingRoot: String, m: Manifest): Unit =
+    Workdirs.writeString(spark, manifestPath(landingRoot), json.writeValueAsString(
+      Stored(m.files, m.schemas.map { case (name, schema) => name -> json.readTree(schema.json) })))
+
+  /** The manifest, read and parsed on the driver: no Spark job. A missing
+    * or unparsable file, a missing or null field, a manifest with no entry
+    * (explode gates orders NonEmpty, so it never writes one) and a table
+    * a run reads without a schema each throw [[CorruptManifestException]]
+    * instead of yielding a run that silently ingests nothing or fails
+    * part-way.
+    */
+  def readManifest(spark: SparkSession, landingRoot: String): Manifest = {
+    val path = manifestPath(landingRoot)
+    val m =
+      try {
+        val stored = json.readValue(Workdirs.readString(spark, path), classOf[Stored])
+        Manifest(stored.files.sortBy(_.file), stored.schemas.map { case (name, schema) =>
+          name -> DataType.fromJson(schema.toString).asInstanceOf[StructType] })
+      } catch { case NonFatal(e) => throw new CorruptManifestException(path, s"unreadable: ${e.getMessage}", e) }
+    if (m.files.isEmpty) throw new CorruptManifestException(path, "no entries")
+    val unschemed = (Seq("orders", "lineitem") ++ m.files.map(_.file)
+      .filter(_.endsWith("_full")).map(_.stripSuffix("_full"))).filterNot(m.schemas.contains)
+    if (unschemed.nonEmpty)
+      throw new CorruptManifestException(path, s"no schema for ${unschemed.mkString(", ")}")
+    m
   }
 
-  /** Manifest as a JSON dataset (S12): one `{"file","fingerprint","rows"}`
-    * object per line, written/read with Spark's JSON source.
-    */
-  def writeManifest(spark: SparkSession, landingRoot: String,
-                    entries: Seq[LandingFile]): Unit = {
-    import spark.implicits._
-    entries.toDF().coalesce(1).write.mode("overwrite")
-      .json(s"$landingRoot/_manifest")
-  }
-
-  /** The manifest, read with its fixed schema (no inference job). A
-    * missing manifest or a malformed line fails the read (FAILFAST), a
-    * line missing a field would read as nulls, and a manifest with no
-    * entry (explode gates orders NonEmpty, so it never writes one) is an
-    * uncommitted write: each throws [[CorruptManifestException]] instead
-    * of yielding a null entry or a run that silently ingests nothing.
-    */
-  def readManifest(spark: SparkSession, landingRoot: String): Seq[LandingFile] = {
-    val dir = s"$landingRoot/_manifest"
-    val rows =
-      try spark.read.schema(Encoders.product[LandingFile].schema)
-        .option("mode", "FAILFAST").json(dir).collect()
-      catch { case NonFatal(e) => throw new CorruptManifestException(dir, s"unreadable: ${e.getMessage}", e) }
-    if (rows.isEmpty) throw new CorruptManifestException(dir, "no entries")
-    rows.toSeq.map { r =>
-      if (r.anyNull) throw new CorruptManifestException(dir, s"incomplete entry $r")
-      LandingFile(r.getString(0), r.getString(1), r.getLong(2))
-    }.sortBy(_.file)
-  }
-
-  /** The manifest or `_schemas.json` is missing or cannot be parsed (the
-    * read's error is the cause), the manifest holds no entry, or an entry
-    * lacks a field.
+  /** The manifest is missing or cannot be parsed (the read's error is
+    * the cause), a field is missing or null, it holds no entry, or it
+    * lacks the schema of a table a run reads.
     */
   final class CorruptManifestException(path: String, detail: String, cause: Throwable = null)
     extends IllegalStateException(s"corrupt landing manifest $path: $detail", cause)

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Bronze → Silver → Gold medallion transforms, re-expressed over the
   * driver testdata's TPC-H-ish tables (Olist→testdata analogy per
@@ -111,6 +112,12 @@ object Medallion {
     *   - inner equi-join orders⋈items on the order key  (gold.py:62-63)
     *   - `WHERE o.order_status = 'delivered'` gate       (gold.py:64)
     *   - `date_diff('day', purchase, delivered)` measure (gold.py:61)
+    * Money (`price`, `freight_value`) is DECIMAL(18,4), the one type gold
+    * stores it in: every money aggregate over the fact is exact and
+    * association-order-free by schema. Values are the silver doubles':
+    * price carries ≤2 decimals, and freight's double product is
+    * canonicalized to its exact ≤4-decimal value (the oracle's factSql
+    * applies the same canonicalization).
     * The status filter is applied to orders BEFORE the join so it reaches
     * the parquet scan (PushedFilters) and shrinks the shuffled side.
     */
@@ -123,8 +130,8 @@ object Medallion {
         col("l_linenumber").as("line_id"),
         col("o_custkey").as("customer_id"),
         col("l_partkey").as("product_id"),
-        col("l_extendedprice").as("price"),
-        (col("l_extendedprice") * col("l_tax")).as("freight_value"),
+        col("l_extendedprice").cast(DecimalType(18, 4)).as("price"),
+        (col("l_extendedprice") * col("l_tax")).cast(DecimalType(18, 4)).as("freight_value"),
         col("o_orderdate").as("order_purchase_timestamp"),
         datediff(col("l_shipdate").cast("date"), col("o_orderdate").cast("date"))
           .cast("long").as("delivery_time_days"))

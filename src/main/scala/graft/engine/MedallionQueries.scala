@@ -53,9 +53,14 @@ object MedallionQueries {
     // back from the month-partitioned gold sink (S5 partitionBy + S6).
     // Total order over all columns: (order_id, line_id) alone is not
     // unique (see m02), and the partitioned sink's read order is
-    // arbitrary by construction.
+    // arbitrary by construction. The stored DECIMAL(18,4) money is
+    // rendered as DOUBLE (no raw DECIMAL output column, the m07 rule
+    // below): exact, since each value carries ≤4 decimals.
     "m06_fact_sales" -> ((s, d) =>
-      Gold.fact(s, d).orderBy("order_id", "line_id", "customer_id",
+      Gold.fact(s, d)
+        .withColumn("price", col("price").cast("double"))
+        .withColumn("freight_value", col("freight_value").cast("double"))
+        .orderBy("order_id", "line_id", "customer_id",
         "product_id", "price", "freight_value", "order_purchase_timestamp",
         "delivery_time_days")),
 
@@ -74,7 +79,7 @@ object MedallionQueries {
     // — twice-proven (m07 r16, m08 r17) and recorded as the SURVEY §8
     // decimal-render rule.
     "m07_gold_decimal_monthly" -> ((s, d) =>
-      Gold.factDecimal(s, d)
+      Gold.fact(s, d)
         .groupBy(date_format(col("order_purchase_timestamp"), "yyyy-MM").as("month"))
         .agg(sum(col("price")).cast("double").as("revenue"),
           sum(col("freight_value")).cast("double").as("freight"))

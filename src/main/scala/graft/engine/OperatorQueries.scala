@@ -452,10 +452,10 @@ object OperatorQueries {
       Sql.runSelect(s, llmResponse).get
     }),
 
-    // §2.12 over the DECIMAL-native view (round 17): the same text-to-SQL
+    // §2.12 over the DECIMAL money of fact_sales: the same text-to-SQL
     // surface, but the generated SELECT sums money with NO cast — the
-    // fact_sales_dec schema carries exactness, so a user (or LLM) cannot
-    // forget it. Final sums render as DOUBLE (the m07/x02 pattern:
+    // view's schema carries exactness, so a user (or LLM) cannot forget
+    // it. Final sums render as DOUBLE (the m07/x02 pattern:
     // exact decimal arithmetic, deterministic scalar render).
     "o82_sql_decimal_surface" -> ((s, d) => {
       Sql.registerGold(s, d)
@@ -464,7 +464,7 @@ object OperatorQueries {
           |SELECT date_format(order_purchase_timestamp, 'yyyy-MM') AS period,
           |       CAST(SUM(price) AS DOUBLE) AS revenue,
           |       CAST(SUM(freight_value) AS DOUBLE) AS freight
-          |FROM fact_sales_dec GROUP BY 1 ORDER BY 1;
+          |FROM fact_sales GROUP BY 1 ORDER BY 1;
           |```""".stripMargin
       Sql.runSelect(s, llmResponse).get
     })

@@ -133,10 +133,10 @@ object PipelineQueries {
         .withColumn("order_date", col("order_purchase_timestamp").cast("date"))
         .join(Gold.dimDate(s, d), "order_date")
         .groupBy(col("year"), col("quarter"))
-        // DECIMAL(18,4) sum (the repo-wide money discipline): exact and
-        // association-order-free, so the 2-decimal round can't flip
-        // between engines at larger SF
-        .agg(round(sum(col("price").cast("decimal(18,4)")), 2)
+        // the fact's DECIMAL(18,4) money sums exactly and association-
+        // order-free, so the 2-decimal round can't flip between engines
+        // at larger SF
+        .agg(round(sum(col("price")), 2)
           .cast("double").as("revenue"))
         .orderBy("year", "quarter")),
 
@@ -249,8 +249,7 @@ object PipelineQueries {
         .groupBy(col("customer_id"), col("customer_state"))
         .agg(
           count(lit(1)).as("line_count"),
-          round(sum(col("price").cast("decimal(18,4)") +
-            col("freight_value").cast("decimal(18,4)")), 2).cast("double")
+          round(sum(col("price") + col("freight_value")), 2).cast("double")
             .as("revenue"))
         .orderBy(col("revenue").desc, col("customer_id"))
         .limit(20)
@@ -347,7 +346,7 @@ object PipelineQueries {
           col("customer_id") === col("c_custkey"))
         .groupBy(col("customer_state"),
           date_format(col("order_purchase_timestamp"), "yyyy-MM").as("month"))
-        .agg(sum(col("price").cast("decimal(18,4)")).as("rev"))
+        .agg(sum(col("price")).as("rev"))
       monthly
         .withColumn("cum_revenue", sum(col("rev")).over(
           Window.partitionBy(col("customer_state")).orderBy(col("month"))
@@ -365,7 +364,7 @@ object PipelineQueries {
       import org.apache.spark.sql.expressions.Window
       val monthly = Gold.fact(s, d)
         .groupBy(date_format(col("order_purchase_timestamp"), "yyyy-MM").as("month"))
-        .agg(sum(col("price").cast("decimal(18,4)")).as("rev"))
+        .agg(sum(col("price")).as("rev"))
       monthly
         .withColumn("prev_rev", lag(col("rev"), 1).over(Window.orderBy(col("month"))))
         .select(col("month"),

@@ -4,12 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Distributed EXCLUSIVE prefix sum over a per-key frame — the shared
-  * second level of the o58/o79 chunked-cumsum pattern (round 21, global-
-  * window sweep). The first level (per-chunk sums over the dense doc_id
-  * space) is query-specific; this helper turns the per-chunk frame into
-  * per-chunk exclusive offsets WITHOUT a single global window over the
-  * whole chunk frame: chunks are grouped into super-chunks of
+/** Distributed EXCLUSIVE prefix sum — the o58/o79 chunked cumsum (round
+  * 21, global-window sweep). [[cumBefore]] runs the whole pattern over a
+  * dense id space: per-chunk sums, [[exclusiveOffsets]] over the chunk
+  * frame, broadcast back, then a window within each chunk.
+  * [[exclusiveOffsets]] turns the per-chunk frame into per-chunk
+  * exclusive offsets WITHOUT a single global window over the whole chunk
+  * frame: chunks are grouped into super-chunks of
   * `superChunk`, the one remaining `Window.orderBy` runs over the
   * super-chunk frame — data/(chunkSize·superChunk) rows, i.e. ~10⁵ rows
   * on one partition for a 10¹¹-doc corpus at the default sizes, bounded
@@ -43,5 +44,23 @@ object PrefixSum {
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .join(broadcast(scOffsets), "psc")
       .select(col(keyCol), (col("psc_offset") + col("in_sc")).as("offset"))
+  }
+
+  /** `df` plus `cum_before` = Σ valueCol over rows with a smaller idCol,
+    * for a dense long `idCol`. Ids are cut into chunks of `chunkSize`:
+    * the only partition-free window runs over the chunk offsets
+    * ([[exclusiveOffsets]]), and each chunk's rows are summed by a window
+    * partitioned by chunk. Adds `chunk` and `offset` columns too.
+    */
+  def cumBefore(df: DataFrame, idCol: String, valueCol: String, chunkSize: Long): DataFrame = {
+    val chunked = df.withColumn("chunk", floor(col(idCol) / chunkSize))
+    val offsets = exclusiveOffsets(
+      chunked.groupBy(col("chunk")).agg(sum(col(valueCol)).as("chunk_sum")),
+      "chunk", "chunk_sum")
+    chunked.join(broadcast(offsets), "chunk")
+      .withColumn("cum_before",
+        col("offset") + coalesce(sum(col(valueCol)).over(
+          Window.partitionBy(col("chunk")).orderBy(col(idCol))
+            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
   }
 }

@@ -18,9 +18,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * (`dashboard/queries.py:5`) holds by construction.
   *
   * ==Prompt contract (what generated SQL may use)==
-  * Views: `fact_sales` (money as DOUBLE, legacy), `fact_sales_dec`
-  * (money as DECIMAL(18,4) — prefer for any SUM/AVG over price or
-  * freight_value; exact by schema), `dim_customers`, `dim_products`,
+  * Views: `fact_sales` (money — `price`, `freight_value` — as
+  * DECIMAL(18,4), so SUM/AVG over it is exact by schema; cast a final
+  * money column to DOUBLE to render it), `dim_customers`, `dim_products`,
   * `dim_time`. Functions: full Spark SQL builtins PLUS the registered
   * graft kernels ([[graft.functions.GraftFunctions.sqlFunctions]]):
   * `simhash64(text)`, `simhash_portable64(text)`,
@@ -56,13 +56,6 @@ object Sql {
       if (registered.get(spark) != sfDir) {
         graft.functions.GraftFunctions.register(spark) // kernel SQL functions
         Gold.fact(spark, sfDir).createOrReplaceTempView("fact_sales")
-        // decimal-native twin of fact_sales (round 17): money columns stay
-        // DECIMAL(18,4), so an arbitrary user SELECT gets exact,
-        // association-order-free SUM/AVG over money WITHOUT remembering a
-        // cast — the schema carries the exactness contract that
-        // fact_sales-over-double consumers must re-state per query.
-        Gold.factDecimal(spark, sfDir)
-          .createOrReplaceTempView("fact_sales_dec")
         Gold.dimCustomer(spark, sfDir).createOrReplaceTempView("dim_customers")
         Gold.dimPart(spark, sfDir).createOrReplaceTempView("dim_products")
         Gold.dimDate(spark, sfDir).createOrReplaceTempView("dim_time")

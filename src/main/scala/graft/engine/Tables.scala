@@ -1,6 +1,8 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Parquet table loaders over a scale-factor directory of the driver
   * testdata (see TESTDATA.md). Mirrors the reference's bronze scans
@@ -41,17 +43,16 @@ object Tables {
     */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, d, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts").cast(
-            org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
+    eventTs(load(s, d, "events"))
+  }
+
+  /** `events` with its `ts` as TIMESTAMP, whichever physical type it was
+    * read as (see [[events]]); the batch and the streaming reads share it.
+    */
+  def eventTs(raw: DataFrame): DataFrame = raw.schema("ts").dataType match {
+    case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
+    case _ => raw
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")

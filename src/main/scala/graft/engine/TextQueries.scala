@@ -139,25 +139,15 @@ object TextQueries {
     // total are broadcast. All arithmetic is exact integer multiply/
     // floor-div, so the sample is bit-reproducible on both engines.
     "o79_pps_sample" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val k = 20
-      val chunkSize = 1000L
       val wdocs = Spread(documents(s, d))
         .select(col("doc_id"), col("n_chars").cast("long").as("weight"))
-        .withColumn("chunk", floor(col("doc_id") / chunkSize))
       // two-level chunked prefix sum (round 21): the chunk frame is
       // corpus/1000 rows — data-proportional, so its exclusive cumsum
       // must not be ONE global window; PrefixSum bounds the single-
       // partition frame at corpus/(1000·1024) rows (exact by integer
       // regrouping; unit-locked in TextQueriesSpec)
-      val offsets = PrefixSum.exclusiveOffsets(
-        wdocs.groupBy(col("chunk")).agg(sum(col("weight")).as("chunk_w")),
-        "chunk", "chunk_w")
-      val cum = wdocs.join(broadcast(offsets), "chunk")
-        .withColumn("cum_before",
-          col("offset") + coalesce(sum(col("weight")).over(
-            Window.partitionBy(col("chunk")).orderBy(col("doc_id"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      val cum = PrefixSum.cumBefore(wdocs, "doc_id", "weight", chunkSize = 1000L)
       val probes = wdocs.agg(sum(col("weight")).as("total"))
         .select(explode(sequence(lit(0), lit(k - 1))).as("j"), col("total"))
         .select(col("j"),
@@ -210,21 +200,11 @@ object TextQueries {
     // back → within-chunk window cumsum. Every stage is bounded: the
     // only single-partition window runs over corpus/C chunk rows.
     "o58_token_shard_packing" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val budget = 2000L
-      val chunkSize = 1000L
       val toked = Spread(documents(s, d))
         .select(col("doc_id"), size(toks).cast("long").as("n_tokens"))
-        .withColumn("chunk", floor(col("doc_id") / chunkSize))
       // two-level chunked prefix sum — see o79's note (round 21)
-      val offsets = PrefixSum.exclusiveOffsets(
-        toked.groupBy(col("chunk")).agg(sum(col("n_tokens")).as("chunk_tokens")),
-        "chunk", "chunk_tokens")
-      toked.join(broadcast(offsets), "chunk")
-        .withColumn("cum_before",
-          col("offset") + coalesce(sum(col("n_tokens")).over(
-            Window.partitionBy(col("chunk")).orderBy(col("doc_id"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      PrefixSum.cumBefore(toked, "doc_id", "n_tokens", chunkSize = 1000L)
         .select(col("doc_id"), col("n_tokens"),
           floor(col("cum_before") / budget).cast("long").as("shard"))
         .orderBy("doc_id")

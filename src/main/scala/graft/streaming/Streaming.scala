@@ -86,16 +86,8 @@ object Streaming {
           false, true, conf): Unit
       }
     } + "/events"
-    val schema = spark.read.parquet(dir).schema
-    val raw = spark.readStream.schema(schema).parquet(dir)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
+    graft.engine.Tables.eventTs(
+      spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir))
   }
 
   /** Watermarked hourly tumbling-window aggregation — the streaming twin

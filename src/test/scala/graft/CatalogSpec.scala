@@ -23,9 +23,4 @@ class CatalogSpec extends AnyFunSuite {
     val d = Catalog.describe(df).collect().map(r => (r.getString(0), r.getString(1))).toMap
     assert(d == Map("k" -> "BIGINT", "s" -> "VARCHAR", "v" -> "DOUBLE"))
   }
-
-  test("tableExists probes the sfDir layout") {
-    assert(Catalog.tableExists(spark, "/root/testdata/sf0.001", "orders"))
-    assert(!Catalog.tableExists(spark, "/root/testdata/sf0.001", "nonexistent"))
-  }
 }

@@ -237,7 +237,7 @@ class IncrementalSpec extends AnyFunSuite {
     * the tech log as "file status orders items note at", each sorted.
     */
   private def endState(root: String): (Seq[String], Seq[String], Seq[String]) = {
-    val fps = Landing.readManifest(spark, s"$root/landing").map(f => f.file -> f.fingerprint).toMap
+    val fps = Landing.readManifest(spark, s"$root/landing").files.map(f => f.file -> f.fingerprint).toMap
     val log = Incremental.readTechLog(spark, s"$root/bronze").sortBy(_.file_name).map { e =>
       assert(e.fingerprint == fps(e.file_name), s"${e.file_name} logged a stale fingerprint")
       s"${e.file_name} ${e.status} ${e.rows_orders} ${e.rows_items} ${e.note} ${e.processed_at}"
@@ -310,46 +310,33 @@ class IncrementalSpec extends AnyFunSuite {
       "fail-fast: an empty ingest must write no landing files")
   }
 
-  /** Delete every file under `dir`, keeping the directory itself. */
-  private def emptyDir(dir: String): Unit =
-    new java.io.File(dir).listFiles().foreach(f => assert(f.delete(), s"could not delete $f"))
-
   test("a corrupt manifest fails the run with a named error, before any ingest") {
-    def corrupt(rewrite: Seq[String] => Seq[String]): String = {
+    // rewrite the manifest's text; the rewritten file no longer matches
+    // its checksum sidecar, which goes too unless `keepCrc`
+    def corrupt(rewrite: String => String, keepCrc: Boolean = false): String = {
       val root = land(Seq((Some(1L), 10L, "1995-03-01"), (Some(2L), 11L, "1996-07-01")),
         Seq((1L, 1), (2L, 1)))
-      val part = new java.io.File(s"$root/landing/_manifest").listFiles()
-        .filter(_.getName.endsWith(".json")).head.toPath
-      val lines = java.nio.file.Files.readAllLines(part).toArray.map(_.toString).toSeq
-      java.nio.file.Files.write(part, rewrite(lines).mkString("\n").getBytes("UTF-8"))
-      // the rewritten part no longer matches its checksum sidecar
-      new java.io.File(part.getParent.toFile, s".${part.getFileName}.crc").delete()
+      val file = java.nio.file.Paths.get(s"$root/landing/_manifest.json")
+      val text = new String(java.nio.file.Files.readAllBytes(file), "UTF-8")
+      java.nio.file.Files.write(file, rewrite(text).getBytes("UTF-8"))
+      if (!keepCrc) new java.io.File(s"$root/landing/._manifest.json.crc").delete()
       root
     }
-    // a line cut off mid-field (a torn write) and a line missing a field
-    val torn = corrupt(ls => ls.init :+ ls.last.take(ls.last.length / 2))
-    val partial = corrupt(ls => ls.map(_.replaceFirst(",\"rows\":\\d+", "")))
-    // an uncommitted manifest write: the directory holds no entry
-    val uncommitted = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
-    emptyDir(s"$uncommitted/landing/_manifest")
-    // missing landing metadata: the manifest directory, or _schemas.json
-    def without(rel: String): String = {
-      val root = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
-      graft.engine.Workdirs.deleteRecursively(new java.io.File(s"$root/landing/$rel"))
-      root
-    }
-    // _schemas.json cut in half: with its checksum sidecar the read fails
-    // the checksum, without it the JSON parse fails
-    def halvedSchemas(keepCrc: Boolean): String = {
-      val root = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
-      val file = java.nio.file.Paths.get(s"$root/landing/_schemas.json")
-      val bytes = java.nio.file.Files.readAllBytes(file)
-      java.nio.file.Files.write(file, bytes.take(bytes.length / 2))
-      if (!keepCrc) new java.io.File(s"$root/landing/._schemas.json.crc").delete()
-      root
-    }
-    for (root <- Seq(torn, partial, uncommitted, without("_manifest"),
-        without("_schemas.json"), halvedSchemas(keepCrc = true), halvedSchemas(keepCrc = false))) {
+    // a file cut off mid-field (a torn write): with its checksum sidecar
+    // the read fails the checksum, without it the JSON parse fails
+    val tornCrc = corrupt(t => t.take(t.length / 2), keepCrc = true)
+    val torn = corrupt(t => t.take(t.length / 2))
+    // an entry missing a field, or with a null one
+    val partial = corrupt(_.replaceFirst(",\"rows\":\\d+", ""))
+    val nullField = corrupt(_.replaceFirst("\"fingerprint\":\"\\w+\"", "\"fingerprint\":null"))
+    // a manifest with no entry
+    val noEntries = corrupt(_.replaceFirst("\"files\":\\[[^\\]]*\\]", "\"files\":[]"))
+    // a landing table the run reads, with no schema
+    val noSchema = corrupt(_.replaceFirst("\"part\":\\{", "\"part_old\":{"))
+    // no manifest at all
+    val missing = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
+    assert(new java.io.File(s"$missing/landing/_manifest.json").delete())
+    for (root <- Seq(tornCrc, torn, partial, nullField, noEntries, noSchema, missing)) {
       val e = intercept[Landing.CorruptManifestException] {
         Incremental.run(spark, s"$root/landing", s"$root/bronze")
       }
@@ -357,6 +344,39 @@ class IncrementalSpec extends AnyFunSuite {
       assert(!new java.io.File(s"$root/bronze").exists(), "nothing may be ingested")
     }
   }
+
+  test("reading the landing manifest starts no Spark job") {
+    val root = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
+    val jobs = TestSpark.jobsDuring(Landing.readManifest(spark, s"$root/landing"))
+    assert(jobs == 0, s"$jobs job(s) started reading the manifest")
+  }
+
+  test("an explode that fails after its data writes leaves no manifest a run would trust") {
+    val src = TestSpark.tmpDir("inc-halfexplode-src")
+    val root = TestSpark.tmpDir("inc-halfexplode-root")
+    writeSource(src)
+    Landing.explode(spark, src, s"$root/landing", periodFmt = "yyyy")
+    Incremental.run(spark, s"$root/landing", s"$root/bronze")
+    def bronzeRows = Seq("orders", "lineitem").map(t => spark.read.parquet(s"$root/bronze/$t").count())
+    val before = bronzeRows
+    // day 2 adds order 5 to the existing 1996 period; its source lacks
+    // the part table, so explode fails after rewriting orders, lineitem
+    // and customer
+    writeSource(src, extraOrder = true)
+    graft.engine.Workdirs.deleteRecursively(new java.io.File(s"$src/part.parquet"))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Landing.explode(spark, src, s"$root/landing", periodFmt = "yyyy")
+    }
+    val e = intercept[Landing.CorruptManifestException] {
+      Incremental.run(spark, s"$root/landing", s"$root/bronze")
+    }
+    assert(e.getMessage.contains(s"$root/landing/_manifest.json"), e.getMessage)
+    assert(bronzeRows == before, "nothing may be appended")
+  }
+
+  /** Delete every file under `dir`, keeping the directory itself. */
+  private def emptyDir(dir: String): Unit =
+    new java.io.File(dir).listFiles().foreach(f => assert(f.delete(), s"could not delete $f"))
 
   test("a tech log with no entry, a missing column or a changed column type fails readTechLog") {
     def logged(change: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
