@@ -96,7 +96,7 @@ object ScaleData {
     val spark = Session.local()
 
     def src(t: String): DataFrame =
-      spark.read.parquet(s"$srcDir/$t.parquet")
+      graft.engine.Tables.load(spark, srcDir, t)
 
     // one stride per (table, key): max+1 in the SOURCE, so shifted
     // replica ranges are disjoint and FK targets line up across tables

@@ -159,8 +159,7 @@ object Gold {
           .withColumn("order_period",
             date_format(col("order_purchase_timestamp"), grain))
         // each write returns the schema its frame was written with (the
-        // dims' source reads run inside their futures, so their
-        // schema-inference jobs overlap too)
+        // dims' source reads run inside their futures)
         def write(table: String, df: => DataFrame,
                   save: (DataFrame, String) => Unit = _.write.mode("overwrite").parquet(_)) =
           Future { val d = df; save(d, s"$dir/$table"); table -> d.schema }

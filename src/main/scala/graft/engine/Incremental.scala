@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -173,9 +173,12 @@ object Incremental {
         if (processed(f)) skip(f)
         else {
           val name = f.file.stripSuffix("_full")
-          val df = spark.read.schema(schemas(name)).parquet(s"$landingRoot/$name")
-          val n = df.count()
-          df.write.mode("overwrite").parquet(s"$bronzeRoot/$name") // full REPLACE
+          // the row count rides the write as an observed metric
+          val rows = Observation(f.file)
+          spark.read.schema(schemas(name)).parquet(s"$landingRoot/$name")
+            .observe(rows, count(lit(1)).as("rows"))
+            .write.mode("overwrite").parquet(s"$bronzeRoot/$name") // full REPLACE
+          val n = rows.get("rows").asInstanceOf[Long]
           LogEntry(f.file, f.fingerprint, runTs, "OK", n, 0L, s"OK: replaced $n")
         }
       }

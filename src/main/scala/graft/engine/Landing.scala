@@ -3,7 +3,7 @@ package graft.engine
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import scala.util.control.NonFatal
@@ -96,29 +96,26 @@ object Landing {
         col("l_orderkey") === col("__ok"), "left")
       .drop("__ok")
     Gold.saltedPartitionedWrite(items, "period", col("l_orderkey"), s"$landingRoot/lineitem")
-    val dims = Seq("customer" -> "c_custkey", "part" -> "p_partkey").map {
+    // each dim is fingerprinted by its own write, as an observed metric:
+    // the same aggregate over the same rows, without a second pass
+    val (dimSchemas, dimFps) = Seq("customer" -> "c_custkey", "part" -> "p_partkey").map {
       case (name, key) =>
         val dim = Tables.load(spark, sfDir, name)
-        dim.write.mode("overwrite").parquet(s"$landingRoot/$name")
-        (name, key, dim)
-    }
+        val fp = Observation(s"${name}_full")
+        dim.observe(fp, fingerprintAgg(key, dim.columns.toSeq).as("fp"), count(lit(1)).as("rows"))
+          .write.mode("overwrite").parquet(s"$landingRoot/$name")
+        val r = fp.get
+        (name -> dim.schema,
+          LandingFile(s"${name}_full", r("fp").asInstanceOf[String], r("rows").asInstanceOf[Long]))
+    }.unzip
 
     val orderCols = orders.columns.filterNot(_ == "period").toSeq
     val orderFps = orders.groupBy(col("period"))
       .agg(fingerprintAgg("o_orderkey", orderCols).as("fp"), count(lit(1)).as("rows"))
       .collect()
       .map(r => LandingFile(s"orders_${r.getString(0)}", r.getString(1), r.getLong(2)))
-    // fingerprinted from the frame just written, not a read-back of it:
-    // the same rows and types, without a schema-inference job
-    val dimFps = dims.map { case (name, key, dim) =>
-      val r = dim
-        .agg(fingerprintAgg(key, dim.columns.toSeq).as("fp"), count(lit(1)).as("rows"))
-        .collect()(0)
-      LandingFile(s"${name}_full", r.getString(0), r.getLong(1))
-    }
     val manifest = Manifest((orderFps.toSeq ++ dimFps).sortBy(_.file),
-      (Seq("orders" -> orders.schema, "lineitem" -> items.schema) ++
-        dims.map { case (name, _, dim) => name -> dim.schema }).toMap)
+      (Seq("orders" -> orders.schema, "lineitem" -> items.schema) ++ dimSchemas).toMap)
     writeManifest(spark, landingRoot, manifest)
     manifest.files
   }

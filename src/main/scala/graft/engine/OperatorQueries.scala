@@ -446,7 +446,7 @@ object OperatorQueries {
           |                  price
           |           FROM fact_sales)
           |SELECT period,
-          |       CAST(round(sum(CAST(price AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
+          |       CAST(round(sum(price), 2) AS DOUBLE) AS revenue
           |FROM t GROUP BY 1 ORDER BY 1;
           |```""".stripMargin
       Sql.runSelect(s, llmResponse).get

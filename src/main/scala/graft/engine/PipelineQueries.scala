@@ -65,14 +65,14 @@ object PipelineQueries {
     // idempotent rerun, tech-log upsert + S11 note repair
     "p01_incremental_runs" -> ((s, d) => {
       val root = ensureDemo(s, d)
-      s.read.parquet(s"$root/summary").orderBy("file_name")
+      Tables.parquet(s, s"$root/summary").orderBy("file_name")
     }),
 
     // post-append bronze content: every order exactly once (J5 proof)
     "p02_incremental_bronze" -> ((s, d) => {
       val root = ensureDemo(s, d)
       val cols = Tables.orders(s, d).columns.map(col).toIndexedSeq
-      s.read.parquet(s"$root/bronze/orders").select(cols: _*).orderBy("o_orderkey")
+      Tables.parquet(s, s"$root/bronze/orders").select(cols: _*).orderBy("o_orderkey")
     }),
 
     // S1/S2/P10: CSV write → explicit-schema PERMISSIVE read round trip
@@ -174,7 +174,7 @@ object PipelineQueries {
 
     // S4: glob parquet scan (reference test.py:7 read_parquet('..._*.parquet'))
     "o31_glob_scan" -> ((s, d) =>
-      s.read.parquet(s"$d/order*.parquet")
+      Tables.parquet(s, s"$d/order*.parquet")
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("cnt"))
         .orderBy("o_orderstatus")),

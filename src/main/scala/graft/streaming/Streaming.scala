@@ -87,7 +87,7 @@ object Streaming {
       }
     } + "/events"
     graft.engine.Tables.eventTs(
-      spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir))
+      spark.readStream.schema(graft.engine.Tables.parquet(spark, dir).schema).parquet(dir))
   }
 
   /** Watermarked hourly tumbling-window aggregation — the streaming twin
@@ -302,8 +302,7 @@ object Streaming {
   def ingestOrders(spark: SparkSession, landingOrders: String,
                    bronzeOrders: String, checkpoint: String,
                    maxFilesPerTrigger: Int = 2): Unit = withStateStoreRestoreWarnSilenced {
-    val schema = spark.read.option("basePath", landingOrders)
-      .parquet(landingOrders).schema
+    val schema = graft.engine.Tables.parquet(spark, landingOrders).schema
     val src = spark.readStream
       .schema(schema)
       .option("basePath", landingOrders)
@@ -314,7 +313,7 @@ object Streaming {
         val fresh = batch.dropDuplicates("o_orderkey")
         val toAppend =
           if (graft.engine.Workdirs.exists(spark, bronzeOrders)) {
-            val existing = spark.read.parquet(bronzeOrders).select("o_orderkey")
+            val existing = graft.engine.Tables.parquet(spark, bronzeOrders).select("o_orderkey")
             fresh.join(existing, Seq("o_orderkey"), "left_anti")
           } else fresh
         toAppend.write.mode("append").parquet(bronzeOrders): Unit

@@ -124,7 +124,7 @@ object StreamingQueries {
           ev.unionByName(sentinels).write.parquet(s"$root/sessions_src")
         }
       val dir = s"$root/sessions_src"
-      val schema = s.read.parquet(dir).schema
+      val schema = graft.engine.Tables.parquet(s, dir).schema
       val stream = s.readStream.schema(schema).parquet(dir)
         .select(col("user_id"), col("ts")).as[Streaming.Event]
       val sink = s"graft_s05_sink_${counter.incrementAndGet()}"
@@ -189,7 +189,7 @@ object StreamingQueries {
           new org.apache.hadoop.fs.Path(s"$srcDir/$as"), false, true, conf): Unit
       }
       def run(): DataFrame = {
-        val schema = s.read.parquet(s"$root/ontime").schema
+        val schema = graft.engine.Tables.parquet(s, s"$root/ontime").schema
         val stream = s.readStream.schema(schema).parquet(srcDir.toString)
           .select(col("event_id"), col("ts").cast("timestamp").as("ts"))
         val sink = s"graft_s06_sink_${counter.incrementAndGet()}"
@@ -238,7 +238,7 @@ object StreamingQueries {
             s, s"$root/landing/orders", s"$root/bronze_orders", s"$root/ckpt")
         }
       val cols = graft.engine.Tables.orders(s, d).columns.map(col).toIndexedSeq
-      s.read.parquet(s"$root/bronze_orders").select(cols: _*).orderBy("o_orderkey")
+      graft.engine.Tables.parquet(s, s"$root/bronze_orders").select(cols: _*).orderBy("o_orderkey")
     })
   )
 

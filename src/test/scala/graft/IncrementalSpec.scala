@@ -351,6 +351,22 @@ class IncrementalSpec extends AnyFunSuite {
     assert(jobs == 0, s"$jobs job(s) started reading the manifest")
   }
 
+  test("dim fingerprints and REPLACE counts ride their writes with unchanged values") {
+    val src = TestSpark.tmpDir("inc-observe-src")
+    val root = TestSpark.tmpDir("inc-observe-root")
+    writeSource(src)
+    Landing.explode(spark, src, s"$root/landing", periodFmt = "yyyy")
+    // the entries a separate aggregation over each written dim gave for
+    // this source, before the fingerprints became observed metrics
+    val dims = Seq(
+      Landing.LandingFile("customer_full", "ec12205575e1e684463e1895dd5f155d", 3L),
+      Landing.LandingFile("part_full", "1dae9625fe429145e25362aab43dd229", 3L))
+    assert(Landing.readManifest(spark, s"$root/landing").files.filter(_.file.endsWith("_full")) == dims)
+    val replaced = Incremental.run(spark, s"$root/landing", s"$root/bronze")
+      .filter(_.file_name.endsWith("_full")).map(e => (e.file_name, e.status, e.rows_orders, e.note))
+    assert(replaced == dims.map(f => (f.file, "OK", f.rows, s"OK: replaced ${f.rows}")))
+  }
+
   test("an explode that fails after its data writes leaves no manifest a run would trust") {
     val src = TestSpark.tmpDir("inc-halfexplode-src")
     val root = TestSpark.tmpDir("inc-halfexplode-root")
