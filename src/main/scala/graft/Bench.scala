@@ -1,6 +1,9 @@
 package graft
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.MissingNode
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: every registry query against SPARK_GRAFT_SF_DIR,
   * one JSON line to stdout + bench_out.json.
@@ -140,23 +143,19 @@ object Bench {
       stealShare = (after.stealTicks - before.stealTicks) / ticks)
   }
 
+  /** A committed bench JSON as a tree; a missing node when it is not JSON. */
+  private def baselineTree(json: String): JsonNode =
+    scala.util.Try(Json.parse[JsonNode](json)).getOrElse(MissingNode.getInstance)
+
   /** Extract the per-query map (and the sf basename, if recorded) from
-    * a committed bench JSON (bench_out.json format). Hand-rolled on
-    * purpose: values are flat numbers, so the queries object ends at
-    * the first '}' after its opening brace; no JSON library in the
-    * dependency budget.
+    * a committed bench JSON; entries whose time is not a number are
+    * dropped.
     */
   def parseBaseline(json: String): (Map[String, Double], Option[String]) = {
-    val qKey = "\"queries\":{"
-    val qStart = json.indexOf(qKey)
-    val queries: Map[String, Double] =
-      if (qStart < 0) Map.empty
-      else {
-        val body = json.substring(qStart + qKey.length, json.indexOf('}', qStart + qKey.length).max(qStart + qKey.length))
-        val entry = "\"([^\"]+)\":([-+0-9.eE]+)".r
-        entry.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    val sf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(json).map(_.group(1).split('/').last)
+    val tree = baselineTree(json)
+    val queries = tree.path("queries").properties.asScala
+      .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap
+    val sf = Some(tree.path("sf")).filter(_.isTextual).map(_.asText.split('/').last)
     (queries, sf)
   }
 
@@ -164,7 +163,7 @@ object Bench {
     * `cpus`); None when it was not recorded.
     */
   def baselineCpus(json: String): Option[Int] =
-    "\"cpus\":(\\d+)".r.findFirstMatchIn(json).map(_.group(1).toInt)
+    Some(baselineTree(json).path("cpus")).filter(_.isInt).map(_.asInt)
 
   /** Why the history signal must abstain against a baseline, if it must.
     * Per-query ratios measure pollution only against a baseline recorded

@@ -1,15 +1,23 @@
 package graft
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Extra args
   * restrict the dump to the named queries (the sf1 spot-check runs the
   * heaviest ten, not the whole registry). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val outDir = args(1)
-    val only = args.drop(2).toSet
     val spark = Session.local()
+    dump(spark, args(0), args(1), args.drop(2).toSet)
+    spark.stop()
+  }
+
+  /** Write each registry query of sfDir (only those named in `only`,
+    * when it is not empty) as parquet under `outDir/<name>`, and every
+    * oracle SQL as `outDir/oracle_sql.json`. A query that fails is
+    * reported on stderr and left out of the dump, so `dev/check_oracle.py`
+    * passes one query fewer.
+    */
+  def dump(spark: org.apache.spark.sql.SparkSession, sfDir: String, outDir: String,
+           only: Set[String]): Unit = {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -20,13 +28,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // full JSON string escaping (graft.Json) — a tab or CR in
-    // builder-authored SQL would otherwise make the driver's json.load
-    // fail and silently zero the round's correctness
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Json.write(spark, s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
   }
 }

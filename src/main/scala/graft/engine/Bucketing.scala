@@ -31,9 +31,6 @@ object Bucketing {
       .saveAsTable(table)
   }
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** Bucket-aligned fact and customer-dim tables for an sfDir; returns
     * the (fact, dim) table names. Memoized per (JVM, sfDir, buckets) —
     * registry queries and suites can call it freely without re-paying
@@ -42,7 +39,7 @@ object Bucketing {
     */
   def bucketedStar(spark: SparkSession, sfDir: String,
                    buckets: Int = 8): (String, String) =
-    built.computeIfAbsent(s"$sfDir|$buckets", _ => {
+    Workdirs.memoOnce(s"bucketed-star-$buckets", sfDir) { _ =>
       val k = Workdirs.key(sfDir).replace('.', '_')
       val factTable = s"fact_sales_bkt_${k}_$buckets"
       val dimTable = s"dim_customers_bkt_${k}_$buckets"
@@ -51,5 +48,5 @@ object Bucketing {
         Gold.dimCustomer(spark, sfDir).withColumnRenamed("c_custkey", "customer_id"),
         dimTable, "customer_id", buckets)
       (factTable, dimTable)
-    })
+    }
 }

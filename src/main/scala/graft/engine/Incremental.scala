@@ -1,6 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
+import graft.Json
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -22,7 +23,8 @@ import scala.util.control.NonFatal
   *    dropped by the anti-join, by design (asserted in IncrementalSpec)
   *  - changed dims ⇒ full REPLACE (`:199-219`)
   *  - queryable tech log with upsert semantics (S9, `:144-155`) and the
-  *    SQL-UPDATE note repair (S11, `scripts/normalize_tech_log.py:4-11`)
+  *    SQL-UPDATE note repair (S11, `scripts/normalize_tech_log.py:4-11`);
+  *    the log is one driver-side JSON file, like the landing manifest
   *
   * One pass per run, not per file: the reference loops over its month
   * files; here every new landing file of a run (one landing `period`
@@ -33,12 +35,13 @@ import scala.util.control.NonFatal
   *
   * Every read declares the schema its table was written with: landing
   * and bronze tables the one [[Landing.explode]] recorded in the
-  * manifest (bronze holds landing rows), `_stage` the staged frame's own
-  * and the tech log [[LogEntry]]'s; the manifest is parsed on the
-  * driver. So a run
-  * starts no schema-inference job, a landing `period` reads back as the
-  * manifest's string, and a file that lost a column or changed a type
-  * fails the read or throws a named error instead of being ingested.
+  * manifest (bronze holds landing rows), `_stage` the staged frame's
+  * own; the manifest and the tech log are parsed on the driver by the
+  * strict codec. So a run starts no schema-inference job, a landing
+  * `period` reads back as the manifest's string, and a file that lost a
+  * column or changed a type fails the read or throws a named error
+  * instead of being ingested. A run whose every file is SKIPped starts
+  * no Spark job at all.
   *
   * Scale posture: every data move is a distributed anti/semi-join shuffle
   * on the natural key + a parquet append; the only driver-side state is
@@ -72,46 +75,37 @@ object Incremental {
 
   /** Missing log ⇒ first run ⇒ empty. Any other failure throws
     * [[CorruptTechLogException]] — silently treating corruption as "no
-    * log yet" would let a rerun rewrite every entry's counts to 0:
-    *  - a read that fails (a truncated file, or a column whose type
-    *    changed: the log is read with [[LogEntry]]'s schema, not an
-    *    inferred one), with the read's error as the cause;
-    *  - an entry with a null field (a missing column reads as nulls;
-    *    every written entry has every field);
-    *  - a log directory with no entries: the engine never writes an
-    *    empty log, and an overwrite torn after Spark deleted the old
-    *    files leaves exactly that.
+    * log yet" would let a rerun rewrite every entry's counts to 0. The
+    * strict codec ([[graft.Json]]) fails, with its error as the cause, a
+    * truncated or empty file, an entry with a missing or null field, a
+    * field of the wrong type (a count stored as a string) and a
+    * directory at the path (the parquet log older engines wrote); a log
+    * with no entry fails too, since the engine never writes one.
     */
   def readTechLog(spark: SparkSession, bronzeRoot: String): Seq[LogEntry] = {
     val path = techLogPath(bronzeRoot)
     if (!Workdirs.exists(spark, path)) Nil
     else {
-      val rows = try spark.read.schema(Encoders.product[LogEntry].schema).parquet(path).collect()
+      val entries = try Json.read[Array[LogEntry]](spark, path).toSeq
         catch { case NonFatal(e) => throw new CorruptTechLogException(path, s"unreadable: ${e.getMessage}", e) }
-      if (rows.isEmpty) throw new CorruptTechLogException(path, "no entries")
-      rows.toSeq.map { r =>
-        if (r.anyNull) throw new CorruptTechLogException(path, s"incomplete entry $r")
-        LogEntry(r.getString(0), r.getString(1), r.getTimestamp(2), r.getString(3),
-          r.getLong(4), r.getLong(5), r.getString(6))
-      }
+      if (entries.isEmpty || entries.contains(null)) throw new CorruptTechLogException(path, "no entries, or a null one")
+      entries
     }
   }
 
-  /** The tech log cannot be read (a truncated file, a changed column
-    * type), its directory holds no entry, or an entry lacks a field.
+  /** The tech log cannot be read or parsed, holds no entry, or an entry
+    * lacks a field or has one of the wrong type.
     */
   final class CorruptTechLogException(path: String, detail: String, cause: Throwable = null)
     extends IllegalStateException(s"corrupt tech log $path: $detail", cause)
 
   /** Upsert-by-rewrite of the (tiny, file-count-bounded) tech log — the
-    * parquet stand-in for the reference's `ON CONFLICT DO UPDATE`.
+    * JSON-file stand-in for the reference's `ON CONFLICT DO UPDATE`. It
+    * stays queryable (S9): `spark.read.schema(<LogEntry schema>).json(path)`.
     */
   def writeTechLog(spark: SparkSession, bronzeRoot: String,
-                   entries: Seq[LogEntry]): Unit = {
-    import spark.implicits._
-    entries.sortBy(_.file_name).toDF().coalesce(1)
-      .write.mode("overwrite").parquet(techLogPath(bronzeRoot))
-  }
+                   entries: Seq[LogEntry]): Unit =
+    Json.write(spark, techLogPath(bronzeRoot), entries.sortBy(_.file_name))
 
   /** S11: repair SKIP notes exactly like
     * `scripts/normalize_tech_log.py:4-11` — read → conditional update →

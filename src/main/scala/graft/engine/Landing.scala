@@ -1,8 +1,7 @@
 package graft.engine
 
-import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
-import com.fasterxml.jackson.databind.json.JsonMapper
-import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import com.fasterxml.jackson.databind.JsonNode
+import graft.Json
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -25,7 +24,8 @@ import scala.util.control.NonFatal
   * territory, not order-append territory.
   *
   * The manifest is one JSON file, `_manifest.json`, written and read on
-  * the driver. Besides the fingerprints it records the schema each
+  * the driver through the engine's one codec ([[graft.Json]]), like the
+  * tech log. Besides the fingerprints it records the schema each
   * landing table was written with; [[Incremental.run]] reads landing and
   * bronze with it instead of inferring it (one Spark job per inferred
   * read).
@@ -131,20 +131,14 @@ object Landing {
     */
   private final case class Stored(files: Seq[LandingFile], schemas: Map[String, JsonNode])
 
-  // a missing or null field fails the parse instead of reading as 0 or null
-  private val json = JsonMapper.builder().addModule(DefaultScalaModule)
-    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES,
-      DeserializationFeature.FAIL_ON_NULL_CREATOR_PROPERTIES)
-    .build()
-
   private def manifestPath(landingRoot: String): String = s"$landingRoot/_manifest.json"
 
   /** The manifest as one JSON file (S12, the reference's `_manifest.json`),
     * written on the driver: no Spark job.
     */
   private def writeManifest(spark: SparkSession, landingRoot: String, m: Manifest): Unit =
-    Workdirs.writeString(spark, manifestPath(landingRoot), json.writeValueAsString(
-      Stored(m.files, m.schemas.map { case (name, schema) => name -> json.readTree(schema.json) })))
+    Json.write(spark, manifestPath(landingRoot),
+      Stored(m.files, m.schemas.map { case (name, schema) => name -> Json.parse[JsonNode](schema.json) }))
 
   /** The manifest, read and parsed on the driver: no Spark job. A missing
     * or unparsable file, a missing or null field, a manifest with no entry
@@ -157,7 +151,7 @@ object Landing {
     val path = manifestPath(landingRoot)
     val m =
       try {
-        val stored = json.readValue(Workdirs.readString(spark, path), classOf[Stored])
+        val stored = Json.read[Stored](spark, path)
         Manifest(stored.files.sortBy(_.file), stored.schemas.map { case (name, schema) =>
           name -> DataType.fromJson(schema.toString).asInstanceOf[StructType] })
       } catch { case NonFatal(e) => throw new CorruptManifestException(path, s"unreadable: ${e.getMessage}", e) }

@@ -25,9 +25,9 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Medallion {
 
-  /** Silver orders: explicit typing + not-null key + status domain.
-    * Mirrors reference `etl/tasks/silver.py:29-44` (cast TIMESTAMP, drop
-    * null order_id) and the Pandera status domain (`silver.py:8-11`).
+  /** Silver orders: explicit typing + the null-key drop of reference
+    * `etl/tasks/silver.py:29-44`. A bad row it keeps fails the Pandera
+    * gate, [[Quality.orderChecks]] (`silver.py:8-19`), not vanishes.
     */
   def silverOrders(orders: DataFrame): DataFrame =
     orders
@@ -38,13 +38,10 @@ object Medallion {
         col("o_totalprice").cast("double"),
         col("o_orderdate").cast("timestamp"),
         col("o_orderpriority").cast("string"))
-      .filter(col("o_orderkey").isNotNull && col("o_custkey").isNotNull)
-      .filter(col("o_orderstatus").isin("F", "P", "O"))
+      .filter(col("o_orderkey").isNotNull)
 
-  /** Silver lineitem: double casts + not-null keys + non-negative price.
-    * Mirrors reference `etl/tasks/silver.py:47-58` (CAST price/freight AS
-    * DOUBLE, null-key filter) and the `price >= 0` Pandera check
-    * (`silver.py:16-17`).
+  /** Silver lineitem: double casts + the null-key drop of reference
+    * `etl/tasks/silver.py:47-58`; [[Quality.lineitemChecks]] gates the rest.
     */
   def silverLineitem(lineitem: DataFrame): DataFrame =
     lineitem
@@ -59,8 +56,7 @@ object Medallion {
         col("l_tax").cast("double"),
         col("l_returnflag").cast("string"),
         col("l_shipdate").cast("timestamp"))
-      .filter(col("l_orderkey").isNotNull && col("l_partkey").isNotNull)
-      .filter(col("l_extendedprice") >= 0)
+      .filter(col("l_orderkey").isNotNull)
 
   /** Gold customer dimension: customer enriched with nation/region names —
     * the analog of `dim_customers(customer_id, city, state)`

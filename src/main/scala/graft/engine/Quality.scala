@@ -100,13 +100,11 @@ object Quality {
       (if (checks.contains(NonEmpty) && n("__rows") == 0) Seq(Violation(NonEmpty.name, 1)) else Nil)
   }
 
-  /** The silver-orders contract (`silver.py:8-18` analog). */
+  /** The silver-orders contract (`silver.py:8-18` analog) on the rows silver keeps. */
   val orderChecks: Seq[Check] = Seq(
-    NonEmpty, NotNull("o_orderkey"), NotNull("o_custkey"),
-    InSet("o_orderstatus", Seq("F", "P", "O")))
+    NonEmpty, NotNull("o_custkey"), InSet("o_orderstatus", Seq("F", "P", "O")))
 
-  /** The silver-lineitem contract (`silver.py:15-18` analog). */
+  /** The silver-lineitem contract (`silver.py:15-18` analog) on the rows silver keeps. */
   val lineitemChecks: Seq[Check] = Seq(
-    NonEmpty, NotNull("l_orderkey"), NotNull("l_partkey"),
-    NonNegative("l_extendedprice"))
+    NonEmpty, NotNull("l_partkey"), NonNegative("l_extendedprice"))
 }

@@ -26,35 +26,23 @@ object Workdirs {
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true): Unit
   }
 
-  /** Write `text` as the whole content of the file at `path`. */
-  def writeString(spark: SparkSession, path: String, text: String): Unit = {
-    val p = new Path(path)
-    val out = p.getFileSystem(spark.sessionState.newHadoopConf()).create(p, true)
-    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  /** `value` runs `build` once, under this cell's lock; a throw leaves it unset. */
+  private final class Once(build: () => Any) { lazy val value: Any = build() }
 
-  /** The whole content of the file at `path`. */
-  def readString(spark: SparkSession, path: String): String = {
-    val p = new Path(path)
-    val in = p.getFileSystem(spark.sessionState.newHadoopConf()).open(p)
-    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
-  private val done = new java.util.concurrent.ConcurrentHashMap[String, Any]()
+  private val done = new java.util.concurrent.ConcurrentHashMap[String, Once]()
 
   /** Filesystem-safe key for an sfDir. */
   def key(sfDir: String): String =
     sfDir.replaceAll("[^A-Za-z0-9.]+", "_").dropWhile(_ == '_')
 
   /** Run `build` at most once per (JVM, kind, sfDir) on the work dir
-    * `target/<kind>/<key>`; returns what that one run returned.
+    * `target/<kind>/<key>`; returns what that one run returned. A build
+    * may call memoOnce itself: each build holds only its own cell's lock.
     */
   def memoOnce[A](kind: String, sfDir: String)(build: String => A): A =
-    done.computeIfAbsent(s"$kind|$sfDir", _ =>
-      build(new java.io.File(s"target/$kind/${key(sfDir)}").getAbsolutePath))
-      .asInstanceOf[A]
+    done.computeIfAbsent(s"$kind|$sfDir", _ => new Once(() =>
+      build(new java.io.File(s"target/$kind/${key(sfDir)}").getAbsolutePath)))
+      .value.asInstanceOf[A]
 
   /** [[memoOnce]] for a build that only writes; returns the work dir. */
   def materializeOnce(kind: String, sfDir: String)(build: String => Unit): String =

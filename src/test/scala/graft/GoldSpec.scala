@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.{col, date_format, round, sum}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, date_format, lit, min, round, sum, when}
 import graft.engine.{Analytics, Gold, Quality}
 
 /** The salted partitioned-write contract (used by the gold fact and both
@@ -96,6 +97,33 @@ class GoldSpec extends AnyFunSuite {
     assert(e.getMessage.contains("non_empty=1"), e.getMessage)
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.isEmpty, s"gate failure left ${added.size} cached RDD(s)")
+  }
+
+  test("the silver gate fails on a bad row that silver keeps, naming its check") {
+    // silver drops only a null order key (silver.py:42,58); a status out
+    // of its domain, a null customer or a negative price reaches the
+    // gate and fails the build instead of vanishing
+    val src = "/root/testdata/sf0.001"
+    val orders = spark.read.parquet(s"$src/orders.parquet")
+    val items = spark.read.parquet(s"$src/lineitem.parquet")
+    val k = orders.agg(min("o_orderkey")).head().get(0)
+    val item = items.orderBy("l_orderkey", "l_linenumber").head()
+    def bad(df: DataFrame, c: String, at: Column, v: Column) =
+      df.withColumn(c, when(at, v).otherwise(col(c)))
+    val firstOrder = col("o_orderkey") === k
+    val cases = Seq(
+      "in_set(o_orderstatus)=1" -> (bad(orders, "o_orderstatus", firstOrder, lit("X")), items),
+      "not_null(o_custkey)=1" -> (bad(orders, "o_custkey", firstOrder, lit(null)), items),
+      "non_negative(l_extendedprice)=1" -> (orders, bad(items, "l_extendedprice",
+        col("l_orderkey") === item.getAs[Any]("l_orderkey") &&
+          col("l_linenumber") === item.getAs[Any]("l_linenumber"), -col("l_extendedprice"))))
+    for ((check, (o, l)) <- cases) {
+      val sf = TestSpark.tmpDir("gold-bad-row")
+      o.write.parquet(s"$sf/orders.parquet")
+      l.write.parquet(s"$sf/lineitem.parquet")
+      val e = intercept[Quality.QualityGateException](Gold.ensure(spark, sf))
+      assert(e.getMessage == s"quality gate failed: $check", e.getMessage)
+    }
   }
 
   private val dashboard = Seq("a01_kpis", "a02_top_categories", "a03_orders_by_state",

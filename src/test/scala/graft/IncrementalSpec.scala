@@ -81,9 +81,14 @@ class IncrementalSpec extends AnyFunSuite {
 
     // tech log: upserted per file; note repair (S11) rewrites SKIP notes
     Incremental.normalizeTechLog(spark, s"$root/bronze")
-    val log = Incremental.readTechLog(spark, s"$root/bronze").map(e => e.file_name -> e).toMap
+    val entries = Incremental.readTechLog(spark, s"$root/bronze")
+    val log = entries.map(e => e.file_name -> e).toMap
     assert(log("orders_1995").note == "unchanged")
     assert(log("orders_1996").note.startsWith("OK:"))
+    // the log stays queryable (S9): Spark's JSON reader returns its entries
+    val queried = spark.read.schema(org.apache.spark.sql.Encoders.product[Incremental.LogEntry].schema)
+      .json(s"$root/bronze/tech/processed_files").as[Incremental.LogEntry].collect().toSeq
+    assert(queried == entries)
   }
 
   test("monthly-grain landing produces the same bronze as yearly-grain") {
@@ -209,6 +214,9 @@ class IncrementalSpec extends AnyFunSuite {
     val (monthCold, monthRerun) = jobs("yyyy-MM")
     assert(yearCold == monthCold, s"cold run: $yearCold jobs for 2 files, $monthCold for 4")
     assert(yearRerun == monthRerun, s"rerun: $yearRerun jobs for 2 files, $monthRerun for 4")
+    // an all-SKIP rerun reads the manifest and the tech log and rewrites
+    // the log, all on the driver: readTechLog and writeTechLog start none
+    assert(yearRerun == 0, s"an all-SKIP rerun started $yearRerun job(s)")
   }
 
   /** Land (key, custkey, date) orders and (key, linenumber) items at the
@@ -390,54 +398,54 @@ class IncrementalSpec extends AnyFunSuite {
     assert(bronzeRows == before, "nothing may be appended")
   }
 
-  /** Delete every file under `dir`, keeping the directory itself. */
-  private def emptyDir(dir: String): Unit =
-    new java.io.File(dir).listFiles().foreach(f => assert(f.delete(), s"could not delete $f"))
+  /** Rewrite the tech log's text after one run; the rewritten file no
+    * longer matches its checksum sidecar, which goes too. Returns the
+    * pipeline root.
+    */
+  private def rewriteLog(rewrite: String => String): String = {
+    val root = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
+    Incremental.run(spark, s"$root/landing", s"$root/bronze")
+    val file = java.nio.file.Paths.get(s"$root/bronze/tech/processed_files")
+    val text = new String(java.nio.file.Files.readAllBytes(file), "UTF-8")
+    java.nio.file.Files.write(file, rewrite(text).getBytes("UTF-8"))
+    assert(new java.io.File(s"$root/bronze/tech/.processed_files.crc").delete())
+    root
+  }
+
+  /** readTechLog and a run over `root` both throw the named error, naming
+    * the log; returns readTechLog's.
+    */
+  private def corruptLog(root: String): Incremental.CorruptTechLogException = {
+    val e = intercept[Incremental.CorruptTechLogException](
+      Incremental.readTechLog(spark, s"$root/bronze"))
+    assert(e.getMessage.contains(s"$root/bronze/tech/processed_files"), e.getMessage)
+    intercept[Incremental.CorruptTechLogException](
+      Incremental.run(spark, s"$root/landing", s"$root/bronze"))
+    e
+  }
 
   test("a tech log with no entry, a missing column or a changed column type fails readTechLog") {
-    def logged(change: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
-      val root = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
-      Incremental.run(spark, s"$root/landing", s"$root/bronze")
-      val path = s"$root/bronze/tech/processed_files"
-      val log = change(spark.read.parquet(path))
-      spark.createDataFrame(java.util.Arrays.asList(log.collect(): _*), log.schema)
-        .coalesce(1).write.mode("overwrite").parquet(path)
-      s"$root/bronze"
-    }
-    // an overwrite torn after Spark deleted the old files: the log
-    // directory holds no data file, or one empty file
-    for (leave <- Seq("nothing", "an empty file")) {
-      val root = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
-      Incremental.run(spark, s"$root/landing", s"$root/bronze")
-      val path = s"$root/bronze/tech/processed_files"
-      if (leave == "nothing") emptyDir(path)
-      else Incremental.writeTechLog(spark, s"$root/bronze", Nil)
-      intercept[Incremental.CorruptTechLogException](
-        Incremental.readTechLog(spark, s"$root/bronze"))
-      intercept[Incremental.CorruptTechLogException](
-        Incremental.run(spark, s"$root/landing", s"$root/bronze"))
-    }
-    val noNote = logged(_.drop("note"))
-    intercept[Incremental.CorruptTechLogException](Incremental.readTechLog(spark, noNote))
-    val textCounts = logged(_.withColumn("rows_orders", col("rows_orders").cast("string")))
-    val e = intercept[Incremental.CorruptTechLogException](
-      Incremental.readTechLog(spark, textCounts))
+    // an empty file, and a log with zero entries
+    assert(corruptLog(rewriteLog(_ => "")).getCause != null)
+    assert(corruptLog(rewriteLog(_ => "[]")).getMessage.contains("no entries"))
+    // an entry missing a field, or with a null one
+    assert(corruptLog(rewriteLog(_.replaceFirst(",\"note\":\"[^\"]*\"", ""))).getCause != null)
+    assert(corruptLog(rewriteLog(_.replaceFirst("\"fingerprint\":\"\\w+\"", "\"fingerprint\":null")))
+      .getCause != null)
+    // a count stored as a string is not coerced
+    val e = corruptLog(rewriteLog(_.replaceFirst("\"rows_orders\":(\\d+)", "\"rows_orders\":\"$1\"")))
     assert(e.getMessage.contains("rows_orders"), e.getMessage)
+    // the parquet directory older engines wrote at the same path
+    val old = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
+    Seq(("orders_1995", "OK")).toDF("file_name", "status")
+      .write.parquet(s"$old/bronze/tech/processed_files")
+    assert(corruptLog(old).getCause != null)
+    // no log at all is a first run
+    assert(Incremental.readTechLog(spark, s"$old/no-bronze").isEmpty)
   }
 
   test("a truncated tech log file fails the run with a named error") {
-    val root = land(Seq((Some(1L), 10L, "1995-03-01")), Seq((1L, 1)))
-    Incremental.run(spark, s"$root/landing", s"$root/bronze")
-    val dir = new java.io.File(s"$root/bronze/tech/processed_files")
-    val part = dir.listFiles().filter(_.getName.endsWith(".parquet")).head.toPath
-    val bytes = java.nio.file.Files.readAllBytes(part)
-    java.nio.file.Files.write(part, bytes.take(bytes.length / 2))
-    // the halved file no longer matches its checksum sidecar
-    new java.io.File(dir, s".${part.getFileName}.crc").delete()
-    val e = intercept[Incremental.CorruptTechLogException](
-      Incremental.readTechLog(spark, s"$root/bronze"))
-    assert(e.getCause != null, "the read's own error is attached")
-    intercept[Incremental.CorruptTechLogException](
-      Incremental.run(spark, s"$root/landing", s"$root/bronze"))
+    val root = rewriteLog(t => t.take(t.length / 2))
+    assert(corruptLog(root).getCause != null, "the read's own error is attached")
   }
 }
