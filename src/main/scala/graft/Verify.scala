@@ -18,7 +18,6 @@ object Verify {
     */
   def dump(spark: org.apache.spark.sql.SparkSession, sfDir: String, outDir: String,
            only: Set[String]): Unit = {
-    new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>

@@ -18,11 +18,10 @@ object Bucketing {
                     buckets: Int): Unit = {
     val spark = df.sparkSession
     // a managed-table location left behind by a previous JVM (in-memory
-    // catalog, persistent warehouse dir) blocks CREATE — drop both
+    // catalog, persistent warehouse dir) blocks CREATE — drop both, the
+    // location on the warehouse's own filesystem
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    val warehouse = new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath
-    Workdirs.deleteRecursively(new java.io.File(warehouse, table))
+    Workdirs.delete(spark, s"${spark.conf.get("spark.sql.warehouse.dir")}/$table")
     df.write
       .mode("overwrite")
       .bucketBy(buckets, key)
@@ -38,15 +37,16 @@ object Bucketing {
     * factors in one JVM never clobber each other's buckets.
     */
   def bucketedStar(spark: SparkSession, sfDir: String,
-                   buckets: Int = 8): (String, String) =
-    Workdirs.memoOnce(s"bucketed-star-$buckets", sfDir) { _ =>
-      val k = Workdirs.key(sfDir).replace('.', '_')
-      val factTable = s"fact_sales_bkt_${k}_$buckets"
-      val dimTable = s"dim_customers_bkt_${k}_$buckets"
+                   buckets: Int = 8): (String, String) = {
+    val k = Workdirs.key(sfDir).replace('.', '_')
+    val factTable = s"fact_sales_bkt_${k}_$buckets"
+    val dimTable = s"dim_customers_bkt_${k}_$buckets"
+    Workdirs.materializeOnce(s"bucketed-star-$buckets", sfDir) { _ =>
       writeBucketed(Gold.fact(spark, sfDir), factTable, "customer_id", buckets)
       writeBucketed(
         Gold.dimCustomer(spark, sfDir).withColumnRenamed("c_custkey", "customer_id"),
         dimTable, "customer_id", buckets)
-      (factTable, dimTable)
     }
+    (factTable, dimTable)
+  }
 }

@@ -2,7 +2,6 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Materialized medallion layers (the reference's CTAS persistence —
   * `etl/tasks/silver.py:29-62`, `etl/tasks/gold.py:12-65` — SURVEY §2.1
@@ -35,11 +34,11 @@ import org.apache.spark.sql.types.StructType
   * month-partitioned, 4-way-salted layout is what a corpus with 250k+
   * lineitems per month gets.
   *
-  * Every table is read back with the schema it was written with, kept
-  * next to the layer root in [[ensure]]'s memo: a reader resolves its
-  * relation from that schema and the directory listing, so building a
-  * query over gold starts no Spark job (schema inference is one job per
-  * read).
+  * Every table is read back through [[Tables.parquet]], like the raw
+  * inputs, so building a query over gold starts no Spark job (inference
+  * is one job per read); the fact's `order_period` reads back as Spark's
+  * partition discovery types it (int for a yearly grain), and every
+  * reader projects it away.
   */
 object Gold {
 
@@ -107,19 +106,12 @@ object Gold {
     repart.write.mode("overwrite").partitionBy(partCol).parquet(dir)
   }
 
-  /** What [[ensure]] wrote for an sfDir: the layer root and the schema
-    * each table was written with, by table name.
-    */
-  private final case class Layers(dir: String, schemas: Map[String, StructType])
-
   /** Write silver + gold parquet for sfDir if this JVM hasn't yet; returns
     * the layer root (under the build dir, never the read-only testdata).
     * Thread-safe; runs at most once per (JVM, sfDir).
     */
-  def ensure(spark: SparkSession, sfDir: String): String = layers(spark, sfDir).dir
-
-  private def layers(spark: SparkSession, sfDir: String): Layers =
-    Workdirs.memoOnce("graft-layers", sfDir) { dir =>
+  def ensure(spark: SparkSession, sfDir: String): String =
+    Workdirs.materializeOnce("graft-layers", sfDir) { dir =>
       import scala.concurrent.Future
       import scala.concurrent.ExecutionContext.Implicits.global
       // fail-fast quality gate between bronze and silver (§2.11): one
@@ -158,11 +150,10 @@ object Gold {
         val fact = Medallion.factSales(so, sl)
           .withColumn("order_period",
             date_format(col("order_purchase_timestamp"), grain))
-        // each write returns the schema its frame was written with (the
-        // dims' source reads run inside their futures)
+        // the dims' source reads run inside their futures
         def write(table: String, df: => DataFrame,
                   save: (DataFrame, String) => Unit = _.write.mode("overwrite").parquet(_)) =
-          Future { val d = df; save(d, s"$dir/$table"); table -> d.schema }
+          Future(save(df, s"$dir/$table"))
         // the six layer writes are independent of each other — submit them
         // as concurrent Spark jobs (FIFO-scheduled over the same executor
         // pool) instead of serially leaving the cluster idle between
@@ -182,18 +173,12 @@ object Gold {
         // a retry start a second overwrite of the same paths concurrently
         // with the stragglers of the failed attempt
         Workdirs.settleAll(writes)
-        Layers(dir, writes.map(_.value.get.get).toMap) // all settled and succeeded
       } finally { so.unpersist(); sl.unpersist() }
     }
 
-  /** Gold/silver `table` of sfDir, read with the schema [[ensure]] wrote
-    * it with: no schema-inference job, and a partition column keeps its
-    * written type (a yearly `order_period` stays a string).
-    */
-  private def read(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    val l = layers(spark, sfDir)
-    spark.read.schema(l.schemas(table)).parquet(s"${l.dir}/$table")
-  }
+  /** Gold/silver `table` of sfDir, written first if this JVM has not. */
+  private def read(spark: SparkSession, sfDir: String, table: String): DataFrame =
+    Tables.parquet(spark, s"${ensure(spark, sfDir)}/$table")
 
   def silverOrders(spark: SparkSession, sfDir: String): DataFrame =
     read(spark, sfDir, "silver_orders")

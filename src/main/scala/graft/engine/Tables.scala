@@ -8,9 +8,10 @@ import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.SparkException
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{DataSource, HadoopFsRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet table loaders over a scale-factor directory of the driver
@@ -20,10 +21,11 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * predicate pushdown, and column pruning for free as long as callers keep
   * the plan declarative (select/filter before any wide op).
   *
-  * Every read goes through [[parquet]], which learns the schema from one
-  * file footer on the driver, as the reference's DuckDB `read_parquet`
-  * does, instead of Spark's inference job. The schema still comes from
-  * the file on disk, so a changed input type reaches the caller as it is.
+  * Every read (Gold's layer tables too) goes through [[parquet]], which
+  * learns the schema from one file footer on the driver, as the
+  * reference's DuckDB `read_parquet` does, instead of Spark's inference
+  * job. The schema still comes from the file on disk, so a changed input
+  * type reaches the caller as it is.
   *
   * At 100 TB these would be partitioned table roots (e.g. orders
   * partitioned by month, as the reference's landing zone is —
@@ -37,47 +39,50 @@ object Tables {
 
   /** `spark.read.parquet(path)` for a path whose schema the engine did not
     * record, without the Spark job Spark's schema inference starts (one
-    * per read, even for one file). On the driver it lists `path` and reads
-    * the one footer that inference reads with `mergeSchema` off: a
-    * `_common_metadata`, else a `_metadata` summary, else the first data
-    * file by path. Spark's own converter turns it into the schema, so the
-    * session's parquet flags (`nanosAsLong`, `binaryAsString`, …) apply as
-    * they do to inference. A missing path or an unmatched glob fails with
-    * Spark's `PATH_NOT_FOUND`, a footer that cannot be read with Spark's
-    * `FAILED_READ_FILE.CANNOT_READ_FILE_FOOTER` naming the file. Where
-    * inference would not touch exactly one footer (no data file,
+    * per read, even for one file). It resolves the read's relation once
+    * (Spark's own listing, and `PATH_NOT_FOUND` for a missing path or an
+    * unmatched glob) and reads on the driver the one footer of its files
+    * that inference reads with `mergeSchema` off: a `_common_metadata`,
+    * else a `_metadata` summary, else the first data file by path. Spark's
+    * converter turns it into the relation's data columns, so the session's
+    * parquet flags apply as to inference. An unreadable footer fails with
+    * Spark's `FAILED_READ_FILE.CANNOT_READ_FILE_FOOTER` naming the file.
+    * Where inference would not touch exactly one footer (no data file,
     * `mergeSchema` on, or a corrupt footer under `ignoreCorruptFiles`),
     * Spark infers, and raises its own error.
     */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
-
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
-    val conf = spark.sessionState.conf
-    if (conf.isParquetSchemaMergingEnabled) None
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) spark.read.parquet(path)
     else {
-      // the listing a read makes, with the errors a read raises
-      val files = spark.read.schema(new StructType()).parquet(path).queryExecution.analyzed
-        .collect { case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location }
-        .collect { case i: PartitioningAwareFileIndex => i.allFiles() }.flatten
-        .sortBy(_.getPath.toString)
-      def named(name: String) = files.find(_.getPath.getName == name)
-      val summaries = Set(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
-      named(PARQUET_COMMON_METADATA_FILE).orElse(named(PARQUET_METADATA_FILE))
-        .orElse(files.find(f => !summaries(f.getPath.getName)))
-        .flatMap { file =>
-          val footer =
-            try Some(ParquetFooterReader.readFooter(
-              HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()), SKIP_ROW_GROUPS))
-            catch {
-              case _: RuntimeException | _: IOException if conf.ignoreCorruptFiles => None
-              case e @ (_: RuntimeException | _: IOException) => throw new SparkException(
-                "FAILED_READ_FILE.CANNOT_READ_FILE_FOOTER", Map("path" -> file.getPath.toString), e)
-            }
-          footer.map(f => ParquetFileFormat.readSchemaFromFooter(
-            new Footer(file.getPath, f), new ParquetToSparkSchemaConverter(conf)))
-        }
+      // the relation `spark.read.parquet(path)` resolves, before its data columns
+      val relation = DataSource(spark, "parquet", userSpecifiedSchema = Some(new StructType()),
+        options = Map("path" -> path)).resolveRelation().asInstanceOf[HadoopFsRelation]
+      footerSchema(spark, relation).fold(spark.read.parquet(path))(s =>
+        spark.baseRelationToDataFrame(Bridge.withDataSchema(relation, s)))
     }
+
+  private def footerSchema(spark: SparkSession, relation: HadoopFsRelation): Option[StructType] = {
+    val files = relation.location match {
+      case i: PartitioningAwareFileIndex => i.allFiles().sortBy(_.getPath.toString)
+      case _ => Nil
+    }
+    def named(name: String) = files.find(_.getPath.getName == name)
+    val summaries = Set(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
+    named(PARQUET_COMMON_METADATA_FILE).orElse(named(PARQUET_METADATA_FILE))
+      .orElse(files.find(f => !summaries(f.getPath.getName)))
+      .flatMap { file =>
+        val conf = spark.sessionState.conf
+        val footer =
+          try Some(ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()), SKIP_ROW_GROUPS))
+          catch {
+            case _: RuntimeException | _: IOException if conf.ignoreCorruptFiles => None
+            case e @ (_: RuntimeException | _: IOException) => throw new SparkException(
+              "FAILED_READ_FILE.CANNOT_READ_FILE_FOOTER", Map("path" -> file.getPath.toString), e)
+          }
+        footer.map(f => ParquetFileFormat.readSchemaFromFooter(
+          new Footer(file.getPath, f), new ParquetToSparkSchemaConverter(conf)))
+      }
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

@@ -4,8 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Shared once-per-JVM work-directory materialization: one sanitizer and
-  * one memoize map instead of a copy per module (Gold layers, the
-  * incremental demo, CSV staging, the streaming source dir all use it).
+  * one memo, [[materializeOnce]], instead of a copy per module (Gold
+  * layers, the bucketed star, the incremental demo, CSV staging, the
+  * streaming source dir all use it).
   *
   * Filesystem probes go through the Hadoop [[org.apache.hadoop.fs
   * .FileSystem]] API, never `java.io.File` — paths here are local in the
@@ -26,8 +27,8 @@ object Workdirs {
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true): Unit
   }
 
-  /** `value` runs `build` once, under this cell's lock; a throw leaves it unset. */
-  private final class Once(build: () => Any) { lazy val value: Any = build() }
+  /** `run` runs `build` once, under this cell's lock; a throw leaves it unrun. */
+  private final class Once(build: () => Unit) { lazy val run: Unit = build() }
 
   private val done = new java.util.concurrent.ConcurrentHashMap[String, Once]()
 
@@ -36,18 +37,18 @@ object Workdirs {
     sfDir.replaceAll("[^A-Za-z0-9.]+", "_").dropWhile(_ == '_')
 
   /** Run `build` at most once per (JVM, kind, sfDir) on the work dir
-    * `target/<kind>/<key>`; returns what that one run returned. A build
-    * may call memoOnce itself: each build holds only its own cell's lock.
+    * `target/<kind>/<key>`, and return that dir. A build may call
+    * materializeOnce itself: each build holds only its own cell's lock.
     */
-  def memoOnce[A](kind: String, sfDir: String)(build: String => A): A =
-    done.computeIfAbsent(s"$kind|$sfDir", _ => new Once(() =>
-      build(new java.io.File(s"target/$kind/${key(sfDir)}").getAbsolutePath)))
-      .value.asInstanceOf[A]
+  def materializeOnce(kind: String, sfDir: String)(build: String => Unit): String = {
+    val dir = new java.io.File(s"target/$kind/${key(sfDir)}").getAbsolutePath
+    done.computeIfAbsent(s"$kind|$sfDir", _ => new Once(() => build(dir))).run
+    dir
+  }
 
-  /** [[memoOnce]] for a build that only writes; returns the work dir. */
-  def materializeOnce(kind: String, sfDir: String)(build: String => Unit): String =
-    memoOnce(kind, sfDir) { dir => build(dir); dir }
-
+  /** Local recursive delete, only for `graft.streaming`'s
+    * `Files.createTempDirectory` dirs; any other path takes [[delete]].
+    */
   def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete(): Unit

@@ -5,6 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.SchemaUtils
 
 /** Spark 4 unified the Column API and made the classic
   * Column↔Expression converters `private[sql]`; custom Catalyst
@@ -32,4 +35,10 @@ object Bridge {
     */
   def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `relation` over `dataSchema`, checked and made nullable as a read's is. */
+  def withDataSchema(relation: HadoopFsRelation, dataSchema: StructType): HadoopFsRelation = {
+    SchemaUtils.checkSchemaColumnNameDuplication(dataSchema, relation.sparkSession.sessionState.conf.resolver)
+    relation.copy(dataSchema = dataSchema.asNullable)(relation.sparkSession)
+  }
 }

@@ -133,9 +133,18 @@ class GoldSpec extends AnyFunSuite {
 
   test("building a dashboard query over written gold starts no Spark job") {
     val sf = "/root/testdata/sf0.001"
-    Gold.ensure(spark, sf)
+    val dir = Gold.ensure(spark, sf)
     val jobs = dashboard.map(q => q -> TestSpark.jobsDuring(SparkEntry.queries(q)(spark, sf)))
     assert(jobs.forall(_._2 == 0), s"jobs started while building: $jobs")
+    // each reader's schema is the one Spark infers from the written files
+    // (DECIMAL money, a partitioned fact taken after its projection)
+    for ((table, df) <- Seq("silver_orders" -> Gold.silverOrders(spark, sf),
+        "silver_lineitem" -> Gold.silverLineitem(spark, sf), "fact_sales" -> Gold.fact(spark, sf),
+        "dim_customers" -> Gold.dimCustomer(spark, sf), "dim_products" -> Gold.dimPart(spark, sf),
+        "dim_time" -> Gold.dimDate(spark, sf))) {
+      val inferred = spark.read.parquet(s"$dir/$table").select(df.columns.map(col).toSeq: _*)
+      assert(df.schema == inferred.schema, table)
+    }
   }
 
   test("two sfDirs in one session: each query reads its own gold") {

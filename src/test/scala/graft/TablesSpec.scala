@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.SparkException
+import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -91,6 +92,20 @@ class TablesSpec extends AnyFunSuite {
       val ours = intercept[AnalysisException](Tables.parquet(spark, p))
       val sparks = intercept[AnalysisException](spark.read.parquet(p))
       assert(ours.getCondition == sparks.getCondition && ours.getMessage == sparks.getMessage, p)
+    }
+  }
+
+  test("one read lists its path once") {
+    val dir = TestSpark.tmpDir("tables-listing")
+    Seq((1L, "a", "2024"), (2L, "b", "2024"), (3L, "c", "2025")).toDF("k", "v", "period")
+      .repartition(2).write.partitionBy("period").parquet(s"$dir/byPeriod")
+    // the files a listing keeps: data files, not `_SUCCESS` or checksums
+    def dataFiles(p: String): Long = Files.walk(Paths.get(p)).filter(f => Files.isRegularFile(f) &&
+      !f.getFileName.toString.startsWith("_") && !f.getFileName.toString.startsWith(".")).count()
+    for (p <- Seq(s"${sfDirs(1)}/lineitem.parquet", s"$dir/byPeriod")) {
+      val before = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+      Tables.parquet(spark, p)
+      assert(HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - before == dataFiles(p), p)
     }
   }
 }
